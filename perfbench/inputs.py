@@ -25,17 +25,20 @@ from generative_ner_spark.sources.synth import LABELS2NAMES, SynthConfig
 
 # Input sizes. Every benchmark run is a fresh process that pays JVM start,
 # set-up and a cold run (about 30 s on 4 cores whatever the input size);
-# these sizes keep a whole run near 50 s, so that the 48 runs of a full
-# measurement of two workloads fit in under an hour.
+# these sizes keep a whole run near 40 s, so that the 70 runs of a full
+# measurement of three workloads fit in under an hour.
 KG_DOCS = 2500  # corpus of both kg workloads
 # Share of the corpus's distinct prompts already in the kg_resume checkpoint.
 RESUME_CACHED = 0.75
 
 # Part co-occurrence graph: baskets of 1..7 distinct parts, as TPC-H orders
 # hold line items. The structure is fixed; the seed only relabels ids, so
-# every seed does the same work.
-GRAPH_ORDERS = 3000
-GRAPH_PARTS = 700
+# every seed does the same work. Orders and parts keep sf0.1's 150k:20k
+# ratio, so the average degree is sf0.1's (112 here, 120 there): at
+# 150000 x 20000 this generator gives 20k nodes and 1.196M edges (density
+# 0.6%); at 7500 x 1000 it gives 1000 nodes and 56k edges (density 11%).
+GRAPH_ORDERS = 7500
+GRAPH_PARTS = 1000
 GRAPH_STRUCTURE_SEED = "graph-structure"
 KHOP_SEEDS = 4
 KHOP_K = 2
@@ -53,6 +56,8 @@ _TRIPLES = pa.schema([("subj_id", pa.string()), ("pred", pa.string()),
                       ("span_offset", pa.int32())])
 _ENTITIES = pa.schema([("entity_id", pa.string()), ("name", pa.string()),
                        ("entity_type", pa.string())])
+_CANONICAL = pa.schema([("entity_id", pa.string()),
+                        ("canonical_id", pa.string())])
 
 
 def _write(rows: list[dict], schema: pa.Schema, path: str) -> None:
@@ -140,12 +145,17 @@ def _build_kg(out: str, seed: int) -> dict:
            pa.schema([("example_id", pa.string())]),
            os.path.join(out, "resume_cached_examples.parquet"))
 
-    triples = oracle_triples(examples, cfg, catalog)
+    # the canonical map kg_resume reads as committed by an earlier build
+    canon = oracle_canonical_map(catalog)
+    _write([{"entity_id": e, "canonical_id": c} for e, c in sorted(canon.items())],
+           _CANONICAL, os.path.join(out, "canonical.parquet"))
+    triples = oracle_triples(examples, cfg, canon)
     _write([dict(zip(_TRIPLES.names, t)) for t in sorted(triples)], _TRIPLES,
            os.path.join(out, "oracle_triples.parquet"))
     return {"seed": seed, "n_docs": n_docs, "n_examples": len(examples),
             "n_prompts": n_prompts,
             "n_cached_prompts": int(n_prompts * RESUME_CACHED),
+            "n_generated": sum(ex[3] not in cached_texts for ex in examples),
             "n_oracle_triples": len(triples)}
 
 
@@ -177,19 +187,18 @@ def oracle_canonical_map(catalog: list[dict], threshold: float = 0.6) -> dict:
     return {i: find(i) for i in ids}
 
 
-def oracle_triples(examples, cfg: SynthConfig, catalog: list[dict]) -> set:
+def oracle_triples(examples, cfg: SynthConfig, canon: dict) -> set:
     """(subj, pred, obj, doc_id, span_offset) triples of the fused kg_build
     path: stub generation per example, parse + regex grounding, alias top-1
     linking (max prior, then min entity id; nil ids from the md5 of the
-    mention), exact canonicalization, then typing and co-occurrence
-    triples per text span."""
+    mention), canonicalization by ``canon`` (``oracle_canonical_map``),
+    then typing and co-occurrence triples per text span."""
     n2l = {v: k for k, v in LABELS2NAMES.items()}
     best: dict[str, tuple] = {}
     for row in synth.alias_rows(cfg):
         key = (-row["prior"], row["entity_id"])
         if row["alias"] not in best or key < best[row["alias"]][0]:
             best[row["alias"]] = (key, row["entity_id"], row["entity_type"])
-    canon = oracle_canonical_map(catalog)
     out: set = set()
     for eid, doc_id, off, text, golds in examples:
         gen = synth.stub_generation_collective(eid, text, golds, cfg)

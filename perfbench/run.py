@@ -1,33 +1,29 @@
 #!/usr/bin/env python3
 """Benchmark of the KG-construction pipeline and the graph operators.
 
-    python3 perfbench/run.py --workload kg_build --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload kg_build --seed 1 --seconds 5 --trace 0
 
 Run from the root of a source checkout. One closed-loop client at
 ``local[<nproc>]`` runs one workload at a time in this process:
 
 1. inputs for ``--seed`` are generated (cached under ``.perfbench/``);
-2. set-up: Spark session start, Python-worker warm-up and the workload's
-   program-side state;
-3. one cold run, the first after set-up in a fresh process (``cold_s``,
-   what a spark-submit user pays);
-4. with ``--trace 0``: warm runs while the time measured so far is under
-   ``--seconds`` (median: ``wall_s``), then two more set-ups in the same
-   process; ``setup_s`` is the median of the three. With ``--trace 1``:
-   untraced and traced runs alternate for ``--seconds`` seconds, at least
-   one of each, and per-layer metrics replace the end-to-end ones.
+2. set-up, once (``setup_s``): Spark session start with its JVM,
+   Python-worker warm-up and the workload's program-side state; each
+   process is fresh, so every sample includes the JVM launch;
+3. the cold run, the first after set-up: ``cold_s`` is what a
+   spark-submit user pays, ``rows_per_s`` its output rows per second
+   (triples on the kg workloads), ``peak_rss_mb`` the peak resident
+   memory of the JVM and its Python workers, from set-up on;
+4. with ``--trace 0``, more runs while less than ``--seconds`` have
+   passed since the cold run started (none when the cold run is longer);
+   their median is printed as ``wall_s``. With ``--trace 1``, untraced
+   and traced runs alternate for ``--seconds``, each traced run between
+   two untraced ones, and per-layer metrics replace the end-to-end ones;
+   ``trace.untraced_s`` is the steady-state run time.
 
 Every run's outputs are checked. Metric lines go to stdout with their
 units; the last line is one JSON object with ``correct``, ``attempted``,
 ``failed`` and ``metrics`` (the metrics named in BENCHMARK.json).
-
-That object holds ``setup_s`` and the work the cold run made Spark do
-(``jobs``, ``tasks``, ``shuffle_mb``, read from Spark's status store). The
-run times (``cold_s``, ``wall_s``, ``rows_per_s``) and ``peak_rss_mb`` are
-printed for reading only: on a shared 4-core VM one fresh process's times
-vary by 15-30% from the next one's, more than any regression bound worth
-gating on, while the work counts repeat. Warm runs of a fresh JVM are also
-still compiling: each of the first five is faster than the one before.
 """
 
 from __future__ import annotations
@@ -47,7 +43,6 @@ import traceback
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 STATE = os.path.join(ROOT, ".perfbench")
-SETUPS = 3            # set-ups per process whose median is setup_s
 KEEP_INPUTS = 24      # seeds whose generated inputs stay cached
 
 
@@ -97,6 +92,14 @@ def _source_digest() -> str:
     return h.hexdigest()[:16]
 
 
+def _cpu_jiffies() -> tuple[int, int]:
+    """(steal, total) CPU time of this machine since boot: steal is time a
+    virtual CPU was runnable but the host ran something else."""
+    with open("/proc/stat") as f:
+        fields = [int(x) for x in f.readline().split()[1:]]
+    return fields[7], sum(fields)
+
+
 def _git_commit() -> str | None:
     try:
         out = subprocess.run(["git", "-C", ROOT, "rev-parse", "HEAD"],
@@ -114,7 +117,7 @@ class Runner:
         self.attempted = self.failed = 0
         self.fingerprint: str | None = None
         self.loadavg: list[tuple[float, float]] = []
-        self.setups: list[float] = []
+        self.setup_s = 0.0
         self.samples: dict = {}
 
     def setup(self):
@@ -124,7 +127,7 @@ class Runner:
         spark = start_session(self.work, self.nproc)
         warm_workers(spark, self.nproc)
         self.wl.setup(spark)
-        self.setups.append(time.perf_counter() - t0)
+        self.setup_s = time.perf_counter() - t0
         return spark
 
     def attempt(self, fn) -> tuple[float, float] | None:
@@ -152,37 +155,32 @@ class Runner:
         return start, secs
 
 
-def _end_to_end(runner: Runner, spark, seconds: float):
-    """Returns the session left by the last set-up, the end-to-end
-    metrics, and the ones printed for reading only."""
-    from sparkstats import StatusStore, peak_rss_mb, spark_counters
+def _end_to_end(runner: Runner, spark, seconds: float) -> tuple[dict, dict]:
+    """End-to-end metrics of set-up and the cold run, and the median of
+    the runs after it, if ``seconds`` left time for any, for printing."""
+    from sparkstats import StatusStore, peak_rss, spark_counters
 
     store = StatusStore(spark)
+    t0 = time.perf_counter()
     cold = runner.attempt(runner.wl.run)
     if cold is None:
         raise RuntimeError("the cold run failed")
-    work = spark_counters(store, cold[0], cold[0] + cold[1])
+    rows = runner.wl.rows()
     walls: list[float] = []
-    while cold[1] + sum(walls) < seconds and runner.failed == 0:
+    while time.perf_counter() - t0 < seconds and runner.failed < 2:
         r = runner.attempt(runner.wl.run)
         if r:
             walls.append(r[1])
-    rows = runner.wl.rows()
-    rss = peak_rss_mb(spark)
-    for _ in range(SETUPS - 1):
-        spark.stop()
-        spark = runner.setup()
-    runner.samples = {"warm_s": walls, "setup_s": runner.setups}
-    shown = {"cold_s": (cold[1], "s"), "rows_per_s": (rows / cold[1], "1/s"),
-             "peak_rss_mb": (rss, "MB")}
-    if walls:
-        shown["wall_s"] = (statistics.median(walls), "s")
-    return spark, {
-        "setup_s": statistics.median(runner.setups),
-        "jobs": work["jobs"],
-        "tasks": work["tasks"],
-        "shuffle_mb": work["shuffle_bytes"] / 2**20,
-    }, shown
+    rss = peak_rss(spark)
+    runner.samples = {"cold": spark_counters(store, cold[0], cold[0] + cold[1]),
+                      "wall_s": walls, "rss_mb": rss}
+    metrics = {
+        "setup_s": runner.setup_s,
+        "cold_s": cold[1],
+        "rows_per_s": rows / cold[1],
+        "peak_rss_mb": rss["total"],
+    }
+    return metrics, {"wall_s": statistics.median(walls)} if walls else {}
 
 
 def _median_dicts(dicts: list[dict]) -> dict:
@@ -190,7 +188,7 @@ def _median_dicts(dicts: list[dict]) -> dict:
 
 
 def _per_layer(runner: Runner, spark, seconds: float) -> tuple[dict, object]:
-    from sparkstats import (StatusStore, StoragePoller, Tracer, peak_rss_mb,
+    from sparkstats import (StatusStore, StoragePoller, Tracer, peak_rss,
                             spark_counters)
 
     store = StatusStore(spark)
@@ -198,30 +196,64 @@ def _per_layer(runner: Runner, spark, seconds: float) -> tuple[dict, object]:
     runner.attempt(runner.wl.run)  # cold run: compiles and warms the JVM
     plain, traced, counters = [], [], []
     extras: dict = {}
+    window: tuple[float, float] | None = None  # of the last untraced run
+
+    def run_plain() -> None:
+        nonlocal window
+        r = runner.attempt(runner.wl.run)
+        if r:
+            plain.append(r[1])
+            counters.append(spark_counters(store, r[0], r[0] + r[1]))
+            window = (r[0], r[0] + r[1])
+
+    def run_traced() -> None:
+        def fn() -> None:
+            extras.update(runner.wl.traced(tracer))
+            if window is not None:
+                _check_same_queries(tracer, store, window)
+
+        tracer.run_id += 1
+        if runner.attempt(fn):
+            traced.append(layer_metrics(
+                tracer, tracer.run_id, store, poller, extras))
+
+    # the JVM keeps getting faster for several runs after the cold one, so
+    # each traced run sits between two untraced ones
     t_end = time.perf_counter() + seconds
     with StoragePoller(store) as poller:
-        while time.perf_counter() < t_end or not traced:
-            r = runner.attempt(runner.wl.run)
-            if r:
-                plain.append(r[1])
-                counters.append(spark_counters(store, r[0], r[0] + r[1]))
-            tracer.run_id += 1
-            r = runner.attempt(
-                lambda: extras.update(runner.wl.traced(tracer)))
-            if r:
-                traced.append(layer_metrics(
-                    tracer, tracer.run_id, store, poller, extras))
-            if runner.failed > 1:
-                break
+        run_plain()
+        while (time.perf_counter() < t_end or not traced) and runner.failed < 2:
+            run_traced()
+            run_plain()
     if not plain or not traced:
         raise RuntimeError("no correct traced and untraced run")
     out = {f"spark.{k}": v for k, v in _median_dicts(counters).items()}
-    out["spark.peak_rss_mb"] = peak_rss_mb(spark)
+    out["spark.peak_rss_mb"] = peak_rss(spark)["total"]
     out.update(_median_dicts(traced))
     out["trace.untraced_s"] = statistics.median(plain)
     out["trace.overhead_s"] = out["trace.wall_s"] - out["trace.untraced_s"]
     runner.samples = {"untraced_s": plain}
     return out, tracer
+
+
+def _check_same_queries(tracer, store, untraced: tuple[float, float]) -> None:
+    """Apart from the counts that force each layer, a traced run must issue
+    the untraced run's queries (compared by action: "count", "parquet",
+    ...) in the same order, so that its spans time the program's own
+    work."""
+    def action(q: dict) -> str:
+        # the JVM-side call site of a py4j call varies from run to run
+        return q["description"].split(" at ")[0]
+
+    spans = tracer.run_spans(tracer.run_id)
+    root = next(s for s in spans if s["parent"] is None)
+    forced = tracer.forced_in(tracer.run_id)
+    got = [action(q) for q in store.queries(root["start"], root["end"])
+           if not any(a <= q["submissionTime"] / 1000 <= b for a, b in forced)]
+    want = [action(q) for q in store.queries(*untraced)]
+    if got != want:
+        raise RuntimeError(f"traced run's queries {got} differ from the "
+                           f"untraced run's {want}")
 
 
 # statistics each layer span reports; graph operator spans report _GRAPH
@@ -300,6 +332,7 @@ def main(argv: list[str] | None = None) -> int:
     wl = workloads.WORKLOADS[args.workload](data, work, args.seed)
     runner = Runner(wl, nproc, work)
 
+    steal0, total0 = _cpu_jiffies()
     spark = runner.setup()
     try:
         if args.trace:
@@ -308,11 +341,13 @@ def main(argv: list[str] | None = None) -> int:
                 STATE, "traces", f"{args.workload}-seed{args.seed}.jsonl"))
             shown = {}
         else:
-            spark, metrics, shown = _end_to_end(runner, spark, args.seconds)
+            metrics, shown = _end_to_end(runner, spark, args.seconds)
+        steal1, total1 = _cpu_jiffies()
         stamp = {
             "workload": args.workload, "seed": args.seed,
             "seconds": args.seconds, "trace": args.trace, "nproc": nproc,
             "loadavg_before_after": runner.loadavg,
+            "cpu_steal_frac": (steal1 - steal0) / max(total1 - total0, 1),
             "git_commit": _git_commit(), "source_digest": _source_digest(),
             "pyspark": pyspark.__version__,
             "java": spark._jvm.System.getProperty("java.version"),
@@ -336,9 +371,9 @@ def main(argv: list[str] | None = None) -> int:
         value = float(metrics.get(m["name"], 0.0))
         result[m["name"]] = {"value": value, "unit": m["unit"]}
         print(f"{m['name']:<34} {value:>16.6f} {m['unit']}")
-    shown["failed_frac"] = (runner.failed / runner.attempted, "1")
-    for name, (value, unit) in shown.items():
-        print(f"{name:<34} {value:>16.6f} {unit}")
+    shown["failed_frac"] = runner.failed / runner.attempted
+    for name, value in shown.items():
+        print(f"{name:<34} {value:>16.6f} {'1' if name == 'failed_frac' else 's'}")
     if missing:
         print(f"not run on {args.workload}: {', '.join(missing)}")
     print(json.dumps({"correct": runner.failed == 0,

@@ -111,10 +111,14 @@ def _vm_hwm_kb(pid: int) -> int:
     return 0
 
 
-def peak_rss_mb(spark: SparkSession) -> float:
-    """Peak resident set (VmHWM) of the driver JVM plus its Python workers."""
+def peak_rss(spark: SparkSession) -> dict:
+    """Peak resident set (VmHWM) of the driver JVM plus its Python workers
+    (``total``), with the JVM's share and the number of Python processes."""
     jvm_pid = spark._jvm.ProcessHandle.current().pid()
-    return sum(_vm_hwm_kb(p) for p in [jvm_pid] + descendants(jvm_pid)) / 1024
+    python = descendants(jvm_pid)
+    jvm = _vm_hwm_kb(jvm_pid) / 1024
+    return {"total": jvm + sum(_vm_hwm_kb(p) for p in python) / 1024,
+            "jvm": jvm, "python_processes": len(python)}
 
 
 class StatusStore:
@@ -190,6 +194,16 @@ class StatusStore:
             for acc in ids:
                 total += _parse_total_s(values.get(str(acc), ""))
         return total
+
+    def queries(self, since: float, until: float) -> list[dict]:
+        """SQL executions (one per DataFrame action) submitted in
+        [since, until), epoch seconds, in submission order."""
+        self._drain()
+        return sorted(
+            (e for e in self._json(self._sql.executionsList())
+             if since * 1000 <= e["submissionTime"] < until * 1000
+             and e.get("rootExecutionId", e["executionId"]) == e["executionId"]),
+            key=lambda e: e["executionId"])
 
     def storage_used_bytes(self) -> int:
         """Block-manager storage memory in use (cached blocks)."""
@@ -273,6 +287,20 @@ class Tracer:
         self.spans: list[dict] = []
         self._stack: list[int] = []
         self.run_id = 0
+        self.forced: list[tuple[int, float, float]] = []  # run, start, end
+
+    def force(self, df):
+        """Persist ``df`` and count it, so that the open span holds the
+        computation of its layer. Returns the persisted frame and its row
+        count; the count is a query the untraced run does not issue."""
+        start = time.time()
+        df = df.persist()
+        n = df.count()
+        self.forced.append((self.run_id, start, time.time()))
+        return df, n
+
+    def forced_in(self, run_id: int) -> list[tuple[float, float]]:
+        return [(a, b) for r, a, b in self.forced if r == run_id]
 
     @contextmanager
     def span(self, name: str):

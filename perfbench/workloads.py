@@ -7,16 +7,15 @@ Each workload drives only the entry points a user calls: ``run_pipeline``
 
 * ``setup``   program-side state preparation, timed as part of setup_s;
 * ``reset``   restores that state before each run, outside the clock;
-* ``run``     one untraced run, the unit wall_s and cold_s time;
+* ``run``     one untraced run, the unit cold_s times;
 * ``traced``  the same work with a span around each layer call, each
               layer's output forced before the next starts;
 * ``check``   verifies the outputs of the last run and returns their
               order-independent fingerprint.
 
-BENCHMARK.json lists kg_build and graph_analytics. kg_resume prepares a
-committed canonical map and a pristine checkpoint in every set-up and
-checks against a second, uninterrupted run, so one process takes about
-twice as long; it is run by hand with ``--workload kg_resume``.
+``traced`` forces a layer's output with ``Tracer.force`` (persist +
+count); every other query it issues is one the untraced run issues too,
+in the same order, which the benchmark checks on every traced run.
 """
 
 from __future__ import annotations
@@ -58,11 +57,6 @@ def dir_bytes(path: str) -> int:
                for d, _, files in os.walk(path) for f in files)
 
 
-def _force(df: DataFrame) -> tuple[DataFrame, int]:
-    df = df.persist()
-    return df, df.count()
-
-
 class _Kg:
     """State shared by the two kg workloads."""
 
@@ -93,23 +87,32 @@ class _Kg:
         return fingerprint(self.spark.read.parquet(self.sink), _TRIPLE_COLS)
 
     def _tail(self, tr, mentions: DataFrame, canon: DataFrame) -> DataFrame:
-        """link -> canonical join -> triples -> sink -> metrics, as
-        ``pipeline._finish`` composes them, one span per layer. Returns
-        the linked mentions."""
+        """link -> canonical join -> triples -> sink -> metrics, issuing
+        the queries ``pipeline._finish`` issues (only its two JSON files
+        are left out), one span per layer. Returns the linked mentions."""
         with tr.span("linking"):
-            linked, _ = _force(linking.link_mentions(
+            linked, _ = tr.force(linking.link_mentions(
                 mentions, self.alias, dict_broadcast=True))
         with tr.span("triples"):
-            trip, _ = _force(triples.materialize_triples(
+            trip, _ = tr.force(triples.materialize_triples(
                 linked.join(F.broadcast(canon), "entity_id", "left")
                 .withColumn("canonical_id",
                             F.coalesce("canonical_id", "entity_id"))))
         with tr.span("pipeline.sink"):
             triples.write_triples(trip, self.sink)
+            trip = self.spark.read.parquet(self.sink)
+            trip.count()
         with tr.span("pipeline.metrics"):
-            pipeline._partition_metrics(mentions, "mentions")
-            pipeline._partition_metrics(
-                self.spark.read.parquet(self.sink), "triples")
+            # _finish persists mentions only here, so its first partition
+            # metrics job computes detect again; so must this one
+            mentions.unpersist()
+            mentions = mentions.persist()
+            per_part = (pipeline._partition_metrics(mentions, "mentions")
+                        + pipeline._partition_metrics(trip, "triples"))
+            self.spark.createDataFrame(
+                per_part, "stage string, partition_id int, rows long"
+            ).write.mode("overwrite").parquet(
+                os.path.join(self.sink, "_stage_metrics"))
         return linked
 
     def _tail_counts(self, linked: DataFrame, mentions: DataFrame) -> dict:
@@ -138,11 +141,11 @@ class KgBuild(_Kg):
     def traced(self, tr) -> dict:
         with tr.span("run"):
             with tr.span("canonicalize"):
-                canon, _ = _force(canonicalize.canonical_map(self.entities))
+                canon, _ = tr.force(canonicalize.canonical_map(self.entities))
             with tr.span("detect"):
                 examples = detect.attach_golds(
                     detect.explode_text_spans(self.docs), self.golds)
-                mentions, _ = _force(
+                mentions, _ = tr.force(
                     detect.detect_mentions_fused(examples, self.cfg))
             linked = self._tail(tr, mentions, canon)
         n_examples = examples.count()
@@ -175,7 +178,8 @@ class KgBuild(_Kg):
 class KgResume(_Kg):
     """Checkpoint path: RESUME_CACHED of the prompts are already in the
     generation checkpoint and the canonical map is read from a committed
-    parquet, as ``kg_construct --checkpoint --canonical`` does."""
+    parquet, as ``kg_construct --checkpoint --canonical`` does once the
+    map is committed."""
 
     name = "kg_resume"
 
@@ -183,25 +187,29 @@ class KgResume(_Kg):
         super().__init__(data, work, seed)
         self.ckpt = os.path.join(work, "ckpt")
         self.pristine = os.path.join(work, "ckpt-pristine")
-        self.committed = os.path.join(work, "canonical")
+        self.committed_fp = os.path.join(work, "canonical_fingerprint")
+        self.reference_sink = os.path.join(work, "reference-sink")
         self._reference: str | None = None
 
     def setup(self, spark: SparkSession) -> None:
         super().setup(spark)
-        # the committed canonical map, with the fingerprint of its catalog
-        shutil.rmtree(self.committed, ignore_errors=True)
-        canonicalize.canonical_map(self.entities).write.parquet(self.committed)
-        with open(os.path.join(self.committed, "_catalog_fingerprint"), "w") as f:
+        # the committed canonical map is an input, made with the exact
+        # oracle (kg_build times canonical_map); commit its catalog's
+        # fingerprint, which every run checks as kg_construct does
+        with open(self.committed_fp, "w") as f:
             f.write(canonicalize.catalog_fingerprint(self.entities))
-        # the pristine checkpoint: generations for the cached prompts only
-        shutil.rmtree(self.pristine, ignore_errors=True)
-        cached = self._read("resume_cached_examples")
-        examples = detect.attach_golds(
-            detect.explode_text_spans(self.docs), self.golds
-        ).join(F.broadcast(cached), "example_id", "left_semi")
-        run_pipeline(spark, self.docs, self.golds, self.alias, self.entities,
-                     self.cfg, checkpoint_dir=self.pristine,
-                     examples_with_golds=examples)
+        # an uninterrupted run from an empty checkpoint: its triples are
+        # what every resumed run must emit, and its checkpoint cut down to
+        # the cached prompts' examples is the pristine checkpoint, the one
+        # a run over those examples alone writes
+        ref_ckpt = os.path.join(self.work, "reference-ckpt")
+        for d in (ref_ckpt, self.reference_sink, self.pristine):
+            shutil.rmtree(d, ignore_errors=True)
+        self.run(checkpoint=ref_ckpt, sink=self.reference_sink)
+        spark.read.parquet(os.path.join(ref_ckpt, "generations")).join(
+            F.broadcast(self._read("resume_cached_examples")), "example_id",
+            "left_semi").write.parquet(os.path.join(self.pristine, "generations"))
+        shutil.rmtree(ref_ckpt)
         self.pristine_bytes = dir_bytes(self.pristine)
 
     def reset(self) -> None:
@@ -210,11 +218,11 @@ class KgResume(_Kg):
         shutil.copytree(self.pristine, self.ckpt)
 
     def _canonical(self) -> DataFrame:
-        with open(os.path.join(self.committed, "_catalog_fingerprint")) as f:
+        with open(self.committed_fp) as f:
             committed_fp = f.read()
         if canonicalize.catalog_fingerprint(self.entities) != committed_fp:
             raise CheckFailed("entity catalog differs from the committed map")
-        return self.spark.read.parquet(self.committed)
+        return self._read("canonical")
 
     def run(self, checkpoint: str | None = None, sink: str | None = None) -> None:
         run_pipeline(self.spark, self.docs, self.golds, self.alias,
@@ -230,22 +238,24 @@ class KgResume(_Kg):
             with tr.span("detect"):
                 examples = detect.attach_golds(
                     detect.explode_text_spans(self.docs), self.golds)
-                hashed, n_examples = _force(detect.with_prompt_hash(examples))
+                # run_pipeline persists and counts this frame itself
+                hashed = detect.with_prompt_hash(examples).persist()
+                n_examples = hashed.count()
                 cached = self.spark.read.parquet(gen_ckpt).select(
                     "prompt_hash").distinct()
-                fresh, n_generated = _force(detect.generate_stub(
+                fresh, n_generated = tr.force(detect.generate_stub(
                     hashed.join(cached, "prompt_hash", "left_anti"), self.cfg))
                 with tr.span("pipeline.ckpt"):
                     fresh.write.mode("append").parquet(gen_ckpt)
                     # one response per distinct prompt, as run_pipeline
                     # serves them: the smallest example_id's generation
-                    responses, _ = _force(
+                    responses, _ = tr.force(
                         self.spark.read.parquet(gen_ckpt).groupBy("prompt_hash")
                         .agg(F.min(F.struct(
                             F.col("example_id").alias("eid"),
                             F.col("generated_text").alias("g"))
                         ).getField("g").alias("generated_text")))
-                mentions, _ = _force(
+                mentions, _ = tr.force(
                     detect.ground(hashed.join(responses, "prompt_hash")))
             linked = self._tail(tr, mentions, canon)
         prompts = hashed.select("prompt_hash").distinct()
@@ -261,33 +271,32 @@ class KgResume(_Kg):
         }
 
     def check(self) -> str:
-        """The resumed triples equal those of an uninterrupted run from an
-        empty checkpoint, and exactly RESUME_CACHED of the distinct prompts
-        were served from the checkpoint."""
-        gens = os.path.join(self.ckpt, "generations")
-        n_prompts = self.spark.read.parquet(gens).select(
-            "prompt_hash").distinct().count()
-        n_cached = self.spark.read.parquet(
-            os.path.join(self.pristine, "generations")).select(
-            "prompt_hash").distinct().count()
-        if (n_prompts, n_cached) != (self.meta["n_prompts"],
-                                     self.meta["n_cached_prompts"]) \
-                or n_cached != n_prompts * inputs.RESUME_CACHED:
-            raise CheckFailed(f"checkpoint served {n_cached} of {n_prompts} "
-                              f"prompts, expected {inputs.RESUME_CACHED}")
-        got = self._sink_fingerprint()
+        """The resumed triples equal those of the uninterrupted run, exactly
+        RESUME_CACHED of the distinct prompts were in the checkpoint, and
+        only the examples of the other prompts were generated."""
+        def rows_and_prompts(ckpt: str) -> tuple[int, int]:
+            gens = self.spark.read.parquet(os.path.join(ckpt, "generations"))
+            r = gens.agg(F.count(F.lit(1)),
+                         F.countDistinct("prompt_hash")).first()
+            return r[0], r[1]
+
+        rows, n_prompts = rows_and_prompts(self.ckpt)
+        pristine_rows, n_cached = rows_and_prompts(self.pristine)
+        got = (n_prompts, n_cached, rows - pristine_rows)
+        want = (self.meta["n_prompts"], self.meta["n_cached_prompts"],
+                self.meta["n_generated"])
+        if got != want or n_cached != n_prompts * inputs.RESUME_CACHED:
+            raise CheckFailed(f"(prompts, cached prompts, generated) {got}, "
+                              f"expected {want}")
         if self._reference is None:
-            ref_sink = os.path.join(self.work, "reference-sink")
-            ref_ckpt = os.path.join(self.work, "reference-ckpt")
-            self.run(checkpoint=ref_ckpt, sink=ref_sink)
             self._reference = fingerprint(
-                self.spark.read.parquet(ref_sink), _TRIPLE_COLS)
-            shutil.rmtree(ref_sink)
-            shutil.rmtree(ref_ckpt)
-        if got != self._reference:
-            raise CheckFailed(f"resumed triples {got} != uninterrupted "
+                self.spark.read.parquet(self.reference_sink), _TRIPLE_COLS)
+            shutil.rmtree(self.reference_sink)
+        fp = self._sink_fingerprint()
+        if fp != self._reference:
+            raise CheckFailed(f"resumed triples {fp} != uninterrupted "
                               f"{self._reference}")
-        return got
+        return fp
 
 
 class GraphAnalytics:
