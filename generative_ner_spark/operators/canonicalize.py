@@ -2,14 +2,16 @@
 
 North-rule stage: near-duplicate entity names (e.g. "Acme Systems" vs
 "Acme Systems Corporation") are merged into one canonical id. Published
-technique stack, implemented 100% with JVM-side Spark SQL expressions (no
-Python in the hot path):
+technique stack, one lazy Spark plan up to the components step:
 
-  1. character n-gram shingles of the normalized name         (array ops)
-  2. k MinHash values via xxhash64(shingle, seed_i), min-agg   (codegen'd)
+  1. character n-gram shingle hashes of the name, one sorted
+     distinct set per id                          (codegen'd, one groupBy)
+  2. k MinHash values per set in one vectorized numpy kernel
+     (mapInPandas, k-min or one-permutation scheme)
   3. b bands of r hashes -> band_hash, explode, self-join on
-     band_hash = candidate pairs                               (LSH blocking)
-  4. exact Jaccard verification on the candidate pairs only    (array ops)
+     band_hash = candidate pairs, the shingle sets riding along as
+     payload                                                   (LSH blocking)
+  4. exact Jaccard verification on the deduplicated pairs     (array ops)
   5. connected components by alternating large-star/small-star
      DataFrame joins (Kiveris et al., "Connected Components in
      MapReduce and Beyond", SoCC'14) with localCheckpoint per
@@ -26,7 +28,8 @@ bucket/row counts (otherwise the cap is silent by design: no extra job).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import numpy as np
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -49,6 +52,7 @@ def with_shingles(df: DataFrame, name_col: str = "name", n: int = 3,
 # below 2^62, so the expressions are safe under Spark 4's default ANSI mode
 # (long-overflow would otherwise raise).
 _MH_P = (1 << 31) - 1
+_OPH_C = 0x9E3779B1  # odd constant spreads densified OPH slots over [0, p)
 
 
 def _mh_coeffs(k: int) -> list[tuple[int, int]]:
@@ -63,21 +67,14 @@ def _raw_shingle_hash(col, hash_family: str):
     60-bit md5 prefix (cross-engine path — DuckDB computes the identical
     value from the same 15 hex chars, see dedup.simhash_width). The full
     width is what shingle SETS are represented by (collision odds ~2^-60
-    within one compared pair); the signature path folds it to [0, p)
-    with pmod (_shingle_hash)."""
+    within one compared pair); the signature kernel folds it to [0, p)
+    (_signatures)."""
     if hash_family == "xxhash64":
         return F.xxhash64(col)
     if hash_family == "md5":
         return F.conv(
             F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
     raise ValueError(f"unknown hash_family: {hash_family}")
-
-
-def _shingle_hash(col: str, hash_family: str):
-    """shingle -> value in [0, p): xxhash64 (fast path) or md5-prefix
-    (cross-engine path — DuckDB computes the identical value from the same
-    15 hex chars, see dedup.simhash_width for the width rationale)."""
-    return F.pmod(_raw_shingle_hash(col, hash_family), F.lit(_MH_P))
 
 
 def shingle_hash_rows(
@@ -92,9 +89,8 @@ def shingle_hash_rows(
     substring + hash is plain whole-stage codegen, replacing the
     interpreted transform/array_distinct higher-order pass that built
     shingle ARRAYS for every document before anything else ran.
-    DUPLICATE positions are retained — every consumer is either a
-    min-aggregate (minhash: min over a multiset equals min over its set)
-    or a collect_set. Same <n contract as with_shingles: a short string
+    DUPLICATE positions are retained — the consumer's collect_set
+    drops them. Same <n contract as with_shingles: a short string
     yields its whole self as the single shingle (substring truncates),
     so every named entity has at least one row."""
     return (
@@ -117,39 +113,70 @@ def shingle_hash_rows(
     )
 
 
+def _signatures(sets: DataFrame, k: int, scheme: str) -> DataFrame:
+    """(id, shingles) -> (id, shingles, minhash ARRAY<LONG>): THE MinHash
+    kernel behind every signature path. ``shingles`` is an id's set of
+    full-width shingle hashes; each hash h is folded to [0, p) and the
+    k slots are computed in one vectorized numpy pass per Arrow batch:
+
+    * ``kmin``: slot i = min over h of (h * a_i + b_i) mod p, the
+      _mh_coeffs universal-hash family;
+    * ``oph``: see minhash_df_oph.
+
+    Products stay below 2^62 in int64 and np.mod is a floor mod like
+    Spark's pmod, so every value equals the SQL formula the DuckDB
+    oracles replay. An empty set has no signature and yields no row.
+    One mapInPandas node replaces k min-aggregates, whose expression
+    tree cost seconds of driver planning and codegen per fresh plan."""
+    if scheme not in ("kmin", "oph"):
+        raise ValueError(f"unknown minhash scheme: {scheme}")
+    a, b = (np.array(c, dtype=np.int64) for c in zip(*_mh_coeffs(k)))
+    dense_offsets = np.arange(k, dtype=np.int64) * _OPH_C
+
+    def kernel(batches):
+        for pdf in batches:
+            lens = np.array([0 if s is None else len(s)
+                             for s in pdf["shingles"]], dtype=np.int64)
+            pdf, lens = pdf[lens > 0], lens[lens > 0]
+            if not len(lens):
+                continue
+            h = np.mod(np.concatenate(pdf["shingles"].tolist()), _MH_P)
+            starts = np.cumsum(lens) - lens
+            if scheme == "kmin":
+                sig = np.stack(
+                    [np.minimum.reduceat((h * ai + bi) % _MH_P, starts)
+                     for ai, bi in zip(a, b)], axis=1)
+            else:
+                sig = np.full((len(lens), k), _MH_P, dtype=np.int64)
+                rows = np.repeat(np.arange(len(lens)), lens)
+                np.minimum.at(sig, (rows, h % k), h)
+                dense = (np.minimum.reduceat(h, starts)[:, None]
+                         + dense_offsets) % _MH_P
+                sig = np.where(sig == _MH_P, dense, sig)
+            yield pdf.assign(minhash=list(sig))
+
+    id_t = sets.schema["id"].dataType.simpleString()
+    return sets.mapInPandas(
+        kernel, f"id {id_t}, shingles array<bigint>, minhash array<bigint>")
+
+
+def _array_signatures(sh_df: DataFrame, id_col: str, shingle_col: str,
+                      k: int, hash_family: str, scheme: str) -> DataFrame:
+    hashed = sh_df.select(
+        F.col(id_col).alias("id"),
+        F.transform(shingle_col, lambda s: _raw_shingle_hash(s, hash_family))
+        .alias("shingles"))
+    return _signatures(hashed, k, scheme).select("id", "minhash")
+
+
 def minhash_df(sh_df: DataFrame, id_col: str = "id",
                shingle_col: str = "shingles", k: int = 64,
                hash_family: str = "xxhash64") -> DataFrame:
-    """(id, shingles) -> (id, minhash ARRAY<LONG>) via explode + groupBy.
-
-    One string hash per shingle, k arithmetic min-aggregates, columnar
-    codegen. Map-side partial aggregation collapses each id to 64 values
-    BEFORE the shuffle (ids live in one input partition), so the exchange
-    carries n_ids x 64 longs regardless of shingle counts — both the fastest
-    local form (2.7x over the array-aggregate expression at sf0.1) and the
-    scale-correct one.
-    """
-    exploded = sh_df.select(
-        F.col(id_col).alias("id"), F.explode(shingle_col).alias("_s")
-    ).select("id", _shingle_hash("_s", hash_family).alias("_h"))
-    return _minhash_from_hash_rows(exploded, k)
-
-
-def _minhash_from_hash_rows(rows: DataFrame, k: int) -> DataFrame:
-    """(id, _h in [0, p)) rows -> (id, minhash ARRAY<LONG>), k-min scheme.
-    Shared by the array API above and the exploded-row fast path
-    (shingle_band_rows); duplicates in rows are harmless (min over a
-    multiset == min over its set)."""
-    coeffs = _mh_coeffs(k)
-    aggs = [
-        F.min(F.pmod(F.col("_h") * F.lit(a) + F.lit(b), F.lit(_MH_P))).alias(f"_m{i}")
-        for i, (a, b) in enumerate(coeffs)
-    ]
-    return (
-        rows.groupBy("id")
-        .agg(*aggs)
-        .select("id", F.array(*[F.col(f"_m{i}") for i in range(k)]).alias("minhash"))
-    )
+    """(id, shingles) -> (id, minhash ARRAY<LONG>), k-min scheme: one
+    string hash per shingle (a JVM-side transform), then the _signatures
+    kernel. No shuffle: each id's set is already one row."""
+    return _array_signatures(sh_df, id_col, shingle_col, k, hash_family,
+                             "kmin")
 
 
 def minhash_df_oph(sh_df: DataFrame, id_col: str = "id",
@@ -157,58 +184,21 @@ def minhash_df_oph(sh_df: DataFrame, id_col: str = "id",
                    hash_family: str = "xxhash64") -> DataFrame:
     """(id, shingles) -> (id, minhash ARRAY<LONG>) via ONE-PERMUTATION
     HASHING (Li, Owen & Zhang, NeurIPS 2012): each shingle's single hash
-    lands in bucket h mod k and each bucket keeps its min — ONE aggregate
-    update per shingle instead of the k-universal-hash family's k, i.e.
-    ~k× less aggregation CPU on the stage that dominates corpus-scale
-    dedup. The trade: per-signature-slot variance is higher and short
-    documents leave empty buckets.
+    lands in bucket h mod k and each bucket keeps its min — one update
+    per shingle instead of the k-universal-hash family's k. The trade:
+    per-signature-slot variance is higher and short documents leave
+    empty buckets.
 
     Empty buckets are DENSIFIED deterministically as a pure function of
-    the set (pmod(global_min + bucket * C, p)), so identical shingle sets
-    always produce identical signatures (byte-reproducible, any cluster
-    size); near-identical sets may disagree on densified slots, mildly
-    lowering banding recall for short docs — the exact-Jaccard verify
-    stage is unaffected, so precision is identical to the k-min scheme.
-
-    Distributed shape: explode -> ONE groupBy(id) with k conditional
-    min aggregates + the global min (map-side combine collapses each id
-    to k+1 values BEFORE the shuffle), densification as a flat coalesce
-    projection — see _minhash_oph_from_hash_rows.
+    the set, (min h + bucket * C) mod p, so identical shingle sets always
+    produce identical signatures (byte-reproducible, any cluster size);
+    near-identical sets may disagree on densified slots, mildly lowering
+    banding recall for short docs — the exact-Jaccard verify stage is
+    unaffected, so precision is identical to the k-min scheme. Same
+    _signatures kernel as minhash_df.
     """
-    exploded = sh_df.select(
-        F.col(id_col).alias("id"), F.explode(shingle_col).alias("_s")
-    ).select("id", _shingle_hash("_s", hash_family).alias("_h"))
-    return _minhash_oph_from_hash_rows(exploded, k)
-
-
-def _minhash_oph_from_hash_rows(rows: DataFrame, k: int) -> DataFrame:
-    """(id, _h in [0, p)) rows -> (id, minhash), one-permutation scheme
-    (see minhash_df_oph); duplicate rows per shingle are harmless.
-
-    r6 shape: ONE groupBy with k conditional mins
-    (min(when(_b = i, _h))) plus the global min — value-identical to
-    the r5 two-stage form (per-bucket min -> map_from_entries ->
-    transform densification) but with one exchange instead of two and
-    zero interpreted HOF work; the conditional is a comparison per
-    (row, slot), strictly cheaper than the k-universal family's
-    mul+add+pmod per (row, slot). Benched 20.9 s -> kmin-parity on the
-    sf1.0 salted corpus where the two-stage shape was 2.5x slower than
-    the k-min scheme it was meant to beat."""
-    C = 0x9E3779B1  # odd constant spreads densified slots over [0, p)
-    bucketed = rows.withColumn("_b", F.pmod("_h", F.lit(k)).cast("int"))
-    aggs = [
-        F.min(F.when(F.col("_b") == i, F.col("_h"))).alias(f"_m{i}")
-        for i in range(k)
-    ]
-    per_id = bucketed.groupBy("id").agg(*aggs, F.min("_h").alias("_gmin"))
-    slots = [
-        F.coalesce(
-            F.col(f"_m{i}"),
-            F.pmod(F.col("_gmin") + F.lit(i) * F.lit(C), F.lit(_MH_P)),
-        )
-        for i in range(k)
-    ]
-    return per_id.select("id", F.array(*slots).alias("minhash"))
+    return _array_signatures(sh_df, id_col, shingle_col, k, hash_family,
+                             "oph")
 
 
 def capped_self_join_pairs(
@@ -221,38 +211,50 @@ def capped_self_join_pairs(
 ) -> DataFrame:
     """THE candidate-pair lifecycle shared by every banding family
     (MinHash bands here, SimHash chunks in dedup.py, hyperplane buckets
-    in similarity.py): count bucket occupancy (persisted — the optional
-    metrics job must not re-run the agg), drop buckets above
-    ``max_bucket`` (bounding the worst-case pair blowup a degenerate
-    corpus causes), self-join within surviving buckets, and emit
-    deduplicated (a, b[, <payload>_a, <payload>_b]) with a < b,
-    eagerly ``localCheckpoint``ed so callers can release their upstream
-    caches immediately. ``metrics`` receives {"capped_buckets",
-    "capped_rows"} — the reported recall loss of the cap.
+    in similarity.py, k-means cells in cluster.py): the _capped_pairs
+    plan, eagerly ``localCheckpoint``ed so callers can release their
+    upstream caches immediately."""
+    return _capped_pairs(rows, bucket_cols, id_col, max_bucket, metrics,
+                         payload_cols).localCheckpoint()
+
+
+def _capped_pairs(rows: DataFrame, bucket_cols: tuple, id_col: str,
+                  max_bucket: int | None, metrics: dict | None,
+                  payload_cols: tuple) -> DataFrame:
+    """Lazy plan: drop buckets above ``max_bucket`` (bounding the
+    worst-case pair blowup a degenerate corpus causes), self-join within
+    the surviving buckets and emit deduplicated (a, b[, <payload>_a,
+    <payload>_b]) with a < b. Occupancy is a window count over the
+    bucket keys: it shuffles ``rows`` on exactly the partitioning the
+    self-join needs, so the whole plan has one exchange of ``rows`` (a
+    hot bucket's rows reach one task, whose window buffer spills, before
+    the cap drops them).
+    ``metrics`` receives {"capped_buckets", "capped_rows"} — the
+    reported recall loss of the cap — from one eager aggregate job.
     """
     keys = list(bucket_cols)
-    counts = None
     if max_bucket is None:
-        # cap disabled (oracle-replay callers lift it): skip the
-        # occupancy aggregate + join entirely — one less job and one
-        # less exchange per pair stage (r6)
+        # cap disabled (oracle-replay callers lift it): no occupancy count
         if metrics is not None:
             metrics["capped_buckets"] = 0
             metrics["capped_rows"] = 0
         capped = rows
     else:
-        counts = rows.groupBy(*keys).agg(
-            F.count("*").alias("_bc")).persist()
         if metrics is not None:
             over = (
-                counts.where(F.col("_bc") > max_bucket)
+                rows.groupBy(*keys).agg(F.count("*").alias("_bc"))
+                .where(F.col("_bc") > max_bucket)
                 .agg(F.count("*").alias("b"),
                      F.coalesce(F.sum("_bc"), F.lit(0)).alias("r"))
                 .first()
             )
             metrics["capped_buckets"] = over["b"]
             metrics["capped_rows"] = int(over["r"])
-        capped = rows.join(counts.where(F.col("_bc") <= max_bucket), keys)
+        capped = (
+            rows.withColumn("_bc", F.count(F.lit(1)).over(
+                Window.partitionBy(*keys)))
+            .where(F.col("_bc") <= max_bucket)
+        )
     left = capped.select(
         *keys, F.col(id_col).alias("a"),
         *[F.col(p).alias(f"{p}_a") for p in payload_cols],
@@ -261,18 +263,14 @@ def capped_self_join_pairs(
         *keys, F.col(id_col).alias("b"),
         *[F.col(p).alias(f"{p}_b") for p in payload_cols],
     )
-    pairs = (
+    return (
         left.join(right, keys)
         .where(F.col("a") < F.col("b"))
         .select("a", "b",
                 *[f"{p}_a" for p in payload_cols],
                 *[f"{p}_b" for p in payload_cols])
         .dropDuplicates(["a", "b"])
-        .localCheckpoint()  # eager: materialize candidates once
     )
-    if counts is not None:
-        counts.unpersist()
-    return pairs
 
 
 def shingle_band_rows(
@@ -287,21 +285,23 @@ def shingle_band_rows(
 ) -> tuple:
     """Shared signature/banding front half of every MinHash consumer
     (lsh_candidate_pairs here, the written incremental index in
-    dedup.py): returns (shingles_df PERSISTED as (id, shingles) where
-    ``shingles`` is the document's sorted DISTINCT full-width
-    shingle-hash set (array<long>; r6 — set identity by hash, ~2^-60
-    per-pair collision odds), banding rows (id, band, band_hash)). The
-    CALLER owns the shingle cache — unpersist it once its pair set /
-    index write is materialized.
+    dedup.py). Returns two LAZY frames; nothing is persisted:
 
-    SLIM banding rows: (id, band, band_hash) only. Carrying the shingle
-    arrays through a self-join shuffles ~|shingles| strings per banded
-    row — the dominant cost at corpus scale; join them back per-id after
-    pair generation instead. band_hash = xxhash64 over the band's slice
-    of the signature — a single transform lambda, so the expression tree
-    is O(1) in (bands, r) (the unrolled per-band concat_ws/element_at
-    tree cost seconds of driver-side Catalyst/janino time per fresh
-    plan).
+    * ``sh`` (id, shingles): ``shingles`` is the document's sorted
+      DISTINCT full-width shingle-hash set (array<long>; set identity
+      by hash, ~2^-60 per-pair collision odds) — ONE groupBy(id) over
+      the codegen'd shingle_hash_rows, so the text is scanned and
+      hashed once per plan;
+    * ``banded`` (id, shingles, band, band_hash): the _signatures kernel
+      over ``sh``, exploded to one row per band. The shingle set rides
+      along as the exact-Jaccard verify's payload; slim consumers
+      select (id, band, band_hash).
+
+    ``sh``'s plan is a prefix of ``banded``'s: a caller that runs more
+    than one job over them persists ``sh`` first (and owns that cache).
+    band_hash = xxhash64 over the band's slice of the signature — a
+    single transform lambda, so the expression tree is O(1) in
+    (bands, r).
     """
     if k % bands != 0:
         raise ValueError(
@@ -310,38 +310,14 @@ def shingle_band_rows(
             f"slots and the effective S-curve would differ from the "
             f"requested (k, bands) tuning")
     r = k // bands
-    # r6 shape: the signature path consumes EXPLODED codegen hash rows
-    # (shingle_hash_rows) — no interpreted array build, no distinct (min
-    # aggregates ignore duplicates). The returned `sh` frame now carries
-    # each document's DISTINCT shingle-hash set (array<long>, full-width
-    # hash) instead of the string array: the exact-Jaccard verify and the
-    # written index operate on 8-byte longs with ~2^-60 per-pair
-    # collision odds, cutting both the verify-join bytes and the
-    # interpreted per-shingle work that dominated the signature stage.
-    rows = shingle_hash_rows(entities, id_col, name_col, n=n,
-                             hash_family=hash_family)
     sh = (
-        rows.groupBy("id")
+        shingle_hash_rows(entities, id_col, name_col, n=n,
+                          hash_family=hash_family)
+        .groupBy("id")
         .agg(F.sort_array(F.collect_set("_sh")).alias("shingles"))
-        .persist()
     )
-    # signature rows re-explode the CACHED distinct sets (min aggregates
-    # are set functions, so distinct vs multiset is identical) — the
-    # corpus text is scanned and hashed exactly ONCE per banding pass
-    sig_rows = (
-        sh.select("id", F.explode("shingles").alias("_sh"))
-        .select("id", F.pmod("_sh", F.lit(_MH_P)).alias("_h"))
-    )
-    if scheme == "oph":
-        # one-permutation hashing: ~k× less aggregation CPU on the
-        # signature stage (see minhash_df_oph); banding/verify unchanged
-        mh = _minhash_oph_from_hash_rows(sig_rows, k)
-    elif scheme == "kmin":
-        mh = _minhash_from_hash_rows(sig_rows, k)
-    else:
-        raise ValueError(f"unknown minhash scheme: {scheme}")
-    banded = mh.select(
-        "id",
+    banded = _signatures(sh, k, scheme).select(
+        "id", "shingles",
         F.posexplode(
             F.expr(
                 f"transform(sequence(0, {bands - 1}), "
@@ -377,41 +353,29 @@ def lsh_candidate_pairs(
 
     ``hash_family``: 'xxhash64' (fast path, the production default) or
     'md5' (cross-engine path whose signatures a DuckDB oracle recomputes
-    exactly — see _shingle_hash; backs the q20/q31 driver oracles).
+    exactly — see _raw_shingle_hash; backs the q20/q31 DuckDB oracles).
 
-    The verified pairs are eagerly ``localCheckpoint``ed before returning:
-    the shingle-set cache backing three plan branches is then unpersisted
-    immediately (the r1 form leaked it across calls), and downstream
-    consumers (connected components' multi-pass loop) never re-run the
-    blocking plan.
+    Returns ONE lazy plan and persists nothing: shingle sets -> signature
+    kernel -> band rows carrying the sets -> capped self-join -> dedup ->
+    Jaccard filter. The caller's action runs it; a caller acting on the
+    pairs more than once checkpoints them first (connected_components
+    does).
     """
-    if k % bands != 0:
-        raise ValueError(
-            f"k={k} not divisible by bands={bands}: the banding would "
-            f"silently ignore the last {k - bands * (k // bands)} minhash "
-            f"slots and the effective S-curve would differ from the "
-            f"requested (k, bands) tuning")
-    sh, banded = shingle_band_rows(entities, id_col, name_col, k=k,
-                                   bands=bands, n=n,
-                                   hash_family=hash_family, scheme=scheme)
-    # cap pathological buckets (hot shingle patterns) — bounded pair blowup
-    pairs = capped_self_join_pairs(
-        banded, ("band", "band_hash"), "id", max_bucket, metrics)
-    verified = (
+    _, banded = shingle_band_rows(entities, id_col, name_col, k=k,
+                                  bands=bands, n=n,
+                                  hash_family=hash_family, scheme=scheme)
+    pairs = _capped_pairs(banded, ("band", "band_hash"), "id", max_bucket,
+                          metrics, payload_cols=("shingles",))
+    return (
         pairs
-        .join(sh.select(F.col("id").alias("a"), F.col("shingles").alias("sh_a")), "a")
-        .join(sh.select(F.col("id").alias("b"), F.col("shingles").alias("sh_b")), "b")
         .withColumn(
             "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.size(F.array_union("sh_a", "sh_b")),
+            F.size(F.array_intersect("shingles_a", "shingles_b"))
+            / F.size(F.array_union("shingles_a", "shingles_b")),
         )
         .where(F.col("jaccard") >= jaccard_threshold)
         .select("a", "b", "jaccard")
     )
-    verified = verified.localCheckpoint()  # eager: materialize pairs once
-    sh.unpersist()  # shingle cache no longer needed — don't leak it
-    return verified
 
 
 def _large_star(e_sym: DataFrame) -> DataFrame:

@@ -242,10 +242,9 @@ def simhash_near_dup_pairs(
     width = simhash_width(hash_family)
     chunk_bits = width // 4
     chunk_mask = (1 << chunk_bits) - 1
-    # signatures feed three plan branches (bucket counts + both join
-    # sides): persist so the 64-aggregate signature pass runs ONCE, and
-    # eagerly materialize the pair set below before unpersisting — the
-    # same lifecycle as canonicalize.lsh_candidate_pairs
+    # signatures feed the optional metrics job and the pair plan: persist
+    # so the signature pass runs ONCE, and let capped_self_join_pairs
+    # materialize the pair set before unpersisting
     # NULL text -> '' (same contract as the minhash path and exact dedup):
     # a NULL simhash would be silently dropped by the NULL-key joins below,
     # so two NULL-text docs would never pair while ''-text docs all do
@@ -266,8 +265,6 @@ def simhash_near_dup_pairs(
             ])
         ).alias("chunk_idx", "chunk"),
     )
-    # persisted: with metrics requested the counts agg would otherwise run
-    # twice (once for the .first() metrics job, again inside the join)
     from generative_ner_spark.operators.canonicalize import (
         capped_self_join_pairs,
     )
@@ -507,6 +504,8 @@ def write_minhash_index(
         df, id_col, text_col, k=k, bands=bands, n=shingle_n,
         hash_family=hash_family, scheme=scheme,
     )
+    sh.persist()  # both writes below read it: hash the text once
+    banded = banded.select("id", "band", "band_hash")
     if max_bucket is not None:
         # deterministic keep set (smallest ids); one slim window shuffle
         # at build time buys map-side probes forever
@@ -586,6 +585,8 @@ def append_to_minhash_index(
         new_df, m["id_col"], m["text_col"], k=m["k"], bands=m["bands"],
         n=m["shingle_n"], hash_family=m["hash_family"], scheme=m["scheme"],
     )
+    sh.persist()  # both writes below read it: hash the text once
+    banded = banded.select("id", "band", "band_hash")
     n_buckets = m["n_buckets"]
     # same pre-write repartition as write_minhash_index: one file per
     # touched bucket per append instead of tasks x buckets slivers
@@ -660,8 +661,11 @@ def dedup_against_index(
         new_df, id_col, text_col, k=m["k"], bands=m["bands"],
         n=m["shingle_n"], hash_family=m["hash_family"], scheme=m["scheme"],
     )
-    banded_new = banded_new.withColumn(
-        "_bkt", F.pmod(F.col("band_hash"), F.lit(n_buckets))).persist()
+    sh_new.persist()  # banding and the verify join both read it
+    banded_new = banded_new.select(
+        "id", "band", "band_hash",
+        F.pmod(F.col("band_hash"), F.lit(n_buckets)).alias("_bkt"),
+    ).persist()
     small = (
         new_df.select(id_col).limit(max_broadcast_batch_rows + 1).count()
         <= max_broadcast_batch_rows

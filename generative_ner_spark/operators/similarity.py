@@ -790,9 +790,9 @@ def embedding_near_dup_pairs(
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via LSH self-join + exact verify.
 
-    SLIM banding (same pattern as canonicalize.py's SLIM banding rows): the
-    self-join carries (lsh_table, bucket, id) ONLY — the r1 form shuffled
-    the full `dim`-float vector on BOTH sides of the join, tables x copies.
+    SLIM banding: the self-join carries (lsh_table, bucket, id) ONLY —
+    the r1 form shuffled the full `dim`-float vector on BOTH sides of the
+    join, tables x copies.
     Vectors are re-attached per-id for the exact cosine verify on the
     (few) candidate pairs. The identical left/right subplans collapse into
     one ReusedExchange, so the bucketing UDF runs once.
@@ -806,8 +806,8 @@ def embedding_near_dup_pairs(
     """
     vecs = embeddings.select(F.col(id_col).alias("_id"),
                              F.col(vec_col).alias("_vec"))
-    # banding rows feed three plan branches (bucket counts + both join
-    # sides): persist so the Arrow bucketing UDF runs ONCE, and eagerly
+    # banding rows feed the optional metrics job and both self-join
+    # sides: persist so the Arrow bucketing UDF runs ONCE, and eagerly
     # materialize the candidate pairs below before unpersisting
     b = with_lsh_buckets(
         embeddings.select(id_col, vec_col), dim, tables, planes, vec_col

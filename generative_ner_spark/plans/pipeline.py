@@ -17,8 +17,10 @@ generalized to a table. With an Iceberg catalog the same table is an Iceberg
 table and the manifest is a snapshot.
 
 Metrics (north rule "per-partition lineage + metrics"): each stage's row
-count per spark_partition_id is written next to the sink — cheap
-(groupBy(partition_id).count() piggybacks on data already materialized).
+count per spark_partition_id is written next to the sink. ``mentions`` is
+persisted before the sink write, so that write fills the cache and the
+mention metrics job reads it instead of running detect again; the triple
+metrics job reads the written sink back.
 """
 
 from __future__ import annotations
@@ -37,6 +39,11 @@ from generative_ner_spark.sources.synth import SynthConfig
 
 @dataclass
 class PipelineResult:
+    """Frames of one run. ``mentions`` is returned PERSISTED when
+    ``collect_metrics=True`` (the sink write and the metrics jobs share
+    it); the caller owns that cache and unpersists it when done. No
+    other cache outlives run_pipeline."""
+
     mentions: DataFrame
     linked: DataFrame
     triples: DataFrame
@@ -140,8 +147,13 @@ def run_pipeline(
     generations = hashed.join(responses, "prompt_hash")
 
     mentions = detect.ground(generations)
-    return _finish(spark, mentions, alias_df, entities_df, sink_path,
-                   collect_metrics, t0, canonical_df)
+    try:
+        return _finish(spark, mentions, alias_df, entities_df, sink_path,
+                       collect_metrics, t0, canonical_df)
+    finally:
+        # the sink (if any) is written and the mention cache (if any)
+        # filled: frames the caller still acts on recompute the render
+        hashed.unpersist()
 
 
 def _finish(
@@ -178,6 +190,10 @@ def _finish(
     trip = triples.materialize_triples(linked)
 
     metrics: dict = {"wall_sec": None}
+    if collect_metrics:
+        # before the sink write, which then fills the cache: the mention
+        # metrics job reads it instead of re-running the detect pass
+        mentions = mentions.persist()
     if sink_path:
         triples.write_triples(trip, sink_path)
         trip = spark.read.parquet(sink_path)
@@ -192,12 +208,7 @@ def _finish(
         metrics["n_triples"] = manifest["n_triples"]
 
     if collect_metrics:
-        # persist mentions: the two partition-metrics jobs plus the
-        # legacy n_mentions count would otherwise re-run the mapInPandas
-        # generation lineage up to 3x (CLAUDE.md: materialize frames
-        # feeding multiple branches); n_mentions itself falls out of the
-        # already-collected per-partition rows for free
-        mentions = mentions.persist()
+        # n_mentions falls out of the collected per-partition rows
         per_part = (
             _partition_metrics(mentions, "mentions")
             + _partition_metrics(trip, "triples")

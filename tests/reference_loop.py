@@ -1,11 +1,13 @@
 """Straight-line pure-Python oracle for the end-to-end P/R >= 0.95 gate.
 
 Mirrors the reference's eager per-example loop (FIXTURES.md F6):
-parse -> filter -> ground exactly as /root/reference/src/prediction/
-pred.py:43-55, using the reference's OWN functions (parse_output, regex —
-extracted by tests/reference_oracle.py), then the KG extension stages
-(link by exact alias top-1, canonicalize by EXACT pairwise Jaccard +
-union-find, co-occurrence/typing triples) computed brute-force.
+parse -> filter -> ground exactly as the reference's src/prediction/
+pred.py:43-55, using the in-repo pure kernel ``functions.textops``
+(parse_output, regex_ground, normalize_answer — byte-parity with the
+reference's own functions is pinned by test_textops.py), then the KG
+extension stages (link by exact alias top-1, canonicalize by EXACT
+pairwise Jaccard + union-find, co-occurrence/typing triples) computed
+brute-force. Needs no reference checkout.
 
 The Spark pipeline must match these triples at P >= 0.95 and R >= 0.95
 (micro, reference eval math). Canonicalization is the one stage where the
@@ -19,11 +21,10 @@ from __future__ import annotations
 from collections import defaultdict
 from typing import Any
 
+from generative_ner_spark.functions import textops
 from generative_ner_spark.sources import synth
 from generative_ner_spark.sources.synth import LABELS2NAMES, SynthConfig
-from tests.reference_oracle import load_reference
 
-REF = load_reference()
 NAMES2LABELS = {v: k for k, v in LABELS2NAMES.items()}
 
 
@@ -51,15 +52,15 @@ def oracle_mentions(cfg: SynthConfig) -> list[dict[str, Any]]:
             gen = synth.stub_generation_collective(
                 eid, text, golds_by_span.get(off, []), cfg
             )
-            # pred.py:43-55 verbatim semantics via reference functions
-            preds = REF.parse_output(gen)
+            # pred.py:43-55 verbatim semantics via the textops kernel
+            preds = textops.parse_output(gen)
             lowered = text.lower()
             for p in sorted(set(preds), key=_mixed_key):
                 if not isinstance(p, tuple) or len(p) != 2 or p[0] == "":
                     continue
                 mention, label_name = p
                 label = NAMES2LABELS.get(label_name, label_name)
-                for s, e in REF.regex(lowered, mention):
+                for s, e in textops.regex_ground(lowered, mention):
                     out.append(
                         {
                             "doc_id": d["doc_id"],
@@ -67,7 +68,7 @@ def oracle_mentions(cfg: SynthConfig) -> list[dict[str, Any]]:
                             "start": s,
                             "end": e,
                             "label": label,
-                            "mention_norm": REF.normalize_answer(lowered[s:e]),
+                            "mention_norm": textops.normalize_answer(lowered[s:e]),
                         }
                     )
     return out

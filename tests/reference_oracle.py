@@ -18,12 +18,21 @@ functions).
 
 from __future__ import annotations
 
+import functools
 import textwrap
 from pathlib import Path
 from types import SimpleNamespace
 from typing import Any, Iterable, Iterator, Optional, Union
 
+import pytest
+
 REF_DIR = Path("/root/reference")
+
+# tests that compare against the reference tree itself (not the in-repo
+# kernels) skip, with this reason, where the tree is not checked out
+requires_reference = pytest.mark.skipif(
+    not REF_DIR.is_dir(),
+    reason="reference source tree (reference_oracle.REF_DIR) not present")
 
 
 def _extract_def(path: Path, name: str) -> str:
@@ -52,6 +61,13 @@ def _extract_def(path: Path, name: str) -> str:
             break
     block = "\n".join(lines[start:end])
     return textwrap.dedent(block)
+
+
+@functools.lru_cache(maxsize=None)
+def reference() -> SimpleNamespace:
+    """load_reference(), loaded on first use and shared: importing a test
+    module never touches the reference tree."""
+    return load_reference()
 
 
 def load_reference() -> SimpleNamespace:

@@ -7,7 +7,8 @@ from __future__ import annotations
 import pytest
 
 from generative_ner_spark.operators import detect
-from tests.reference_loop import NAMES2LABELS, REF
+from tests.reference_loop import NAMES2LABELS
+from tests.reference_oracle import reference, requires_reference
 
 ADVERSARIAL = [
     # (text, generated_text)
@@ -32,7 +33,7 @@ ADVERSARIAL = [
 def _pure_chain(text: str, gen: str) -> set[tuple]:
     """pred.py:43-55 via the reference's extracted functions."""
     spans = set()
-    preds = REF.parse_output(gen)
+    preds = reference().parse_output(gen)
     lowered = text.lower()
     for p in sorted(
         set(preds),
@@ -42,11 +43,12 @@ def _pure_chain(text: str, gen: str) -> set[tuple]:
             continue
         mention, name = p
         label = NAMES2LABELS.get(name, name)
-        for s, e in REF.regex(lowered, mention):
+        for s, e in reference().regex(lowered, mention):
             spans.add((s, e, label))
     return spans
 
 
+@requires_reference
 def test_adversarial_generations_through_spark(spark):
     rows = [
         (f"e{i}", "d", i, text, gen)
@@ -68,6 +70,7 @@ def test_adversarial_generations_through_spark(spark):
         )
 
 
+@requires_reference
 def test_mention_norm_unicode_roundtrip(spark):
     """mention_norm stays consistent with normalize_answer for unicode."""
     rows = [("e0", "d", 0, "crème brûlée time", '[("crème brûlée", "miscellaneous")]')]
@@ -78,7 +81,7 @@ def test_mention_norm_unicode_roundtrip(spark):
     )
     out = detect.ground(gens).collect()
     assert len(out) == 1
-    assert out[0].mention_norm == REF.normalize_answer("crème brûlée")
+    assert out[0].mention_norm == reference().normalize_answer("crème brûlée")
 
 
 def test_md5_hash_family_twins_fuzz(spark):

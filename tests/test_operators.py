@@ -18,7 +18,7 @@ from generative_ner_spark.operators import (
 )
 from generative_ner_spark.sources import conll, corpus
 from generative_ner_spark.sources.synth import LABELS2NAMES, SynthConfig
-from tests.reference_loop import NAMES2LABELS, REF
+from tests.reference_oracle import requires_reference
 
 CONLL_SAMPLE = """-DOCSTART- -X- -X- O
 
@@ -120,12 +120,12 @@ class TestIndividualFormat:
                     gen = synth.stub_generation_individual(
                         eid, text, golds_by_off.get(off, []), label, cfg
                     )
-                    preds = REF.parse_output(gen)
+                    preds = textops.parse_output(gen)
                     lowered = text.lower()
                     for p in sorted(set(preds), key=lambda x: (isinstance(x, tuple), x if isinstance(x, tuple) else (x,))):
                         if not isinstance(p, str) or p == "":
                             continue
-                        for s, e in REF.regex(lowered, p):
+                        for s, e in textops.regex_ground(lowered, p):
                             want.add((d["doc_id"], off, s, e, label))
         assert got == want
 
@@ -784,6 +784,7 @@ class TestRunGptCli:
         assert rc2 == 0 and out2[-1]["actual_usd"] > 0
         assert "budget_exceeded" not in out2[-1]
 
+    @requires_reference
     def test_reference_yaml_config_drives_cli(self, spark, tmp_path, capsys):
         """The reference's OWN configs/config_gpt.yaml (read-only) drives the
         Spark CLI end-to-end in estimate mode: mode defaults to 'estimate'
@@ -971,6 +972,7 @@ class TestCost:
         spec.loader.exec_module(mod)
         return mod
 
+    @requires_reference
     def test_fee_table_parity_with_reference(self):
         """count_fee == the reference's count_fee for EVERY model the
         reference supports, sync and batch; superseded models raise the
