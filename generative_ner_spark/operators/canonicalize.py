@@ -9,9 +9,9 @@ technique stack, one lazy Spark plan up to the components step:
   2. k MinHash values per set in one vectorized numpy kernel
      (mapInPandas, k-min or one-permutation scheme)
   3. b bands of r hashes -> band_hash, explode, self-join on
-     band_hash = candidate pairs, the shingle sets riding along as
-     payload                                                   (LSH blocking)
-  4. exact Jaccard verification on the deduplicated pairs     (array ops)
+     band_hash = candidate pairs                               (LSH blocking)
+  4. exact Jaccard verification: both ids' shingle sets joined onto
+     the deduplicated pairs                                    (array ops)
   5. connected components by alternating large-star/small-star
      DataFrame joins (Kiveris et al., "Connected Components in
      MapReduce and Beyond", SoCC'14) with localCheckpoint per
@@ -114,7 +114,7 @@ def shingle_hash_rows(
 
 
 def _signatures(sets: DataFrame, k: int, scheme: str) -> DataFrame:
-    """(id, shingles) -> (id, shingles, minhash ARRAY<LONG>): THE MinHash
+    """(id, shingles) -> (id, minhash ARRAY<LONG>): THE MinHash
     kernel behind every signature path. ``shingles`` is an id's set of
     full-width shingle hashes; each hash h is folded to [0, p) and the
     k slots are computed in one vectorized numpy pass per Arrow batch:
@@ -153,11 +153,10 @@ def _signatures(sets: DataFrame, k: int, scheme: str) -> DataFrame:
                 dense = (np.minimum.reduceat(h, starts)[:, None]
                          + dense_offsets) % _MH_P
                 sig = np.where(sig == _MH_P, dense, sig)
-            yield pdf.assign(minhash=list(sig))
+            yield pdf[["id"]].assign(minhash=list(sig))
 
     id_t = sets.schema["id"].dataType.simpleString()
-    return sets.mapInPandas(
-        kernel, f"id {id_t}, shingles array<bigint>, minhash array<bigint>")
+    return sets.mapInPandas(kernel, f"id {id_t}, minhash array<bigint>")
 
 
 def _array_signatures(sh_df: DataFrame, id_col: str, shingle_col: str,
@@ -166,7 +165,7 @@ def _array_signatures(sh_df: DataFrame, id_col: str, shingle_col: str,
         F.col(id_col).alias("id"),
         F.transform(shingle_col, lambda s: _raw_shingle_hash(s, hash_family))
         .alias("shingles"))
-    return _signatures(hashed, k, scheme).select("id", "minhash")
+    return _signatures(hashed, k, scheme)
 
 
 def minhash_df(sh_df: DataFrame, id_col: str = "id",
@@ -220,7 +219,7 @@ def capped_self_join_pairs(
 
 def _capped_pairs(rows: DataFrame, bucket_cols: tuple, id_col: str,
                   max_bucket: int | None, metrics: dict | None,
-                  payload_cols: tuple) -> DataFrame:
+                  payload_cols: tuple = ()) -> DataFrame:
     """Lazy plan: drop buckets above ``max_bucket`` (bounding the
     worst-case pair blowup a degenerate corpus causes), self-join within
     the surviving buckets and emit deduplicated (a, b[, <payload>_a,
@@ -292,16 +291,18 @@ def shingle_band_rows(
       by hash, ~2^-60 per-pair collision odds) — ONE groupBy(id) over
       the codegen'd shingle_hash_rows, so the text is scanned and
       hashed once per plan;
-    * ``banded`` (id, shingles, band, band_hash): the _signatures kernel
-      over ``sh``, exploded to one row per band. The shingle set rides
-      along as the exact-Jaccard verify's payload; slim consumers
-      select (id, band, band_hash).
+    * ``banded`` (id, band, band_hash): the _signatures kernel over
+      ``sh``, exploded to one SLIM row per band. The sets stay out of
+      the banding rows: a document's set is ~|text| longs, and the
+      self-join shuffles every band row, so consumers attach ``sh``
+      to their (few) candidate pairs instead.
 
-    ``sh``'s plan is a prefix of ``banded``'s: a caller that runs more
-    than one job over them persists ``sh`` first (and owns that cache).
-    band_hash = xxhash64 over the band's slice of the signature — a
-    single transform lambda, so the expression tree is O(1) in
-    (bands, r).
+    ``sh``'s plan is a prefix of ``banded``'s: within one query Spark
+    reuses its exchange when both branches read the identical plan. A
+    caller that runs more than one job over them persists ``sh`` first
+    (and owns that cache). band_hash = xxhash64 over the band's slice
+    of the signature — a single transform lambda, so the expression
+    tree is O(1) in (bands, r).
     """
     if k % bands != 0:
         raise ValueError(
@@ -317,7 +318,7 @@ def shingle_band_rows(
         .agg(F.sort_array(F.collect_set("_sh")).alias("shingles"))
     )
     banded = _signatures(sh, k, scheme).select(
-        "id", "shingles",
+        "id",
         F.posexplode(
             F.expr(
                 f"transform(sequence(0, {bands - 1}), "
@@ -349,25 +350,35 @@ def lsh_candidate_pairs(
 
     Pass ``metrics`` (a dict) to receive {"capped_buckets", "capped_rows"}:
     the recall loss from the ``max_bucket`` hot-bucket cap, at the cost of
-    one extra small aggregate job. Without it the cap is silent.
+    one extra aggregate job, which runs the signature pass again. Without
+    it the cap is silent.
 
     ``hash_family``: 'xxhash64' (fast path, the production default) or
     'md5' (cross-engine path whose signatures a DuckDB oracle recomputes
     exactly — see _raw_shingle_hash; backs the q20/q31 DuckDB oracles).
 
-    Returns ONE lazy plan and persists nothing: shingle sets -> signature
-    kernel -> band rows carrying the sets -> capped self-join -> dedup ->
-    Jaccard filter. The caller's action runs it; a caller acting on the
-    pairs more than once checkpoints them first (connected_components
-    does).
+    Returns ONE lazy plan and persists nothing: signature kernel ->
+    slim band rows -> capped self-join -> dedup -> the two ids' shingle
+    sets joined onto the pairs -> Jaccard filter. The caller's action
+    runs it; a caller acting on the pairs more than once checkpoints
+    them first (connected_components does).
     """
-    _, banded = shingle_band_rows(entities, id_col, name_col, k=k,
-                                  bands=bands, n=n,
-                                  hash_family=hash_family, scheme=scheme)
+    # a NULL id never pairs (a < b), so it is dropped up front and does
+    # not count toward a bucket's occupancy; the banding and verify
+    # branches then read one plan for ``sh``, whose exchange Spark
+    # reuses, so the text is hashed once per job
+    sh, banded = shingle_band_rows(entities.where(F.col(id_col).isNotNull()),
+                                   id_col, name_col, k=k, bands=bands, n=n,
+                                   hash_family=hash_family, scheme=scheme)
     pairs = _capped_pairs(banded, ("band", "band_hash"), "id", max_bucket,
-                          metrics, payload_cols=("shingles",))
+                          metrics)
+
+    def sets(side):
+        return sh.select(F.col("id").alias(side),
+                         F.col("shingles").alias(f"shingles_{side}"))
+
     return (
-        pairs
+        pairs.join(sets("a"), "a").join(sets("b"), "b")
         .withColumn(
             "jaccard",
             F.size(F.array_intersect("shingles_a", "shingles_b"))

@@ -505,7 +505,6 @@ def write_minhash_index(
         hash_family=hash_family, scheme=scheme,
     )
     sh.persist()  # both writes below read it: hash the text once
-    banded = banded.select("id", "band", "band_hash")
     if max_bucket is not None:
         # deterministic keep set (smallest ids); one slim window shuffle
         # at build time buys map-side probes forever
@@ -586,7 +585,6 @@ def append_to_minhash_index(
         n=m["shingle_n"], hash_family=m["hash_family"], scheme=m["scheme"],
     )
     sh.persist()  # both writes below read it: hash the text once
-    banded = banded.select("id", "band", "band_hash")
     n_buckets = m["n_buckets"]
     # same pre-write repartition as write_minhash_index: one file per
     # touched bucket per append instead of tasks x buckets slivers
@@ -662,10 +660,8 @@ def dedup_against_index(
         n=m["shingle_n"], hash_family=m["hash_family"], scheme=m["scheme"],
     )
     sh_new.persist()  # banding and the verify join both read it
-    banded_new = banded_new.select(
-        "id", "band", "band_hash",
-        F.pmod(F.col("band_hash"), F.lit(n_buckets)).alias("_bkt"),
-    ).persist()
+    banded_new = banded_new.withColumn(
+        "_bkt", F.pmod(F.col("band_hash"), F.lit(n_buckets))).persist()
     small = (
         new_df.select(id_col).limit(max_broadcast_batch_rows + 1).count()
         <= max_broadcast_batch_rows

@@ -87,17 +87,17 @@ def test_kernel_matches_pure_formulas(spark, names_df, family):
 
 
 @pytest.mark.parametrize("family", ["xxhash64", "md5"])
-def test_band_rows_carry_exact_shingle_sets(spark, names_df, family):
+def test_band_rows_and_exact_shingle_sets(spark, names_df, family):
     """shingle_band_rows: ``sh`` holds each id's sorted distinct hash set,
-    and every id gets one band row per band, carrying that set."""
+    and every id gets one slim (id, band, band_hash) row per band."""
     sh, banded = shingle_band_rows(names_df, k=64, bands=16,
                                    hash_family=family)
     want = {f"e{i}": sorted(set(_full_hashes(spark, family, nm)))
             for i, nm in enumerate(NAMES)}
     assert {r.id: list(r.shingles) for r in sh.collect()} == want
+    assert banded.columns == ["id", "band", "band_hash"]
     rows = banded.collect()
     assert Counter(r.id for r in rows) == {i: 16 for i in want}
-    assert all(list(r.shingles) == want[r.id] for r in rows)
     assert {(r.id, r.band) for r in rows} == {
         (i, b) for i in want for b in range(16)}
 
@@ -148,6 +148,18 @@ def test_bucket_cap_metrics(spark):
     metrics = {}
     assert lsh_candidate_pairs(same, max_bucket=9, metrics=metrics).count() == 0
     assert metrics == {"capped_buckets": 16, "capped_rows": 160}
+
+
+def test_null_id_never_pairs_or_counts(spark):
+    """A NULL id cannot pair (a < b), so it does not count toward a
+    bucket's occupancy either: it never evicts pairs through the cap."""
+    df = spark.createDataFrame(
+        [("e1", "acme systems"), ("e2", "acme systems"), (None, "acme systems")],
+        "entity_id string, name string")
+    metrics: dict = {}
+    pairs = lsh_candidate_pairs(df, max_bucket=2, metrics=metrics)
+    assert [tuple(r) for r in pairs.collect()] == [("e1", "e2", 1.0)]
+    assert metrics == {"capped_buckets": 0, "capped_rows": 0}
 
 
 def test_shared_entity_id_merges_shingle_sets(spark):

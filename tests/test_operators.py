@@ -18,7 +18,7 @@ from generative_ner_spark.operators import (
 )
 from generative_ner_spark.sources import conll, corpus
 from generative_ner_spark.sources.synth import LABELS2NAMES, SynthConfig
-from tests.reference_oracle import requires_reference
+from tests.reference_oracle import reference, requires_reference
 
 CONLL_SAMPLE = """-DOCSTART- -X- -X- O
 
@@ -89,12 +89,41 @@ class TestConll:
             assert d["examples"][0]["entities"][0]["label"] == "PER"
 
 
+def _stub_generations(cfg, individual=True):
+    """(doc_id, span_offset, label, lowered text, generation) for every
+    text span of the synthetic corpus: one per label in the individual
+    format, one per span (label None) in the collective format."""
+    from generative_ner_spark.sources import synth
+
+    catalog = synth.entity_catalog(cfg)
+    for i in range(cfg.n_docs):
+        d = synth.make_document(i, cfg, catalog)
+        golds_by_off = {}
+        for g in d["golds"]:
+            golds_by_off.setdefault(g["span_offset"], []).append(
+                (g["start"], g["end"], g["label"])
+            )
+        for span in d["spans"]:
+            if span["kind"] != "text":
+                continue
+            text, off = span["text"], span["offset"]
+            eid = f"{d['doc_id']}:{off}"
+            golds = golds_by_off.get(off, [])
+            if not individual:
+                yield (d["doc_id"], off, None, text.lower(),
+                       synth.stub_generation_collective(eid, text, golds, cfg))
+                continue
+            for label in sorted(LABELS2NAMES):
+                yield (d["doc_id"], off, label, text.lower(),
+                       synth.stub_generation_individual(
+                           eid, text, golds, label, cfg))
+
+
 class TestIndividualFormat:
     def test_matches_reference_loop(self, spark):
         """Individual-format pipeline == pure-python reference loop
-        (pred.py:56-65 semantics driven by the shared stub)."""
-        from generative_ner_spark.sources import synth
-
+        (pred.py:56-65 semantics driven by the shared stub, parsed and
+        grounded by the textops kernel)."""
         cfg = SynthConfig(n_docs=40)
         ex = corpus.synth_examples_with_golds(spark, cfg, num_partitions=2)
         got = {
@@ -103,31 +132,34 @@ class TestIndividualFormat:
         }
 
         want = set()
-        catalog = synth.entity_catalog(cfg)
-        for i in range(cfg.n_docs):
-            d = synth.make_document(i, cfg, catalog)
-            golds_by_off = {}
-            for g in d["golds"]:
-                golds_by_off.setdefault(g["span_offset"], []).append(
-                    (g["start"], g["end"], g["label"])
-                )
-            for span in d["spans"]:
-                if span["kind"] != "text":
+        for doc_id, off, label, lowered, gen in _stub_generations(cfg):
+            preds = textops.parse_output(gen)
+            for p in sorted(set(preds), key=lambda x: (isinstance(x, tuple), x if isinstance(x, tuple) else (x,))):
+                if not isinstance(p, str) or p == "":
                     continue
-                text, off = span["text"], span["offset"]
-                eid = f"{d['doc_id']}:{off}"
-                for label in sorted(LABELS2NAMES):
-                    gen = synth.stub_generation_individual(
-                        eid, text, golds_by_off.get(off, []), label, cfg
-                    )
-                    preds = textops.parse_output(gen)
-                    lowered = text.lower()
-                    for p in sorted(set(preds), key=lambda x: (isinstance(x, tuple), x if isinstance(x, tuple) else (x,))):
-                        if not isinstance(p, str) or p == "":
-                            continue
-                        for s, e in textops.regex_ground(lowered, p):
-                            want.add((d["doc_id"], off, s, e, label))
+                for s, e in textops.regex_ground(lowered, p):
+                    want.add((doc_id, off, s, e, label))
         assert got == want
+
+    @requires_reference
+    @pytest.mark.parametrize("n_docs,individual", [(40, True), (120, False)])
+    def test_textops_parse_and_ground_match_reference(self, n_docs,
+                                                      individual):
+        """textops.parse_output/regex_ground == the reference's own
+        parse_output/regex on every stub generation of the corpora the
+        oracle loops parse: this test's individual-format corpus and
+        test_pipeline's collective one (reference_loop.oracle_mentions).
+        The loops use textops, so this pins them to the reference."""
+        ref = reference()
+        for *_, lowered, gen in _stub_generations(SynthConfig(n_docs=n_docs),
+                                                  individual):
+            preds = textops.parse_output(gen)
+            assert preds == ref.parse_output(gen)
+            for p in set(preds):
+                mention = p[0] if isinstance(p, tuple) else p
+                if isinstance(mention, str) and mention:
+                    assert (textops.regex_ground(lowered, mention)
+                            == ref.regex(lowered, mention))
 
     def test_label_order_matches_reference_global_rng(self):
         """individual_label_order(rng=random) == preprocessor.py:173-175
