@@ -1,196 +1,353 @@
-"""Throughput-scaling evidence: same job + input at two parallelism levels.
+"""Throughput-scaling evidence: one family's job on the same input at two
+parallelism levels.
 
-The north rule requires >=0.8 throughput-scaling efficiency between N and 4N
-executors; a real multi-executor cluster isn't available in the sandbox, so
-(per BASELINE.md) the proxy is the SAME pipeline + SAME input at two
-parallelism levels (default local[4] vs local[16] — see main() for why,
-override with SCALE_LEVELS="LO,HI"). Each level runs in its own subprocess
-(one JVM per master setting), reports docs/sec + triples/sec, and
-efficiency = speedup / (HI/LO). Results land in BENCH/SCALING.md (and are
-echoed as one JSON line).
+The north rule asks for >= 0.8 throughput-scaling efficiency between N and
+4N executors. Without a multi-executor cluster the proxy (BASELINE.md) is
+the same job on the same input at ``local[lo]`` and ``local[hi]``, with
+``lo = max(1, nproc // 4)`` and ``hi = 4 * lo``. Each level runs in a fresh
+JVM, in a spawned copy of this module, with 2g of heap and two shuffle
+partitions per core: on a cluster every executor brings its own heap, and a
+fixed heap shared by more task threads turns GC into the serial bottleneck.
 
-Usage: python bench_scaling.py [n_docs]  (default 320000 — big enough that
-parallel work dominates the ~28 s fixed cost; see BENCH/SCALING.md)
+Every family in ``FAMILIES`` gives
+  build    (spark, size) -> inputs, persisted and counted before the clock;
+  run      the timed call, inputs -> output DataFrame;
+  project  output -> the columns the fingerprint covers;
+  check    (output, size) -> bool, the family's analytic check, or None.
+A level runs one warm-up trial and ``TRIALS`` timed trials. Each trial
+persists the output, fingerprints the projection (row count, bit_xor and
+bounded sum of xxhash64; independent of row order and partitioning) and
+runs the check. All trials of a level, and the two levels, must give the
+same fingerprint. Efficiency is ``speedup / (hi / lo)``.
+
+    python bench_scaling.py --family {kg,fuzzy,graph,walks,lines,temporal} [--size N]
+
+Prints one JSON line and writes BENCH/SCALING_<FAMILY>.md; BENCH/SCALING.md
+is the hand-written index and measurement history.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
+import multiprocessing
 import os
-import subprocess
 import sys
+import time
+from dataclasses import dataclass
+from typing import Callable
 
-RUNNER = r"""
-import json, sys, time
-master, n_docs = sys.argv[1], int(sys.argv[2])
-cores = int(master.split("[")[1].rstrip("]"))
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from generative_ner_spark.operators import dedup, graph, temporal
+from generative_ner_spark.operators.canonicalize import canonical_map
+from generative_ner_spark.plans.pipeline import run_pipeline
 from generative_ner_spark.plans.session import build_session
 from generative_ner_spark.sources import corpus
 from generative_ner_spark.sources.synth import SynthConfig
-from generative_ner_spark.plans.pipeline import run_pipeline
-spark = build_session(app_name=f"scale-{cores}", master=master,
-                      shuffle_partitions=cores)
-spark.sparkContext.setLogLevel("ERROR")
-# warm JVM + python workers so the measurement is the pipeline, not startup
-cfg_w = SynthConfig(n_docs=64)
-res = run_pipeline(spark, None, None, corpus.alias_df(spark, cfg_w),
-                   corpus.entities_df(spark, cfg_w), cfg_w,
-                   examples_with_golds=corpus.synth_examples_with_golds(spark, cfg_w, cores))
-res.triples.count()
 
-# stub_compute_iters: calibrated model-compute stand-in (~0.9us/iter) so
-# the parallel fraction reflects a real generative-NER workload (SURVEY.md
-# §7 hard-part (d)); correctness tests keep it at 0.
-cfg = SynthConfig(n_docs=n_docs, stub_compute_iters=2000)
-examples = corpus.synth_examples_with_golds(spark, cfg, num_partitions=cores * 2)
-# input materialized before the clock: measure the pipeline, not the generator
-examples = examples.persist()
-examples.count()
-# entity canonicalization depends only on the (fixed) entity catalog — a
-# dimension job computed once per catalog version in production; computed
-# outside the timed region and its cost reported separately
-from generative_ner_spark.operators.canonicalize import canonical_map
-t0 = time.time()
-canon = canonical_map(corpus.entities_df(spark, cfg)).persist()
-canon.count()
-canon_sec = time.time() - t0
-best = None
-for _trial in range(3):  # best-of-3 at BOTH levels: sandbox background
-    # tenant load oscillates on minute scales, so asymmetric trial counts
-    # bias whichever level happened to run during a quiet window
-    t0 = time.time()
-    res = run_pipeline(spark, None, None, corpus.alias_df(spark, cfg),
-                       corpus.entities_df(spark, cfg), cfg,
-                       examples_with_golds=examples, canonical_df=canon)
-    n_triples = res.triples.count()
-    wall = time.time() - t0
-    best = wall if best is None else min(best, wall)
-wall = best
-print("SCALERESULT " + json.dumps({
-    "master": master, "cores": cores, "n_docs": n_docs,
-    "wall_sec": round(wall, 2), "canon_dim_job_sec": round(canon_sec, 2),
-    "n_triples": n_triples,
-    "docs_per_sec": round(n_docs / wall, 2),
-    "triples_per_sec": round(n_triples / wall, 2),
-}))
-"""
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.append(os.path.join(REPO, "perfbench"))  # workloads' own imports
+from perfbench.run import _cpu_jiffies  # noqa: E402
+from perfbench.workloads import fingerprint  # noqa: E402
+
+TRIALS = 2  # timed trials per level, after one warm-up trial
+TIMEOUT_S = 3600  # per level
+WALK_LEN = 4
 
 
-def run_level(master: str, n_docs: int, timeout: int | None = None) -> dict:
-    # best-of-3 at 640k docs on 4 cores runs ~40 min — scale the cap with
-    # the input instead of silently killing the subprocess at 30 min
-    timeout = timeout or max(1800, int(n_docs / 160_000 * 1200))
-    out = subprocess.run(
-        [sys.executable, "-c", RUNNER, master, str(n_docs)],
-        capture_output=True, text=True, cwd=os.path.dirname(os.path.abspath(__file__)),
-        timeout=timeout,
-    )
-    for line in out.stdout.splitlines():
-        if line.startswith("SCALERESULT "):
-            return json.loads(line[len("SCALERESULT "):])
-    raise RuntimeError(
-        f"no result from {master}: stdout={out.stdout[-2000:]} stderr={out.stderr[-2000:]}"
-    )
+@dataclass(frozen=True)
+class Family:
+    unit: str  # what --size counts
+    size: int  # default --size: local[1] runs a level in a few minutes
+    build: Callable[[SparkSession, int], tuple]
+    run: Callable[[tuple], DataFrame]
+    project: Callable[[DataFrame], DataFrame]
+    check: Callable[[DataFrame, int], bool] | None = None
 
 
-HISTORY = """
-## Measurement history (quiet-window runs)
+def _materialize(spark: SparkSession, *dfs: DataFrame) -> tuple:
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    out = tuple(df.repartition(n).persist() for df in dfs)
+    for df in out:
+        df.count()
+    return out
 
-Round 3 (2026-08-16) established the method: `uptime` checked before each
-launch (1-min load < 4), best-of-3 per level, and the fixed-cost
-decomposition below. Rounds 4-5 re-ran the same 320k pair on quiet
-windows:
 
-| round | n_docs | local[4] wall | local[16] wall | speedup | efficiency |
-|---|---|---|---|---|---|
-| r3 | 160,000 | 135.1 s | 54.8 s | 2.47x | 0.617 |
-| r3 | 320,000 | 341.9 s | 92.3 s | 3.71x | 0.926 |
-| r4 | 320,000 | 306.6 s | 71.1 s | 4.31x | **1.078** |
-| r5 | 320,000 | 257.3 s | 68.2 s | 3.77x | 0.943 |
+# -- kg: the pipeline on the calibrated compute stand-in -------------------
 
-The r4 number is nominally superlinear — read it as "at or near the 4x
-ideal within sandbox noise", not as a >1 claim: both walls improved on a
-quieter window, and the residual fixed component (C ~= 28 s of plan
-compile / scheduling / python-worker spin-up, solved from T(p) = C + W/p
-in the r3 decomposition) biases the LO level harder whenever any
-background tenant touches it. The honest statement is unchanged from r3:
-the PLAN scales (one mention-stream shuffle, broadcast-only joins,
-partition-local python compute) and every quiet 320k measurement lands
->= 0.92.
+def _kg_build(spark: SparkSession, size: int) -> tuple:
+    # stub_compute_iters: ~0.9 us/iter of model-compute stand-in, so the
+    # parallel fraction is that of a generative-NER workload
+    cfg = SynthConfig(n_docs=size, stub_compute_iters=2000)
+    entities = corpus.entities_df(spark, cfg)
+    # the canonical map depends only on the entity catalog: a dimension
+    # job computed once per catalog version, outside the clock
+    examples, canon = _materialize(
+        spark, corpus.synth_examples_with_golds(spark, cfg),
+        canonical_map(entities))
+    return examples, canon, corpus.alias_df(spark, cfg), entities, cfg
 
-Why 160k under-measures: at a 55 s local[16] wall the ~28 s fixed
-component eats the ratio. Per-stage decomposition (r3, same window):
-mention detect (Arrow mapInPandas with the calibrated compute stand-in)
-scales 0.85; a pure mapInPandas md5-burn microbenchmark scales 0.87 (the
-sandbox's practical 4->16 ceiling on 32 cores); the tail (broadcast link
-+ canonical join + fused triple groupBy) is ~4 s at local[16] — never
-the bottleneck.
-"""
+
+def _kg_run(inp: tuple) -> DataFrame:
+    examples, canon, alias, entities, cfg = inp
+    return run_pipeline(examples.sparkSession, None, None, alias, entities,
+                        cfg, examples_with_golds=examples,
+                        canonical_df=canon).triples
+
+
+# -- fuzzy: near_dedup_documents over planted clusters ---------------------
+
+N_REP = 4
+
+
+def _fuzzy_build(spark: SparkSession, size: int) -> tuple:
+    # n_base clusters x N_REP replicas that share 40 md5-derived tokens
+    # and differ in one tail token (5-gram Jaccard ~0.947); clusters share
+    # no tokens, so the survivors are exactly {0..n_base-1}
+    n_base = size // N_REP
+    tokens = F.expr(
+        "transform(sequence(0, 39), i -> substring(md5(concat("
+        f"cast(id % {n_base} as string), '-', cast(i as string))), 1, 8))")
+    tail = F.concat(F.lit("tail"),
+                    (F.col("id") / n_base).cast("int").cast("string"))
+    return _materialize(spark, spark.range(size).select(
+        F.col("id").alias("doc_id"),
+        F.concat_ws(" ", F.concat_ws(" ", tokens), tail).alias("text")))
+
+
+def _fuzzy_run(inp: tuple) -> DataFrame:
+    return dedup.near_dedup_documents(inp[0], scheme="oph")
+
+
+def _fuzzy_check(out: DataFrame, size: int) -> bool:
+    n_base = size // N_REP
+    n, s = out.agg(F.count(F.lit(1)), F.sum("doc_id")).first()
+    return n == n_base and s == n_base * (n_base - 1) // 2
+
+
+# -- graph, walks: a cubed-uniform (hub-skewed) undirected edge list -------
+
+def _edges(spark: SparkSession, size: int) -> tuple:
+    # endpoint a uniform over n nodes, b = floor(n * u^3) so low ids become
+    # hubs; self-loops dropped, canonical src < dst, distinct
+    n = max(size // 5, 2)
+    u = F.pmod(F.xxhash64("id", F.lit("b")), F.lit(1 << 31)) / float(1 << 31)
+    raw = spark.range(size).select(
+        F.pmod(F.xxhash64("id", F.lit("a")), F.lit(n)).alias("x"),
+        F.floor(F.lit(float(n)) * F.pow(u, 3.0)).cast("long").alias("y"),
+    ).where(F.col("x") != F.col("y"))
+    return _materialize(spark, raw.select(
+        F.least("x", "y").alias("src"),
+        F.greatest("x", "y").alias("dst")).distinct())
+
+
+def _pagerank(inp: tuple) -> DataFrame:
+    # round_to=None: per-node rounding would put ~1e-4 of error on the
+    # mass sum; the projection rounds instead
+    return graph.pagerank(inp[0], n_iter=5, round_to=None)
+
+
+def _pagerank_check(out: DataFrame, size: int) -> bool:
+    return abs(out.agg(F.sum("pr")).first()[0] - 1.0) < 1e-9
+
+
+def _walks(inp: tuple) -> DataFrame:
+    return graph.random_walks(inp[0], walk_len=WALK_LEN)
+
+
+def _walks_check(out: DataFrame, size: int) -> bool:
+    # every node of an undirected edge list has a neighbour, so no walk
+    # stops early: each step has as many rows as step 0
+    per_step = out.groupBy("step").count().collect()
+    return (len(per_step) == WALK_LEN + 1
+            and len({r["count"] for r in per_step}) == 1)
+
+
+# -- lines: remove_boilerplate_lines, one surviving line per doc -----------
+
+def _lines_build(spark: SparkSession, size: int) -> tuple:
+    # 4 lines a doc: a banner in every doc, a line shared by ~1000 docs, a
+    # unique 40-token line and its repeat; only the unique line survives
+    uniq = F.concat_ws(" ", F.expr(
+        "transform(sequence(0, 39), i -> substring(md5(concat("
+        "cast(id as string), ':', cast(i as string))), 1, 8))"))
+    group = F.concat(F.lit("group boilerplate notice "),
+                     (F.col("id") % max(size // 1000, 1)).cast("string"))
+    return _materialize(spark, spark.range(size).select(
+        F.col("id").alias("doc_id"),
+        F.concat_ws("\n", F.lit("subscribe to the global banner"), group,
+                    uniq, uniq).alias("text")))
+
+
+def _lines_run(inp: tuple) -> DataFrame:
+    return dedup.remove_boilerplate_lines(inp[0], min_docs=10)
+
+
+def _lines_check(out: DataFrame, size: int) -> bool:
+    n, multi = out.agg(F.count(F.lit(1)), F.count(
+        F.when(F.col("text").contains("\n"), 1))).first()
+    return n == size and multi == 0
+
+
+# -- temporal: sessionize + merge_changelog --------------------------------
+
+def _temporal_build(spark: SparkSession, size: int) -> tuple:
+    # events: 100 per user, event k at k*600 s plus 4000 s before every
+    # 7th, so each user has several 1800 s-gap sessions. changelog: size
+    # changes over size/5 snapshot keys, ~1/10 of them deletes
+    n_users, n_keys = max(size // 100, 1), max(size // 5, 1)
+    k = (F.col("id") / n_users).cast("long")
+    events = spark.range(size).select(
+        (F.col("id") % n_users).alias("user_id"),
+        F.col("id").alias("event_id"),
+        F.timestamp_seconds(F.lit(1_700_000_000) + k * 600
+                            + F.floor(k / 7) * 4000).alias("ts"),
+        (F.col("id") % 997).cast("double").alias("value"))
+    snapshot = spark.range(n_keys).select(
+        F.col("id").alias("k"),
+        F.concat(F.lit("base:"), F.col("id").cast("string")).alias("val"))
+    changes = spark.range(size).select(
+        F.pmod(F.xxhash64("id"), F.lit(n_keys)).alias("k"),
+        F.concat(F.lit("chg:"), F.col("id").cast("string")).alias("val"),
+        F.timestamp_seconds(F.lit(1_700_000_000) + F.col("id") % 86_400)
+        .alias("ts"),
+        F.when(F.pmod(F.xxhash64("id", F.lit(7)), F.lit(10)) == 0,
+               F.lit("delete")).otherwise(F.lit("upsert")).alias("op"),
+        F.col("id").alias("seq"))
+    return _materialize(spark, events, snapshot, changes)
+
+
+def _temporal_run(inp: tuple) -> DataFrame:
+    events, snapshot, changes = inp
+    sessions = temporal.sessionize(
+        events, key_cols="user_id", ts_col="ts", gap_seconds=1800,
+        seq_col="event_id", value_aggs={"v_sum": ("value", "sum")})
+    merged = temporal.merge_changelog(snapshot, changes, key_cols="k",
+                                      ts_col="ts", op_col="op", seq_col="seq")
+    # one frame of (operator, row hash) carries both outputs
+    return sessions.select(F.lit("sessionize").alias("op"), F.xxhash64(
+        *sessions.columns).alias("row")).unionByName(merged.select(
+            F.lit("merge_changelog").alias("op"),
+            F.xxhash64(*merged.columns).alias("row")))
+
+
+FAMILIES = {
+    "kg": Family("docs", 20_000, _kg_build, _kg_run, lambda out: out.select(
+        "subj_id", "pred", "obj_id", "doc_id", "span_offset")),
+    "fuzzy": Family("docs", 20_000, _fuzzy_build, _fuzzy_run,
+                    lambda out: out.select("doc_id"), _fuzzy_check),
+    "graph": Family("edges", 2_000_000, _edges, _pagerank, lambda out: out.select(
+        "node", "degree", F.round("pr", 4).alias("pr")), _pagerank_check),
+    "walks": Family("edges", 5_000_000, _edges, _walks, lambda out: out.select(
+        "walk_id", "step", "node"), _walks_check),
+    "lines": Family("docs", 500_000, _lines_build, _lines_run,
+                    lambda out: out.select("doc_id", "text"), _lines_check),
+    "temporal": Family("events", 5_000_000, _temporal_build, _temporal_run,
+                       lambda out: out),
+}
+
+
+def trial(fam: Family, inp: tuple, size: int) -> tuple[float, str]:
+    """One timed run -> (wall seconds, fingerprint); raises when the
+    family's analytic check fails."""
+    t0 = time.perf_counter()
+    out = fam.run(inp).persist()
+    try:
+        view = fam.project(out)
+        fp = fingerprint(view, view.columns)
+        wall = time.perf_counter() - t0
+        ok = fam.check is None or fam.check(out, size)
+    finally:
+        out.unpersist()
+    if not ok:
+        raise RuntimeError(f"analytic check failed (fingerprint {fp})")
+    return wall, fp
+
+
+def measure(family: str, size: int, cores: int) -> dict:
+    """One level in this process: a fresh session at local[cores]."""
+    fam = FAMILIES[family]
+    spark = build_session(
+        app_name=f"scale-{family}-{cores}", master=f"local[{cores}]",
+        shuffle_partitions=2 * cores,
+        extra_conf={"spark.driver.memory": f"{2 * cores}g"})
+    spark.sparkContext.setLogLevel("ERROR")
+    try:
+        inp = fam.build(spark, size)
+        runs = [trial(fam, inp, size) for _ in range(1 + TRIALS)]
+    finally:
+        spark.stop()
+    walls = [round(w, 2) for w, _ in runs[1:]]
+    return {"cores": cores, "wall_s": min(walls), "trial_walls_s": walls,
+            "rate": round(size / min(walls), 1),
+            "fingerprints": sorted({fp for _, fp in runs})}
+
+
+def _level(family: str, size: int, cores: int) -> dict:
+    with multiprocessing.get_context("spawn").Pool(1) as pool:
+        return pool.apply_async(measure, (family, size, cores)).get(TIMEOUT_S)
 
 
 def main() -> None:
-    # 320k default: T(p) = C + W/p with C ~= 28 s of fixed cost (plan
-    # compile, scheduling, broadcasts) — at 160k the local[16] wall is only
-    # ~55 s and the fixed cost eats the ratio (measured 0.617 on a QUIET
-    # machine); at 320k the parallel work dominates (measured 0.926).
-    # See BENCH/SCALING.md "Measurement history".
-    n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 320000
-    # N and 4N cores. Default 4/16: the shared sandbox carries a persistent
-    # ~6-9 core background load from other tenants, so local[32] never gets
-    # 32 cores (measured: detect scaled 8->32 at exactly the 23-effective-
-    # core ratio). 4/16 keeps BOTH levels uncontended — the honest N->4N
-    # proxy. Override with SCALE_LEVELS="8,32" on an idle machine.
-    spec = os.environ.get("SCALE_LEVELS", "4,16")
-    levels = spec.split(",")
-    if len(levels) != 2:
-        raise SystemExit(f'SCALE_LEVELS expects "LO,HI" core counts, got '
-                         f"{spec!r}")
-    try:
-        n_lo, n_hi = int(levels[0]), int(levels[1])
-    except ValueError:
-        raise SystemExit(f'SCALE_LEVELS expects "LO,HI" integers, got '
-                         f"{spec!r}") from None
-    lo = run_level(f"local[{n_lo}]", n_docs)
-    hi = run_level(f"local[{n_hi}]", n_docs)
-    speedup = hi["triples_per_sec"] / lo["triples_per_sec"]
-    # efficiency vs the ACTUAL core ratio of the chosen pair, not a
-    # hardcoded 4x (a 2x pair at near-perfect scaling used to report 0.5)
-    efficiency = speedup / (n_hi / n_lo)
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--family", required=True, choices=sorted(FAMILIES))
+    ap.add_argument("--size", type=int, help="input size in the family's "
+                    "unit (default: the size of the committed evidence)")
+    args = ap.parse_args()
+    fam = FAMILIES[args.family]
+    size = args.size or fam.size
+    os.chdir(REPO)  # Python workers import the package from the cwd
+    nproc = len(os.sched_getaffinity(0))
+    lo_cores = max(1, nproc // 4)
+    load0, (steal0, total0) = os.getloadavg()[0], _cpu_jiffies()
+    lo = _level(args.family, size, lo_cores)
+    hi = _level(args.family, size, 4 * lo_cores)
+    steal1, total1 = _cpu_jiffies()
+    speedup = lo["wall_s"] / hi["wall_s"]
     summary = {
-        "n_docs": n_docs,
-        "lo": lo,
-        "hi": hi,
-        "levels": [n_lo, n_hi],
-        "speedup_lo_to_hi": round(speedup, 3),
-        "scaling_efficiency": round(efficiency, 3),
-        "target": 0.8,
-        "meets_target": efficiency >= 0.8,
+        "family": args.family, "size": size, "unit": fam.unit,
+        "trials": TRIALS, "lo": lo, "hi": hi,
+        "speedup": round(speedup, 3),
+        "efficiency": round(speedup / (hi["cores"] / lo["cores"]), 3),
+        "trials_agree": len(lo["fingerprints"]) == len(hi["fingerprints"]) == 1,
+        "levels_agree": lo["fingerprints"] == hi["fingerprints"],
+        "nproc": nproc,
+        "load_1min": [round(load0, 2), round(os.getloadavg()[0], 2)],
+        "cpu_steal": round((steal1 - steal0) / max(total1 - total0, 1), 4),
+        "date": time.strftime("%Y-%m-%d"),
     }
-    # pin the evidence file to the REPO, not the caller's cwd (run_level
-    # already pins the subprocess cwd the same way)
-    repo = os.path.dirname(os.path.abspath(__file__))
-    os.makedirs(os.path.join(repo, "BENCH"), exist_ok=True)
-    with open(os.path.join(repo, "BENCH", "SCALING.md"), "w") as f:
-        f.write(
-            "# Throughput-scaling evidence (north rule: efficiency >= 0.8, N -> 4N)\n\n"
-            "Same KG pipeline (mention detect -> link -> canonicalize -> triples),\n"
-            f"same deterministic synthetic input ({n_docs} interleaved docs),\n"
-            f"run in separate JVMs at local[{n_lo}] and local[{n_hi}] (best of 3 trials\n"
-            "per level; the shared sandbox carries ~6-9 load of background\n"
-            "tenants, so trials damp external contention spikes)\n"
-            "(sandbox proxy for N vs 4N executors per BASELINE.md).\n\n"
-            "| level | cores | wall (s) | docs/s | triples/s |\n"
-            "|---|---|---|---|---|\n"
-            f"| local[{n_lo}] | {n_lo} | {lo['wall_sec']} | {lo['docs_per_sec']} | {lo['triples_per_sec']} |\n"
-            f"| local[{n_hi}] | {n_hi} | {hi['wall_sec']} | {hi['docs_per_sec']} | {hi['triples_per_sec']} |\n\n"
-            f"speedup {n_lo}->{n_hi}: **{summary['speedup_lo_to_hi']}x** (ideal 4x)\n\n"
-            f"scaling efficiency: **{summary['scaling_efficiency']}** "
-            f"(target >= 0.8: {'MET' if summary['meets_target'] else 'NOT MET'})\n\n"
-            f"triples identical across levels: {lo['n_triples'] == hi['n_triples']} "
-            f"({lo['n_triples']} vs {hi['n_triples']})\n"
-            + HISTORY
-        )
+    with open(os.path.join(REPO, "BENCH",
+                           f"SCALING_{args.family.upper()}.md"), "w") as f:
+        f.write(_markdown(summary))
     print(json.dumps(summary))
+    if not (summary["trials_agree"] and summary["levels_agree"]):
+        raise SystemExit("fingerprints disagree")
+
+
+def _markdown(s: dict) -> str:
+    rows = "".join(
+        f"| local[{r['cores']}] | {r['wall_s']} | {r['rate']:,} | "
+        f"{', '.join(map(str, r['trial_walls_s']))} | "
+        f"`{', '.join(r['fingerprints'])}` |\n" for r in (s["lo"], s["hi"]))
+    return (
+        f"# Scaling evidence: `{s['family']}`\n\n"
+        f"Written by `python bench_scaling.py --family {s['family']} "
+        f"--size {s['size']}` on {s['date']}. See BENCH/SCALING.md for what "
+        "each family runs and for the measurement history.\n\n"
+        f"{s['size']:,} {s['unit']}; one warm-up and {s['trials']} timed "
+        "trials per level, each level in a fresh JVM with 2g of heap and "
+        "two shuffle partitions per core.\n"
+        f"Host: nproc {s['nproc']}, 1-min load {s['load_1min'][0]} before "
+        f"and {s['load_1min'][1]} after, cpu_steal {s['cpu_steal']}.\n\n"
+        f"| level | best wall (s) | {s['unit']}/s | timed trials (s) "
+        "| fingerprints (count:bit_xor:sum) |\n|---|---|---|---|---|\n"
+        f"{rows}\n"
+        f"Speedup **{s['speedup']}x**, efficiency **{s['efficiency']}** "
+        "(north-rule target 0.8; reported, not gated, on a shared host).\n\n"
+        f"All trials within each level agree: **{s['trials_agree']}**. "
+        f"The two levels agree: **{s['levels_agree']}**.\n")
 
 
 if __name__ == "__main__":

@@ -448,6 +448,11 @@ def connected_components(
       O(diameter) rounds there. At the fixed point every edge points
       directly at its component's minimum node.
 
+    Edges are read as a multiset and are not deduplicated: a duplicate
+    counts toward ``driver_threshold`` and rides the round-1 large-star
+    join. A caller whose edge list is heavily duplicated should call
+    ``distinct()`` first.
+
     ``stats`` (optional dict) receives {"rounds": int, "converged": bool,
     "regime": "driver"|"distributed"}.
     """

@@ -652,6 +652,7 @@ def hits(
     if n == 0:
         e_src.unpersist()
         e_dst.unpersist()
+        nodes.unpersist()
         return nodes.select(
             "node", F.lit(0.0).alias("hub"), F.lit(0.0).alias("auth"))
     hub = nodes.select(

@@ -93,6 +93,13 @@ def main() -> None:
         "embeddings": {"vec_id": "vecid"},
     }
 
+    # characters _noise_text inserts into each text, one between each pair
+    # of 13-char chunks: computed once, NULL and empty texts get none
+    text_len = pc.fill_null(
+        pc.utf8_length(tables["documents"]["text"].combine_chunks()), 0)
+    inserted = pc.max_element_wise(
+        pc.subtract(pc.divide(pc.add(text_len, 12), 13), 1), 0)
+
     for name in ["region", "nation"]:
         pq.write_table(tables[name], os.path.join(args.out, f"{name}.parquet"))
 
@@ -109,14 +116,10 @@ def main() -> None:
                 elif name == "documents" and field == "text":
                     cols[field] = _noise_text(col.combine_chunks(), i)
                 elif name == "documents" and field == "n_chars" and i > 0:
-                    # keep n_chars consistent with the noised text
-                    nc = col.combine_chunks().to_numpy(zero_copy_only=False)
-                    lens = [len(x.as_py()) if x.as_py() is not None else 0
-                            for x in tables[name]["text"].combine_chunks()]
-                    extra = [(length + 12) // 13 - 1 if length > 0 else 0
-                             for length in lens]
-                    cols[field] = pa.array(
-                        (nc + np.asarray(extra)).astype("int64"))
+                    # keep n_chars consistent with the noised text; a NULL
+                    # n_chars stays NULL
+                    cols[field] = pc.add(col.combine_chunks(),
+                                         pc.cast(inserted, col.type))
                 elif name == "embeddings" and field == "embedding" and i > 0:
                     vecs = col.combine_chunks()
                     rolled = [

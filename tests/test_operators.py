@@ -4794,7 +4794,11 @@ class TestHits:
         from generative_ner_spark.operators import graph
 
         edges = spark.createDataFrame([], "src string, dst string")
+        cache = spark._jsparkSession.sharedState().cacheManager()
+        before = cache.numCachedEntries()
         assert graph.hits(edges).count() == 0
+        # the empty path releases every frame it persisted
+        assert cache.numCachedEntries() <= before
 
 
 class TestClusteringCoefficient:
