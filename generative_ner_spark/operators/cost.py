@@ -77,15 +77,6 @@ def resolve_model_prices(model: str) -> dict:
     )
 
 
-def _try_tiktoken():
-    try:
-        import tiktoken  # noqa: F401
-
-        return tiktoken
-    except ImportError:
-        return None
-
-
 def token_count_col(text_col: str) -> Column:
     """Estimated token count column.
 

@@ -23,10 +23,7 @@ import pandas as pd  # module-level: pandas_udf type hints resolve here
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from generative_ner_spark.operators.canonicalize import (
-    lsh_candidate_pairs,
-    with_shingles,
-)
+from generative_ner_spark.operators.canonicalize import lsh_candidate_pairs
 from generative_ner_spark.operators.quality import fingerprint_col
 
 
@@ -406,39 +403,6 @@ def remove_boilerplate_lines(
         ).alias(text_col)
     )
     return rebuilt.select(F.col("id").alias(id_col), text_col)
-
-
-def ngram_jaccard_pairs(
-    candidates: DataFrame,
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-) -> DataFrame:
-    """Exact n-gram Jaccard for given candidate pairs (a, b).
-
-    Join the (small) candidate table to doc texts twice, then array ops.
-    Use after any blocking stage; never call on a full cross product.
-    """
-    sh = with_shingles(
-        docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("nm")),
-        "nm", n=n,
-    ).select("id", "shingles")
-    out = (
-        candidates
-        .join(sh.select(F.col("id").alias("a"), F.col("shingles").alias("sh_a")), "a")
-        .join(sh.select(F.col("id").alias("b"), F.col("shingles").alias("sh_b")), "b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.size(F.array_intersect("sh_a", "sh_b"))
-                / F.size(F.array_union("sh_a", "sh_b")),
-                6,
-            ),
-        )
-        .select("a", "b", "jaccard")
-    )
-    return out
 
 
 # ---------------------------------------------------------------------------

@@ -13,19 +13,26 @@ connected_components).
 Scale shape, sized for 100 TB of edges:
 * Everything is (long, long) edge rows — node payloads never enter the
   iteration dataframes.
-* ``pagerank`` pre-materializes the out-degree-annotated symmetric
-  adjacency ONCE, hash-partitioned by src, and persists it; each
-  iteration's rank frame comes out of a groupBy(dst) hash-partitioned on
-  the SAME key domain, so the per-iteration join reuses both sides'
-  partitioning — the only per-iteration Exchange is the contribution
-  groupBy. Ranks are ``localCheckpoint``ed every iteration to truncate
-  lineage (an unrolled 5-deep join tree re-optimizes the whole history
-  per step otherwise).
+* Two base edge forms, built inside each call: ``_adjacency`` (the
+  symmetric rows of an undirected list, hash-partitioned and sorted
+  within partitions by src) and ``_directed`` (distinct directed rows
+  partitioned by src). Every other frame is derived from one of them
+  inside the one operator that needs it — degrees, walks' neighbor
+  arrays, triangles' orientation, adamic_adar's wedges, hits' dst copy —
+  so aggregations and joins keyed on src inherit the base form's
+  partitioning instead of reshuffling it.
+* What an operator persists is released in one place (``_cached``) on
+  every exit path: the normal return, the empty graph, an early exit,
+  an error.
+* ``pagerank`` and ``personalized_pagerank`` are one power-iteration
+  loop (``_power_iteration``) over the persisted adjacency; the rank
+  frame carries each node's degree and teleport mass, so the only
+  per-iteration Exchange is the contribution groupBy.
 * ``triangle_counts`` orients every edge from lower to higher
-  (degree, id) rank before generating wedges — the classic fix for the
-  curse-of-the-last-reducer: a hub of degree D contributes O(D^2) wedges
-  un-oriented, but oriented out-degrees are bounded by O(sqrt(E)), so no
-  reducer sees a quadratic bucket.
+  (degree, id) rank before intersecting neighbor lists — the classic
+  fix for the curse-of-the-last-reducer: a hub of degree D contributes
+  O(D^2) wedges un-oriented, but oriented out-degrees are bounded by
+  O(sqrt(E)), so no reducer sees a quadratic bucket.
 * ``khop_neighbors`` is frontier BFS: hop i joins ONLY the hop-(i-1)
   frontier (not the whole visited set) against the adjacency, anti-joins
   the visited set, unions. Frontiers are localCheckpointed per hop.
@@ -33,14 +40,40 @@ Scale shape, sized for 100 TB of edges:
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-# Iterative operators truncate lineage every this-many steps instead of
-# every step (see pagerank's docstring for the rationale): short lazy
-# chains are planned once by their single downstream action.
+# PageRank, personalized PageRank and label propagation truncate lineage
+# every this-many steps instead of every step, and pin their result once
+# at the end: each step's output feeds exactly one consumer, so a short
+# lazy chain is planned ONCE by its single downstream action, while a
+# per-step checkpoint pays an eager job and a full materialization per
+# step for a lineage problem that only exists past ~5 chained steps.
+# The frontier operators (khop, walks, closure) materialize every step
+# anyway: each step's emptiness decides whether to go on.
 _CHECKPOINT_EVERY = 4
+
+
+@contextmanager
+def _cached():
+    """Yield ``keep``, which persists a frame and returns it; every kept
+    frame is unpersisted when the block exits, however it exits. A lazy
+    frame returned from the block must be pinned (localCheckpoint) first,
+    or it recomputes from the raw input once the caches are gone."""
+    held: list[DataFrame] = []
+
+    def keep(df: DataFrame) -> DataFrame:
+        held.append(df.persist())
+        return df
+
+    try:
+        yield keep
+    finally:
+        for df in held:
+            df.unpersist()
 
 
 def cooccurrence_edges(
@@ -112,22 +145,72 @@ def cooccurrence_edges(
     )
 
 
-def _symmetric(edges: DataFrame) -> DataFrame:
-    """Canonical (src<dst) edge list -> both-direction (src, dst) rows."""
+def _adjacency(edges: DataFrame) -> DataFrame:
+    """Canonical undirected edge list -> the symmetric ``(src, dst)`` rows
+    (every edge both ways), hash-partitioned and sorted within partitions
+    by ``src`` — the one undirected form. A groupBy or join keyed on src
+    reuses its partitioning, and a persisted copy records the sort, so a
+    sort-merge join on src skips both exchange and sort on this side."""
     e = edges.select("src", "dst")
-    return e.unionByName(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    return (
+        e.unionByName(
+            e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+        .repartition("src")
+        .sortWithinPartitions("src")
     )
+
+
+def _directed(edges: DataFrame) -> DataFrame:
+    """Directed edge list -> distinct ``(src, dst)`` rows partitioned by
+    ``src`` — the one directed form. Repartition BEFORE distinct:
+    hashpartitioning(src) satisfies the (src, dst) aggregation's
+    clustering, so one exchange both deduplicates and partitions."""
+    return edges.select("src", "dst").repartition("src").distinct()
+
+
+def _degrees(adj: DataFrame) -> DataFrame:
+    return adj.groupBy(F.col("src").alias("node")).agg(
+        F.count("*").alias("degree"))
 
 
 def degrees(edges: DataFrame) -> DataFrame:
-    """(node, degree) over a canonical undirected edge list — one
-    map-side-combined groupBy over the symmetrized edges."""
-    return (
-        _symmetric(edges)
-        .groupBy(F.col("src").alias("node"))
-        .agg(F.count("*").alias("degree"))
-    )
+    """(node, degree) over a canonical undirected edge list, counted on
+    the adjacency's src partitions (no exchange past the adjacency's)."""
+    return _degrees(_adjacency(edges))
+
+
+def _power_iteration(adj: DataFrame, ranks: DataFrame, n_iter: int,
+                     damping: float, round_to: int | None) -> DataFrame:
+    """The update shared by ``pagerank`` and ``personalized_pagerank``:
+    ``pr'(v) = _t(v) + d * sum_{u~v} pr(u)/deg(u)`` for ``n_iter`` steps
+    from the initial ``(node, degree, _t, pr)`` frame, ``_t`` being the
+    node's teleport mass -> pinned ``(node, degree, pr)``.
+
+    ONE Exchange per step (the contribution groupBy): ``adj`` is
+    partitioned by src and the rank frame arrives hash-partitioned on
+    node, so the join aligns both sides without reshuffling. Each step
+    joins onto the fixed initial frame, never onto the previous step's
+    output, so the lazy chain between checkpoints stays linear."""
+    base = ranks.select("node", "degree", "_t")
+    for it in range(n_iter):
+        contribs = (
+            adj.join(ranks.select(F.col("node").alias("src"), "degree", "pr"),
+                     "src")
+            .groupBy(F.col("dst").alias("node"))
+            .agg(F.sum(F.col("pr") / F.col("degree")).alias("_in"))
+        )
+        ranks = base.join(contribs, "node", "left").select(
+            "node", "degree",
+            (F.col("_t") + F.lit(damping)
+             * F.coalesce(F.col("_in"), F.lit(0.0))).alias("pr"),
+        )
+        if (it + 1) % _CHECKPOINT_EVERY == 0 and (it + 1) < n_iter:
+            ranks = ranks.localCheckpoint()
+    return ranks.select(
+        "node", "degree",
+        (F.round("pr", round_to) if round_to is not None
+         else F.col("pr")).alias("pr"),
+    ).localCheckpoint()
 
 
 def pagerank(
@@ -143,74 +226,23 @@ def pagerank(
     there is no dangling mass to redistribute — the update is exactly the
     q58 oracle's unrolled SQL.
 
-    Per-iteration cost: ONE Exchange (the contribution groupBy). The
-    degree-annotated symmetric adjacency is repartitioned by src and
-    persisted up front; the rank frame arrives hash-partitioned on
-    ``node`` from the previous groupBy, so the join aligns both sides
-    without reshuffling. Lineage is truncated with ``localCheckpoint``
-    every ``_CHECKPOINT_EVERY`` iterations rather than every step (r6):
-    each step's output feeds exactly one consumer, so a short lazy chain
-    is planned ONCE by the single downstream action — the per-step
-    checkpoint paid an eager job + a full rank materialization per
-    iteration for a lineage problem that only exists past ~5 chained
-    steps (quadratic re-planning per ACTION was the r1 failure mode;
-    with one action per chunk, planning is linear in chunk length).
+    Scale shape: the adjacency is persisted once; degrees come off its
+    src partitions into a checkpointed rank frame, and the shared
+    ``_power_iteration`` pays ONE Exchange per step, with lineage
+    truncated every ``_CHECKPOINT_EVERY`` steps.
     """
-    spark = edges.sparkSession
-    # persist the SLIM canonical list first (r6b, guide §5): ``edges`` is
-    # typically a lazy builder (the co-occurrence groupBy chain) and this
-    # operator expands it twice — once under degrees, once under the
-    # symmetric adjacency; uncached, each expansion re-ran the whole
-    # upstream build
-    e = edges.select("src", "dst").persist()
-    deg = degrees(e).persist()
-    adj = (
-        _symmetric(e)
-        .join(deg.withColumnRenamed("node", "src"), "src")
-        .repartition("src")
-        .persist()
-    )
-    n = deg.count()  # also materializes deg (and seeds adj's build)
-    if n == 0:  # empty graph: empty (node, degree, pr) frame, no 1/0
-        deg.unpersist()
-        adj.unpersist()
-        e.unpersist()
-        return deg.withColumn("pr", F.lit(0.0)).where(F.lit(False))
-    ranks = deg.select(
-        "node", (F.lit(1.0) / F.lit(float(n))).alias("pr")
-    ).localCheckpoint()
-    teleport = (1.0 - damping) / float(n)
-    for it in range(n_iter):
-        contribs = (
-            adj.join(ranks.withColumnRenamed("node", "src"), "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.col("pr") / F.col("degree")).alias("_in"))
+    with _cached() as keep:
+        adj = keep(_adjacency(edges))
+        deg = _degrees(adj).localCheckpoint()  # also materializes adj
+        n = deg.count()
+        if n == 0:  # empty graph: empty (node, degree, pr) frame, no 1/0
+            return deg.withColumn("pr", F.lit(0.0))
+        ranks = deg.select(
+            "node", "degree",
+            F.lit((1.0 - damping) / float(n)).alias("_t"),
+            (F.lit(1.0) / F.lit(float(n))).alias("pr"),
         )
-        ranks = (
-            deg.select("node")
-            .join(contribs, "node", "left")
-            .select(
-                "node",
-                (F.lit(teleport)
-                 + F.lit(damping) * F.coalesce(F.col("_in"), F.lit(0.0))
-                 ).alias("pr"),
-            )
-        )
-        if (it + 1) % _CHECKPOINT_EVERY == 0 and (it + 1) < n_iter:
-            ranks = ranks.localCheckpoint()
-    out = ranks.join(deg, "node").select(
-        "node", "degree",
-        (F.round("pr", round_to) if round_to is not None
-         else F.col("pr")).alias("pr"),
-    )
-    # pin BEFORE releasing the caches: the result joins deg lazily, so
-    # an unpersist-then-materialize recomputed degrees from raw edges —
-    # exactly the double-compute the persist was bought for
-    out = out.localCheckpoint()
-    adj.unpersist()
-    deg.unpersist()
-    e.unpersist()
-    return out
+        return _power_iteration(adj, ranks, n_iter, damping, round_to)
 
 
 def triangle_counts(edges: DataFrame) -> DataFrame:
@@ -219,108 +251,80 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
 
     Degree-ordered orientation (Suri & Vassilvitskii WWW'11): each edge
     points from its lower (degree, id) endpoint to the higher, so every
-    triangle produces exactly ONE wedge at its unique lowest-rank vertex
-    and hub vertices generate O(sqrt(E)) out-neighbors instead of O(D)
-    — the wedge self-join can't melt a reducer. Wedge (apex, b, c) with
-    b < c (id order) closes iff canonical edge (b, c) exists; the
-    closing join is on the slim canonical list. Each triangle then
-    credits its three vertices via a 3-way unpivot + groupBy.
+    triangle is found exactly once and hub vertices keep O(sqrt(E))
+    out-neighbors instead of O(D) — no reducer melts. The orientation is
+    derived from the adjacency: degrees come off its src partitions, the
+    src-side degree join aligns with it, and only the dst-side join
+    moves the 2E rows again. Each triangle then credits its three
+    vertices in one explode + groupBy.
     """
     # NO persist of the input here (r6b, measured): this operator runs
     # as ONE action (the output checkpoint), and Spark's exchange reuse
-    # dedups the identical co-occurrence subtrees under degrees and the
+    # dedups the identical adjacency exchanges under the degrees and the
     # ranked frame within a single plan — a persist only added an eager
     # materialization (q59/q73 flat-to-worse at sf0.1). Cross-ACTION
     # reuse, where persist does pay, is the callers' job
-    # (clustering_coefficient persists; triangle_count_approx
-    # checkpoints its sample).
-    e = edges.select("src", "dst")
-    deg = degrees(e)
+    # (clustering_coefficient persists the adjacency; triangle_count_approx
+    # persists its sample).
+    adj = _adjacency(edges)
+    deg = _degrees(adj)
     ranked = (
-        _symmetric(e)
-        .join(deg.withColumnRenamed("node", "src")
-                 .withColumnRenamed("degree", "_ds"), "src")
+        adj.join(deg.withColumnRenamed("node", "src")
+                    .withColumnRenamed("degree", "_ds"), "src")
         .join(deg.withColumnRenamed("node", "dst")
                  .withColumnRenamed("degree", "_dd"), "dst")
     )
-    oriented = ranked.where(
-        (F.col("_ds") < F.col("_dd"))
-        | ((F.col("_ds") == F.col("_dd")) & (F.col("src") < F.col("dst")))
-    ).select("src", "dst").persist()
-    # Edge-iterator intersection (the r6 rewrite, guide §2.3 "shuffle
-    # fewer bytes"): a triangle {a,b,c} ordered by rank is THREE oriented
-    # edges a->b, a->c, b->c, so it is found exactly once at its base
-    # edge (a, b) as |out(a) ∩ out(b)| — the wedge materialization
-    # (sum_a C(out_a, 2) rows through an exchange + a row-per-wedge hash
-    # join; ~200M rows on the sf1.0 co-occurrence graph) is replaced by
-    # ONE out-neighbor-list aggregation (<= E rows, out-degree O(sqrt E)
-    # by the orientation) and two E-row joins whose intersection runs
-    # in-memory per edge. Per-triangle credits are identical: apex a and
-    # middle b each get |common|, every c in common gets 1.
-    adjl = oriented.groupBy("src").agg(
-        F.sort_array(F.collect_list("dst")).alias("_nb"))
-    # re-derive each base edge by exploding the adjacency list itself —
-    # (src, dst, _nba) comes out of ONE generator over adjl instead of a
-    # second E-row join shipping the src-side arrays
-    # shuffle_hash hint: Catalyst's size ESTIMATE for adjl ignores the
-    # neighbor arrays' real width, so it picks a broadcast build that
-    # OOMs the driver on sf1.0's ~200k x 45-long arrays; a per-partition
-    # hash build is the right strategy at every scale here
-    tri = (
-        adjl.select("src", F.col("_nb").alias("_nba"),
-                    F.explode("_nb").alias("dst"))
-        .join(adjl.select(F.col("src").alias("dst"),
-                          F.col("_nb").alias("_nbb")).hint("shuffle_hash"),
-              "dst")
-        .withColumn("_common", F.array_intersect("_nba", "_nbb"))
-        .withColumn("_n", F.size("_common"))
-        .where(F.col("_n") > 0)
-        .select("src", "dst", "_common", "_n")
-    )
-    # ONE explode emits all three credits per base edge (a 3-way union of
-    # selects over this subtree re-evaluates the join+intersect three
-    # times — union branches share exchanges, not compute)
-    credit = F.concat(
-        F.array(
-            F.struct(F.col("src").alias("node"), F.col("_n").alias("_c")),
-            F.struct(F.col("dst").alias("node"), F.col("_n").alias("_c")),
-        ),
-        F.transform(
-            "_common",
-            lambda c: F.struct(c.alias("node"), F.lit(1).alias("_c")),
-        ),
-    )
-    out = (
-        tri.select(F.explode(credit).alias("_e"))
-        .groupBy(F.col("_e.node").alias("node"))
-        .agg(F.sum("_e._c").cast("long").alias("n_triangles"))
-    )
-    out = out.localCheckpoint()
-    oriented.unpersist()
-    return out
-
-
-def _adjacency_lists(edges: DataFrame) -> DataFrame:
-    """Canonical undirected edge list -> ``(src, _nb)`` with ``_nb`` the
-    dst-SORTED neighbor array of src (duplicates retained, mirroring the
-    row form). The per-step/hop probe structure for frontier iterations
-    (r6c, guide §2.3/§2.4): the row-form adjacency join re-shuffled and
-    re-SORTED the full 2E-row frame on every iteration (a two-key
-    (src, rank) equi-join defeats the src-only cache partitioning; even
-    the one-key form re-sorts 2E rows per step because a groupBy cache
-    carries no ordering). The array form is |V| rows; the in-partition
-    ``sortWithinPartitions`` is paid ONCE and recorded in the cache's
-    outputOrdering, so every later sort-merge join against ``src``
-    skips both the exchange AND the sort. Neighbor arrays never cross
-    an exchange: consumers element_at/explode them in the join
-    projection. A hub's array is one row in one partition — the same
-    per-partition bound as the collect_list in triangle_counts."""
-    return (
-        _symmetric(edges)
-        .groupBy("src")
-        .agg(F.sort_array(F.collect_list("dst")).alias("_nb"))
-        .sortWithinPartitions("src")
-    )
+    with _cached() as keep:
+        oriented = keep(ranked.where(
+            (F.col("_ds") < F.col("_dd"))
+            | ((F.col("_ds") == F.col("_dd")) & (F.col("src") < F.col("dst")))
+        ).select("src", "dst"))
+        # Edge-iterator intersection (the r6 rewrite, guide §2.3 "shuffle
+        # fewer bytes"): a triangle {a,b,c} ordered by rank is THREE
+        # oriented edges a->b, a->c, b->c, so it is found exactly once at
+        # its base edge (a, b) as |out(a) ∩ out(b)| — ONE out-neighbor
+        # list aggregation (<= E rows, out-degree O(sqrt E) by the
+        # orientation) and two E-row joins whose intersection runs
+        # in-memory per edge. Apex a and middle b each get |common|,
+        # every c in common gets 1.
+        adjl = oriented.groupBy("src").agg(
+            F.sort_array(F.collect_list("dst")).alias("_nb"))
+        # re-derive each base edge by exploding the adjacency list itself —
+        # (src, dst, _nba) comes out of ONE generator over adjl instead of
+        # a second E-row join shipping the src-side arrays
+        # shuffle_hash hint: Catalyst's size ESTIMATE for adjl ignores the
+        # neighbor arrays' real width, so it picks a broadcast build that
+        # OOMs the driver on sf1.0's ~200k x 45-long arrays; a
+        # per-partition hash build is the right strategy at every scale
+        tri = (
+            adjl.select("src", F.col("_nb").alias("_nba"),
+                        F.explode("_nb").alias("dst"))
+            .join(adjl.select(F.col("src").alias("dst"),
+                              F.col("_nb").alias("_nbb")).hint("shuffle_hash"),
+                  "dst")
+            .withColumn("_common", F.array_intersect("_nba", "_nbb"))
+            .withColumn("_n", F.size("_common"))
+            .where(F.col("_n") > 0)
+            .select("src", "dst", "_common", "_n")
+        )
+        # ONE explode emits all three credits per base edge (a 3-way union
+        # of selects over this subtree re-evaluates the join+intersect
+        # three times — union branches share exchanges, not compute)
+        credit = F.concat(
+            F.array(
+                F.struct(F.col("src").alias("node"), F.col("_n").alias("_c")),
+                F.struct(F.col("dst").alias("node"), F.col("_n").alias("_c")),
+            ),
+            F.transform(
+                "_common",
+                lambda c: F.struct(c.alias("node"), F.lit(1).alias("_c")),
+            ),
+        )
+        return (
+            tri.select(F.explode(credit).alias("_e"))
+            .groupBy(F.col("_e.node").alias("node"))
+            .agg(F.sum("_e._c").cast("long").alias("n_triangles"))
+        ).localCheckpoint()
 
 
 def khop_neighbors(
@@ -336,51 +340,42 @@ def khop_neighbors(
     hops of these companies").
 
     Frontier BFS: hop i expands ONLY the hop-(i-1) frontier against the
-    persisted symmetric adjacency and anti-joins the visited set — work
-    per hop is O(frontier x avg-degree), never O(visited). Early-exits
-    when a frontier empties. Each hop's frames are localCheckpointed so
-    the final union is k shallow scans, not a k-deep join tree.
-
-    The adjacency is persisted partitioned AND in-partition sorted by
-    ``src`` (r6c): the cache records the sort order, so when the
-    per-hop join planner picks sort-merge (a large frontier at scale),
-    the 2E-row side skips both its exchange and its per-hop re-sort —
-    only the slim frontier moves. (The neighbor-ARRAY form used by
-    ``random_walks`` measured SLOWER here: khop's hops are cheap single
-    -key probes already, and the collect_list build costs more than the
-    three probes combined.)
+    persisted adjacency and anti-joins the visited set — work per hop is
+    O(frontier x avg-degree), never O(visited). Early-exits when a
+    frontier empties. Each hop's frames are localCheckpointed so the
+    final union is k shallow scans, not a k-deep join tree. The cached
+    adjacency records its src sort, so when the per-hop join planner
+    picks sort-merge (a large frontier at scale), the 2E-row side skips
+    both its exchange and its per-hop re-sort — only the slim frontier
+    moves.
     """
-    adj = (_symmetric(edges).repartition("src")
-           .sortWithinPartitions("src").persist())
-    # hop frames accumulate as SEPARATE checkpointed frames (r6b): the
-    # per-hop anti-join consumes the visited set as a LAZY union of
-    # those shallow scans, so the r5 per-hop visited-union checkpoint —
-    # which re-materialized the whole history every hop, O(k^2) rows —
-    # is gone; only each hop's own (new) frontier is materialized.
-    hops = [
-        seeds.select(F.col(node_col).alias("node"))
-        .distinct()
-        .withColumn("hop", F.lit(0))
-        .localCheckpoint()
-    ]
-    visited = hops[0]
-    frontier = visited.select("node")
-    for i in range(1, k + 1):
-        nxt = (
-            adj.join(frontier.withColumnRenamed("node", "src"), "src")
-            .select(F.col("dst").alias("node"))
+    with _cached() as keep:
+        adj = keep(_adjacency(edges))
+        # hop frames accumulate as SEPARATE checkpointed frames (r6b):
+        # the per-hop anti-join consumes the visited set as a LAZY union
+        # of those shallow scans; only each hop's own (new) frontier is
+        # materialized, never the whole history.
+        visited = (
+            seeds.select(F.col(node_col).alias("node"))
             .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-            .withColumn("hop", F.lit(i))
+            .withColumn("hop", F.lit(0))
             .localCheckpoint()
         )
-        if nxt.isEmpty():
-            break
-        hops.append(nxt)
-        visited = visited.unionByName(nxt)
-        frontier = nxt.select("node")
-    adj.unpersist()
-    return visited
+        frontier = visited.select("node")
+        for i in range(1, k + 1):
+            nxt = (
+                adj.join(frontier.withColumnRenamed("node", "src"), "src")
+                .select(F.col("dst").alias("node"))
+                .distinct()
+                .join(visited.select("node"), "node", "left_anti")
+                .withColumn("hop", F.lit(i))
+                .localCheckpoint()
+            )
+            if nxt.isEmpty():
+                break
+            visited = visited.unionByName(nxt)
+            frontier = nxt.select("node")
+        return visited
 
 
 def random_walks(
@@ -405,80 +400,77 @@ def random_walks(
     walks on any cluster size — and the q69 DuckDB oracle replays them
     exactly. No RNG state, no driver loop over nodes.
 
-    Scale shape (r6c): the adjacency rides as the dst-SORTED neighbor
-    ARRAY per node (``_adjacency_lists``, |V| rows, ordering recorded in
-    the cache so per-step joins skip both exchange and sort on the
-    adjacency side). Each step is ONE single-key equi-join: the degree
-    is ``size(_nb)`` and the chosen neighbor ``element_at(_nb, rank+1)``
-    — both evaluated in the join projection, so neither the degree
-    frame, the rank-annotated 2E-row frame, nor any neighbor array ever
-    crosses an exchange. (The r6 row form was two joins per step; its
-    (src, rank) equi-join re-shuffled AND re-sorted the full 2E-row
-    adjacency every step — measured 5-6 s/step on a 24M-row adjacency
-    vs <1 s for this form.) A hub's array is one row in one partition;
-    the join output projects a single element from it. Frontiers are
+    Scale shape: the adjacency is folded, on its own src partitions,
+    into one dst-sorted neighbor ARRAY per node (|V| rows), persisted
+    sorted by src so per-step joins skip both exchange and sort on that
+    side. Each step is ONE single-key equi-join: the degree is
+    ``size(_nb)`` and the chosen neighbor ``element_at(_nb, rank+1)`` —
+    both evaluated in the join projection, so no neighbor array ever
+    crosses an exchange. A hub's array is one row in one partition; the
+    join output projects a single element from it. Frontiers are
     localCheckpointed per step; a walk from a degree-0 seed emits its
     start row only (inner join: no _nb row, walk stops).
     """
-    adj = _adjacency_lists(edges).persist()
-    # default start set = every node touching an edge == exactly adj's
-    # (unique) src keys: reading it off the persisted frame avoids a
-    # SECOND expansion of the (usually lazy) upstream edge build that
-    # the r6c form paid for the symmetric-distinct (guide §5)
-    start_nodes = (
-        seeds.select(F.col(node_col).alias("node")).distinct()
-        if seeds is not None
-        else adj.select(F.col("src").alias("node"))
-    )
-    # walk_id is a STRING key ("node:w"): node * walks_per_node + w
-    # would be an ANSI long multiply that THROWS on hash-derived ids
-    # near the 64-bit range (the CLAUDE.md overflow gotcha)
-    walks = start_nodes.select(
-        "node",
-        F.explode(F.expr(f"sequence(0, {int(walks_per_node) - 1})"))
-        .alias("_w"),
-    ).select(
-        F.concat_ws(":", F.col("node").cast("string"),
-                    F.col("_w").cast("string")).alias("walk_id"),
-        F.col("node").alias("start_node"),
-    )
     # the ONE md5-prefix hash home (quality._md5_rank) — salt:walk:step
     from generative_ner_spark.operators.quality import _md5_rank
 
-    # steps accumulate as SEPARATE checkpointed frames, unioned once at
-    # the end (r6): the iteration only ever consumes the previous step's
-    # frontier, never the visited union, so the r5 per-step
-    # visited-union localCheckpoint re-materialized the whole walk
-    # history every step — O(steps^2) rows copied for nothing. The
-    # final union is walk_len + 1 shallow scans of checkpointed frames.
-    steps = [walks.select(
-        "walk_id", "start_node", F.lit(0).alias("step"),
-        F.col("start_node").alias("node"),
-    ).localCheckpoint()]
-    frontier = steps[0].select("walk_id", "start_node",
-                               F.col("node").alias("_cur"))
-    for i in range(1, walk_len + 1):
-        h = _md5_rank(
-            F.concat_ws(":", F.col("walk_id").cast("string"),
-                        F.lit(str(i))), salt)
-        nxt = (
-            frontier  # inner join: degree-0 walks stop here (no _nb row)
-            .join(adj.withColumnRenamed("src", "_cur"), "_cur")
-            .select(
-                "walk_id", "start_node", F.lit(i).alias("step"),
-                F.element_at(
-                    "_nb",
-                    (F.pmod(h, F.size("_nb")) + F.lit(1)).cast("int"),
-                ).alias("node"),
-            )
-            .localCheckpoint()
+    with _cached() as keep:
+        nbrs = keep(
+            _adjacency(edges)
+            .groupBy("src")
+            .agg(F.sort_array(F.collect_list("dst")).alias("_nb"))
+            .sortWithinPartitions("src")
         )
-        if nxt.isEmpty():
-            break
-        steps.append(nxt)
-        frontier = nxt.select("walk_id", "start_node",
-                              F.col("node").alias("_cur"))
-    adj.unpersist()
+        # default start set = every node touching an edge == exactly the
+        # arrays' (unique) src keys, read off the persisted frame
+        start_nodes = (
+            seeds.select(F.col(node_col).alias("node")).distinct()
+            if seeds is not None
+            else nbrs.select(F.col("src").alias("node"))
+        )
+        # walk_id is a STRING key ("node:w"): node * walks_per_node + w
+        # would be an ANSI long multiply that THROWS on hash-derived ids
+        # near the 64-bit range (the CLAUDE.md overflow gotcha)
+        walks = start_nodes.select(
+            "node",
+            F.explode(F.expr(f"sequence(0, {int(walks_per_node) - 1})"))
+            .alias("_w"),
+        ).select(
+            F.concat_ws(":", F.col("node").cast("string"),
+                        F.col("_w").cast("string")).alias("walk_id"),
+            F.col("node").alias("start_node"),
+        )
+        # steps accumulate as SEPARATE checkpointed frames, unioned once
+        # at the end (r6): the iteration only ever consumes the previous
+        # step's frontier, never the visited union, so the final union is
+        # walk_len + 1 shallow scans of checkpointed frames.
+        steps = [walks.select(
+            "walk_id", "start_node", F.lit(0).alias("step"),
+            F.col("start_node").alias("node"),
+        ).localCheckpoint()]
+        frontier = steps[0].select("walk_id", "start_node",
+                                   F.col("node").alias("_cur"))
+        for i in range(1, walk_len + 1):
+            h = _md5_rank(
+                F.concat_ws(":", F.col("walk_id").cast("string"),
+                            F.lit(str(i))), salt)
+            nxt = (
+                frontier  # inner join: degree-0 walks stop here (no _nb row)
+                .join(nbrs.withColumnRenamed("src", "_cur"), "_cur")
+                .select(
+                    "walk_id", "start_node", F.lit(i).alias("step"),
+                    F.element_at(
+                        "_nb",
+                        (F.pmod(h, F.size("_nb")) + F.lit(1)).cast("int"),
+                    ).alias("node"),
+                )
+                .localCheckpoint()
+            )
+            if nxt.isEmpty():
+                break
+            steps.append(nxt)
+            frontier = nxt.select("walk_id", "start_node",
+                                  F.col("node").alias("_cur"))
     visited = steps[0]
     for s in steps[1:]:
         visited = visited.unionByName(s)
@@ -520,39 +512,33 @@ def label_propagation(edges: DataFrame, n_iter: int = 3) -> DataFrame:
     Scale shape: per round, one join of the persisted adjacency against
     the label frame and TWO map-side-combined aggregates ((node, label)
     counts, then a max_by argmax per node) — all keyed on uniform
-    node/label ids; localCheckpoint per round truncates lineage. The
-    adjacency is persisted partitioned by ``dst`` — the key every
-    round's join actually probes (labels arrive hash-partitioned on
-    node from the previous argmax, so BOTH join sides align and the
-    per-round Exchange count drops from 3 to 2; the r5 shape
-    partitioned by src, which no per-round operation used, and paid a
-    full adjacency reshuffle every round). The initial label frame
-    reads node ids off the ``dst`` column for the same reason — in a
-    symmetric adjacency src and dst carry the identical node set, and
-    dst-partitioning makes that distinct exchange-free.
+    node/label ids. Labels join on ``src`` and the counts group by
+    ``dst``: the adjacency is symmetric, so a node's in-neighbors are
+    its neighbors, and the src-partitioned adjacency lines up with the
+    label frame (hash-partitioned on node by the previous argmax)
+    without a reshuffle. The initial label frame is the adjacency's
+    distinct src keys, exchange-free for the same reason.
     """
-    adj = _symmetric(edges).repartition("dst").persist()
-    labels = (
-        adj.select(F.col("dst").alias("node")).distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint()
-    )
-    for _ in range(n_iter):
-        nbr = (
-            adj.join(labels.withColumnRenamed("node", "dst"), "dst")
-            .groupBy(F.col("src").alias("node"), "label")
-            .agg(F.count("*").alias("cnt"))
-        )
+    with _cached() as keep:
+        adj = keep(_adjacency(edges))
         labels = (
-            nbr.groupBy("node")
-            .agg(F.max_by(
+            adj.select(F.col("src").alias("node")).distinct()
+            .withColumn("label", F.col("node"))
+            .localCheckpoint()
+        )
+        for it in range(n_iter):
+            nbr = (
+                adj.join(labels.withColumnRenamed("node", "src"), "src")
+                .groupBy(F.col("dst").alias("node"), "label")
+                .agg(F.count("*").alias("cnt"))
+            )
+            labels = nbr.groupBy("node").agg(F.max_by(
                 "label",
                 F.struct(F.col("cnt"), (-F.col("label")).alias("_negl")),
             ).alias("label"))
-            .localCheckpoint()
-        )
-    adj.unpersist()
-    return labels
+            if (it + 1) % _CHECKPOINT_EVERY == 0 and (it + 1) < n_iter:
+                labels = labels.localCheckpoint()
+        return labels.localCheckpoint()
 
 
 def triangle_count_approx(
@@ -584,22 +570,20 @@ def triangle_count_approx(
     coin = _md5_rank(
         F.concat_ws(":", F.col("src").cast("string"),
                     F.col("dst").cast("string")), salt)
-    sampled = edges.select("src", "dst").where(coin < cut).persist()
-    tri = triangle_counts(sampled)
-    n_tri = tri.agg(
-        F.coalesce(F.sum("n_triangles"), F.lit(0)).alias("s")
-    ).select((F.col("s") / 3).cast("long").alias("t"))  # 3 credits/triangle
-    out = sampled.agg(F.count("*").alias("n_edges_sampled")).crossJoin(
-        n_tri
-    ).select(
-        "n_edges_sampled",
-        F.col("t").alias("n_triangles_sampled"),
-        F.round(F.col("t") / F.lit(float(p) ** 3), 6)
-        .alias("est_triangles"),
-    )
-    out = out.localCheckpoint()
-    sampled.unpersist()
-    return out
+    with _cached() as keep:
+        sampled = keep(edges.select("src", "dst").where(coin < cut))
+        tri = triangle_counts(sampled)
+        n_tri = tri.agg(
+            F.coalesce(F.sum("n_triangles"), F.lit(0)).alias("s")
+        ).select((F.col("s") / 3).cast("long").alias("t"))  # 3 credits/tri
+        return sampled.agg(F.count("*").alias("n_edges_sampled")).crossJoin(
+            n_tri
+        ).select(
+            "n_edges_sampled",
+            F.col("t").alias("n_triangles_sampled"),
+            F.round(F.col("t") / F.lit(float(p) ** 3), 6)
+            .alias("est_triangles"),
+        ).localCheckpoint()
 
 
 def hits(
@@ -621,81 +605,67 @@ def hits(
     for fixed (edges, n_iter) — the q84 oracle replays the unrolled
     rounds.
 
-    Scale shape (the PageRank argument): the distinct edge list is
-    persisted TWICE, partitioned by src and by dst — the two keys the
-    alternating half-steps join on — so neither half-step reshuffles
-    the edges (the score frame arrives hash-partitioned on node from
-    the previous groupBy, and both join sides align; the r5 single
-    unpartitioned copy paid a full edge reshuffle on every half-step).
-    Each half-step is ONE map-side-combined groupBy; normalization
-    totals cross the driver as single scalars; the RAW per-half-step
-    aggregate is localCheckpointed (it feeds both the total and the
-    normalized frame) and the normalized frames stay lazy projections
-    of it — checkpointing them too (r5) materialized every score frame
-    twice.
+    Scale shape (the PageRank argument): the directed form (partitioned
+    by src) and a dst copy derived from it are persisted — the two keys
+    the alternating half-steps join on — so neither half-step reshuffles
+    the edges (the score frame arrives hash-partitioned on node from the
+    previous groupBy, and both join sides align). Each half-step is ONE
+    map-side-combined groupBy; normalization totals cross the driver as
+    single scalars; the RAW per-half-step aggregate is localCheckpointed
+    (it feeds both the total and the normalized frame) and the
+    normalized frames stay lazy projections of it.
     """
-    base = edges.select("src", "dst")
-    # repartition BEFORE distinct: hashpartitioning(src) satisfies the
-    # (src, dst) aggregation's clustering, so the copy costs one
-    # exchange and comes out partitioned on its join key; the dst copy
-    # is derived FROM the cached src copy (already distinct — one more
-    # slim exchange, no second expansion of the upstream edge build)
-    e_src = base.repartition("src").distinct().persist()
-    e_dst = e_src.repartition("dst").persist()
-    nodes = (
-        e_src.select(F.col("src").alias("node"))
-        .unionByName(e_dst.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    n = nodes.count()
-    if n == 0:
-        e_src.unpersist()
-        e_dst.unpersist()
-        nodes.unpersist()
-        return nodes.select(
-            "node", F.lit(0.0).alias("hub"), F.lit(0.0).alias("auth"))
-    hub = nodes.select(
-        "node", (F.lit(1.0) / F.lit(float(n))).alias("hub")
-    ).localCheckpoint()
-    auth = None
-    for _ in range(n_iter):
-        araw = (
-            e_src.join(hub.withColumnRenamed("node", "src"), "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("hub").alias("_raw"))
+    with _cached() as keep:
+        e_src = keep(_directed(edges))
+        # derived FROM the cached src copy (already distinct — one more
+        # slim exchange, no second expansion of the upstream edge build)
+        e_dst = keep(e_src.repartition("dst"))
+        nodes = keep(
+            e_src.select(F.col("src").alias("node"))
+            .unionByName(e_dst.select(F.col("dst").alias("node")))
+            .distinct()
+        )
+        n = nodes.count()
+        if n == 0:
+            return nodes.select(
+                "node", F.lit(0.0).alias("hub"), F.lit(0.0).alias("auth"))
+        hub = nodes.select(
+            "node", (F.lit(1.0) / F.lit(float(n))).alias("hub")
         ).localCheckpoint()
-        atot = araw.agg(F.sum("_raw")).first()[0]
-        auth = araw.select(
-            "node", (F.col("_raw") / F.lit(float(atot))).alias("auth")
+        auth = None
+        for _ in range(n_iter):
+            araw = (
+                e_src.join(hub.withColumnRenamed("node", "src"), "src")
+                .groupBy(F.col("dst").alias("node"))
+                .agg(F.sum("hub").alias("_raw"))
+            ).localCheckpoint()
+            atot = araw.agg(F.sum("_raw")).first()[0]
+            auth = araw.select(
+                "node", (F.col("_raw") / F.lit(float(atot))).alias("auth")
+            )
+            hraw = (
+                e_dst.join(auth.withColumnRenamed("node", "dst"), "dst")
+                .groupBy(F.col("src").alias("node"))
+                .agg(F.sum("auth").alias("_raw"))
+            ).localCheckpoint()
+            htot = hraw.agg(F.sum("_raw")).first()[0]
+            hub = hraw.select(
+                "node", (F.col("_raw") / F.lit(float(htot))).alias("hub")
+            )
+        out = (
+            nodes.join(hub, "node", "left")
+            .join(auth, "node", "left")
+            .select(
+                "node",
+                F.coalesce(F.col("hub"), F.lit(0.0)).alias("hub"),
+                F.coalesce(F.col("auth"), F.lit(0.0)).alias("auth"),
+            )
         )
-        hraw = (
-            e_dst.join(auth.withColumnRenamed("node", "dst"), "dst")
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.sum("auth").alias("_raw"))
-        ).localCheckpoint()
-        htot = hraw.agg(F.sum("_raw")).first()[0]
-        hub = hraw.select(
-            "node", (F.col("_raw") / F.lit(float(htot))).alias("hub")
-        )
-    out = (
-        nodes.join(hub, "node", "left")
-        .join(auth, "node", "left")
-        .select(
-            "node",
-            F.coalesce(F.col("hub"), F.lit(0.0)).alias("hub"),
-            F.coalesce(F.col("auth"), F.lit(0.0)).alias("auth"),
-        )
-    )
-    if round_to is not None:
-        out = out.select(
-            "node", F.round("hub", round_to).alias("hub"),
-            F.round("auth", round_to).alias("auth"))
-    out = out.localCheckpoint()
-    e_src.unpersist()
-    e_dst.unpersist()
-    nodes.unpersist()
-    return out
+        if round_to is not None:
+            out = out.select(
+                "node", F.round("hub", round_to).alias("hub"),
+                F.round("auth", round_to).alias("auth"))
+        return out.localCheckpoint()
 
 
 def clustering_coefficient(
@@ -712,33 +682,29 @@ def clustering_coefficient(
 
     Scale shape: one join on top of the machinery both inputs already
     use at scale — ``triangle_counts`` (degree-ordered orientation,
-    O(sqrt E) wedge bound) and ``degrees`` (map-side-combined agg);
-    the final per-node join is on the uniform node key. Fully
-    SQL-expressible => full q86 oracle.
+    O(sqrt E) wedge bound) and the adjacency's degrees; the final
+    per-node join is on the uniform node key. Fully SQL-expressible =>
+    full q86 oracle.
     """
-    # persist the slim list once (r6b, guide §5): degrees here AND the
-    # whole triangle machinery below both expand ``edges``; the final
-    # join runs as its own action, which re-ran the co-occurrence build
-    # a second time uncached
-    e = edges.select("src", "dst").persist()
-    deg = degrees(e)
-    tri = triangle_counts(e)  # eager: returns a checkpointed frame
-    cc = F.when(
-        F.col("degree") >= 2,
-        (F.lit(2.0) * F.col("n_triangles").cast("double"))
-        / (F.col("degree") * (F.col("degree") - F.lit(1))).cast("double"),
-    ).otherwise(F.lit(0.0))
-    out = deg.join(tri, "node", "left").select(
-        "node", "degree",
-        F.coalesce(F.col("n_triangles"), F.lit(0)).alias("n_triangles"),
-    ).select(
-        "node", "degree", "n_triangles",
-        (F.round(cc, round_to) if round_to is not None else cc).alias("cc"),
-    )
-    # pin before releasing the cache the lazy deg side still references
-    out = out.localCheckpoint()
-    e.unpersist()
-    return out
+    with _cached() as keep:
+        # persisted once: triangle_counts rebuilds the identical
+        # _adjacency(edges) plan, which Spark serves from this cache, and
+        # the degrees below read it in the second action
+        adj = keep(_adjacency(edges))
+        tri = triangle_counts(edges)  # eager: returns a checkpointed frame
+        cc = F.when(
+            F.col("degree") >= 2,
+            (F.lit(2.0) * F.col("n_triangles").cast("double"))
+            / (F.col("degree") * (F.col("degree") - F.lit(1))).cast("double"),
+        ).otherwise(F.lit(0.0))
+        return _degrees(adj).join(tri, "node", "left").select(
+            "node", "degree",
+            F.coalesce(F.col("n_triangles"), F.lit(0)).alias("n_triangles"),
+        ).select(
+            "node", "degree", "n_triangles",
+            (F.round(cc, round_to) if round_to is not None else cc)
+            .alias("cc"),
+        ).localCheckpoint()
 
 
 def adamic_adar(
@@ -757,8 +723,9 @@ def adamic_adar(
     n_common, aa)`` with a < b; ``exclude_existing`` (default) drops
     pairs already connected — the link-PREDICTION framing.
 
-    Scale shape: wedges are generated once per apex from the
-    degree-annotated symmetric adjacency with a dst< dst ordering (each
+    Scale shape: wedges are generated once per apex by a self-join of
+    the adjacency on its src key, the apex's degree joined on from the
+    adjacency's own src partitions, with a dst < dst ordering (each
     unordered pair once per common neighbor — the same Σ deg² wedge
     budget as exact triangle counting, which is the inherent cost of
     exact common-neighbor scores; cap hub degrees upstream via
@@ -780,10 +747,10 @@ def adamic_adar(
     definition; callers feeding untrusted edge lists should set it.
     """
     # single-action operator: exchange reuse dedups the repeated
-    # ``edges`` subtrees within the one plan — a persist + checkpoint
+    # adjacency subtrees within the one plan — a persist + checkpoint
     # here measured as pure overhead (see triangle_counts)
-    e0 = edges.select("src", "dst")
-    deg = degrees(e0)
+    adj = _adjacency(edges)
+    deg = _degrees(adj)
     if max_apex_degree is not None:
         if metrics is not None:
             over = (
@@ -799,11 +766,11 @@ def adamic_adar(
             metrics["capped_apexes"] = over["n"]
             metrics["capped_wedge_rows"] = int(over["w"])
         deg = deg.where(F.col("degree") <= max_apex_degree)
-    adj = _symmetric(e0).join(
-        deg.withColumnRenamed("node", "src"), "src")
-    # wedge at apex=src: every dst pair (b < c) sharing the apex
-    left = adj.select(F.col("src").alias("_z"), F.col("dst").alias("a"),
-                      F.col("degree").alias("_dz"))
+    # wedge at apex=src: every dst pair (a < b) sharing the apex; capped
+    # apexes drop out of the left side's degree join, so out of the wedge
+    left = adj.join(deg.withColumnRenamed("node", "src"), "src").select(
+        F.col("src").alias("_z"), F.col("dst").alias("a"),
+        F.col("degree").alias("_dz"))
     right = adj.select(F.col("src").alias("_z"), F.col("dst").alias("b"))
     pairs = (
         left.join(right, "_z")
@@ -818,7 +785,7 @@ def adamic_adar(
         )
     )
     if exclude_existing:
-        ex = e0.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+        ex = edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
         pairs = pairs.join(ex, ["a", "b"], "left_anti")
     return pairs.where(F.col("aa") >= min_score)
 
@@ -834,7 +801,7 @@ def bounded_closure(
     subclass_of") every KG type system materializes for query time.
 
     Scale shape (the khop argument generalized to all sources at once):
-    the adjacency is repartitioned on src and persisted; each round
+    the directed form (partitioned on src) is persisted; each round
     extends the frontier by ONE join against it and anti-joins pairs
     already reached (minimal depth wins — a pair re-reached by a longer
     path never survives); localCheckpoint truncates lineage per round.
@@ -844,29 +811,29 @@ def bounded_closure(
     """
     if int(max_depth) < 1:
         raise ValueError("bounded_closure: max_depth must be >= 1")
-    adj = edges.select("src", "dst").distinct().repartition("src").persist()
-    reached = adj.select("src", "dst", F.lit(1).alias("depth"))
-    reached = reached.localCheckpoint()
-    frontier = reached
-    for d in range(2, int(max_depth) + 1):
-        step = (
-            frontier.select(F.col("src"), F.col("dst").alias("_mid"))
-            .join(adj.select(F.col("src").alias("_mid"),
-                             F.col("dst")), "_mid")
-            .select("src", "dst")
-            .distinct()
-            .where(F.col("src") != F.col("dst"))  # no self-loops
-            .join(reached.select("src", "dst"), ["src", "dst"],
-                  "left_anti")
-            .withColumn("depth", F.lit(d))
-            .localCheckpoint()
-        )
-        if step.isEmpty():  # converged before max_depth: stop expanding
-            break
-        reached = reached.unionByName(step).localCheckpoint()
-        frontier = step
-    adj.unpersist()
-    return reached
+    with _cached() as keep:
+        adj = keep(_directed(edges))
+        reached = adj.select("src", "dst", F.lit(1).alias("depth"))
+        reached = reached.localCheckpoint()
+        frontier = reached
+        for d in range(2, int(max_depth) + 1):
+            step = (
+                frontier.select(F.col("src"), F.col("dst").alias("_mid"))
+                .join(adj.select(F.col("src").alias("_mid"),
+                                 F.col("dst")), "_mid")
+                .select("src", "dst")
+                .distinct()
+                .where(F.col("src") != F.col("dst"))  # no self-loops
+                .join(reached.select("src", "dst"), ["src", "dst"],
+                      "left_anti")
+                .withColumn("depth", F.lit(d))
+                .localCheckpoint()
+            )
+            if step.isEmpty():  # converged before max_depth: stop expanding
+                break
+            reached = reached.unionByName(step).localCheckpoint()
+            frontier = step
+        return reached
 
 
 def personalized_pagerank(
@@ -884,62 +851,26 @@ def personalized_pagerank(
     ``seeds`` is a (node) frame; seeds absent from the graph are
     ignored; init = the seed distribution. Output (node, degree, pr).
 
-    Scale shape = pagerank's: degree-annotated adjacency repartitioned
-    + persisted once, ONE Exchange per iteration (contribution
-    groupBy), teleport vector joined as a slim broadcast frame,
-    localCheckpoint per step. The q98 oracle unrolls the identical
-    updates.
+    Scale shape = pagerank's, through the same ``_power_iteration``:
+    the teleport mass ``(1-d) * s(v)`` (``s`` = 1/|seeds| on seeds, 0
+    elsewhere) rides in the rank frame, joined on once from a slim
+    broadcast seed frame. The q98 oracle unrolls the identical updates.
     """
-    # slim canonical list persisted once (r6b, guide §5): degrees and
-    # the symmetric adjacency both expand the (usually lazy) builder
-    e = edges.select("src", "dst").persist()
-    deg = degrees(e).persist()
-    seed_nodes = deg.join(
-        seeds.select("node").distinct(), "node", "left_semi")
-    ns = seed_nodes.count()
-    if ns == 0:
-        deg.unpersist()
-        e.unpersist()
-        raise ValueError(
-            "personalized_pagerank: no seed appears in the graph")
-    adj = (
-        _symmetric(e)
-        .join(deg.withColumnRenamed("node", "src"), "src")
-        .repartition("src")
-        .persist()
-    )
-    tele = (
-        deg.select("node")
-        .join(F.broadcast(
-            seed_nodes.select("node").withColumn(
-                "_s", F.lit(1.0 / float(ns)))), "node", "left")
-        .select("node", F.coalesce(F.col("_s"), F.lit(0.0)).alias("s"))
-        .localCheckpoint()
-    )
-    ranks = tele.select("node", F.col("s").alias("pr")).localCheckpoint()
-    for _ in range(n_iter):
-        contribs = (
-            adj.join(ranks.withColumnRenamed("node", "src"), "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.col("pr") / F.col("degree")).alias("_in"))
-        )
+    with _cached() as keep:
+        adj = keep(_adjacency(edges))
+        deg = _degrees(adj).localCheckpoint()  # also materializes adj
+        seed_nodes = deg.join(
+            seeds.select("node").distinct(), "node", "left_semi")
+        ns = seed_nodes.count()
+        if ns == 0:
+            raise ValueError(
+                "personalized_pagerank: no seed appears in the graph")
+        s = F.coalesce(F.col("_s"), F.lit(0.0))
         ranks = (
-            tele.join(contribs, "node", "left")
-            .select(
-                "node",
-                (F.lit(1.0 - damping) * F.col("s")
-                 + F.lit(damping)
-                 * F.coalesce(F.col("_in"), F.lit(0.0))).alias("pr"),
-            )
+            deg.join(F.broadcast(seed_nodes.select(
+                "node", F.lit(1.0 / float(ns)).alias("_s"))), "node", "left")
+            .select("node", "degree",
+                    (F.lit(1.0 - damping) * s).alias("_t"), s.alias("pr"))
             .localCheckpoint()
         )
-    out = ranks.join(deg, "node").select(
-        "node", "degree",
-        (F.round("pr", round_to) if round_to is not None
-         else F.col("pr")).alias("pr"),
-    )
-    out = out.localCheckpoint()
-    adj.unpersist()
-    deg.unpersist()
-    e.unpersist()
-    return out
+        return _power_iteration(adj, ranks, n_iter, damping, round_to)

@@ -117,10 +117,3 @@ TRIPLE_SCHEMA = StructType(
         StructField("partition_id", IntegerType(), True),  # lineage
     ]
 )
-
-LABEL_NAMES_SCHEMA = StructType(
-    [
-        StructField("label", StringType(), False),
-        StructField("name", StringType(), False),
-    ]
-)

@@ -107,7 +107,3 @@ def alias_df(spark: SparkSession, cfg: SynthConfig) -> DataFrame:
 def entities_df(spark: SparkSession, cfg: SynthConfig) -> DataFrame:
     return spark.createDataFrame(synth.entity_catalog(cfg), schema.ENTITY_SCHEMA)
 
-
-def label_names_df(spark: SparkSession) -> DataFrame:
-    rows = [{"label": k, "name": v} for k, v in synth.LABELS2NAMES.items()]
-    return spark.createDataFrame(rows, schema.LABEL_NAMES_SCHEMA)

@@ -14,7 +14,6 @@ few-dozen-key column, collected to a driver dict (tiny by construction).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from generative_ner_spark import schema
 
@@ -24,10 +23,6 @@ def load_documents_json(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(schema.DOCUMENT_SCHEMA).json(path)
 
 
-def load_documents_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def discover_labels(golds: DataFrame, label_col: str = "label") -> dict[str, str]:
     """Distinct sorted labels -> identity labels2names (run.py:44-50 parity:
     when no labels2names mapping is configured, name == label)."""
@@ -35,12 +30,3 @@ def discover_labels(golds: DataFrame, label_col: str = "label") -> dict[str, str
         golds.select(label_col).distinct().orderBy(label_col).collect()
     )
     return {r[label_col]: r[label_col] for r in rows}
-
-
-def discover_labels_from_docs(docs_with_examples: DataFrame) -> dict[str, str]:
-    """Same discovery over the nested document shape
-    (doc_id, examples[].entities[].label) produced by conll ingestion."""
-    ex = docs_with_examples.select(F.explode("examples").alias("ex"))
-    ent = ex.select(F.explode("ex.entities").alias("e"))
-    rows = ent.select(F.col("e.label").alias("label")).distinct().orderBy("label").collect()
-    return {r["label"]: r["label"] for r in rows}

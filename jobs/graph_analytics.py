@@ -23,10 +23,14 @@ signal tables downstream curation consumes:
         jobs/graph_analytics.py --edges /data/edges -o /tmp/graph \
         --pagerank --triangles --khop-seeds /data/seeds --khop 3
 
-Scale notes are in operators/graph.py: the adjacency is built once per
-stage from the same canonical edge frame (persisted here so the three
-stages don't re-read the input), PageRank pays ONE Exchange per
-iteration, triangles are degree-oriented, BFS is frontier-only.
+Scale notes are in operators/graph.py. The canonical edge frame is
+persisted here, so the stages don't re-read the input. Each stage builds
+one of two edge forms from it: the symmetric adjacency partitioned and
+sorted by src (undirected operators), or the distinct directed list
+partitioned by src (hits, closure). It derives what else it needs from
+that form and releases its caches before the next stage. PageRank and
+personalized PageRank share one loop with ONE Exchange per iteration,
+triangles are degree-oriented, BFS is frontier-only.
 """
 
 from __future__ import annotations

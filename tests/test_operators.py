@@ -1251,6 +1251,12 @@ class TestDedupSimilarity:
         g = {r.fingerprint: r for r in groups.collect()}
         # normalization makes rows 1+2 identical
         assert sorted(r.n_docs for r in g.values()) == [1, 2]
+        # the group key is the per-document fingerprint column
+        from generative_ner_spark.operators import quality
+
+        fp = {r.doc_id: r.fp for r in df.select(
+            "doc_id", quality.fingerprint_col("text").alias("fp")).collect()}
+        assert set(g) == set(fp.values()) and fp[1] == fp[2] != fp[3]
         kept = dedup.dedup_exact(df)
         assert kept.count() == 2
         assert {r.doc_id for r in kept.collect()} == {1, 3}
@@ -4774,6 +4780,23 @@ class TestBucketByGroupQuantiles:
                 df, "g", "v", probs=(0.9, 0.1), labels=("x", "y", "z"))
 
 
+# every public graph operator that takes an edge list; ``s`` = seeds
+_GRAPH_OPS = {
+    "pagerank": lambda g, e, s: g.pagerank(e),
+    "triangle_counts": lambda g, e, s: g.triangle_counts(e),
+    "khop_neighbors": lambda g, e, s: g.khop_neighbors(e, s),
+    "random_walks": lambda g, e, s: g.random_walks(e),
+    "components": lambda g, e, s: g.components(e),
+    "label_propagation": lambda g, e, s: g.label_propagation(e),
+    "triangle_count_approx": lambda g, e, s: g.triangle_count_approx(e),
+    "hits": lambda g, e, s: g.hits(e),
+    "clustering_coefficient": lambda g, e, s: g.clustering_coefficient(e),
+    "adamic_adar": lambda g, e, s: g.adamic_adar(e),
+    "bounded_closure": lambda g, e, s: g.bounded_closure(e),
+    "personalized_pagerank": lambda g, e, s: g.personalized_pagerank(e, s),
+}
+
+
 class TestHits:
     def test_hub_authority_structure(self, spark):
         from generative_ner_spark.operators import graph
@@ -4790,14 +4813,31 @@ class TestHits:
         assert abs(sum(r.hub for r in out.values()) - 1.0) < 1e-6
         assert abs(sum(r.auth for r in out.values()) - 1.0) < 1e-6
 
-    def test_empty_graph(self, spark):
+    @pytest.mark.parametrize("op,graph_kind", [
+        *((op, kind) for op in _GRAPH_OPS for kind in ("five_edges", "empty")),
+        ("personalized_pagerank", "seed_absent"),
+    ])
+    def test_empty_graph(self, spark, op, graph_kind):
+        """Every operator releases every frame it persisted, on the
+        normal, the empty-graph and the no-seed ValueError path."""
         from generative_ner_spark.operators import graph
 
-        edges = spark.createDataFrame([], "src string, dst string")
+        pairs = [] if graph_kind == "empty" else [
+            (1, 2), (2, 3), (1, 3), (3, 4), (4, 5)]
+        edges = spark.createDataFrame(pairs, "src long, dst long")
+        seeds = spark.createDataFrame(
+            [(99,) if graph_kind == "seed_absent" else (1,)], "node long")
         cache = spark._jsparkSession.sharedState().cacheManager()
         before = cache.numCachedEntries()
-        assert graph.hits(edges).count() == 0
-        # the empty path releases every frame it persisted
+        if op == "personalized_pagerank" and graph_kind != "five_edges":
+            with pytest.raises(ValueError):
+                _GRAPH_OPS[op](graph, edges, seeds)
+        else:
+            n = _GRAPH_OPS[op](graph, edges, seeds).count()
+            if graph_kind == "five_edges":
+                assert n > 0
+            else:  # khop keeps its seed; the estimate is one row
+                assert n == (op in ("khop_neighbors", "triangle_count_approx"))
         assert cache.numCachedEntries() <= before
 
 
@@ -5181,6 +5221,23 @@ class TestPersonalizedPagerank:
         oute = {r.node: r.pr for r in graph.personalized_pagerank(
             edges, seeds_e, n_iter=4).collect()}
         assert oute["d"] + oute["e"] > oute["a"] + oute["b"]
+
+    def test_every_node_seeded_equals_pagerank(self, spark):
+        """One power-iteration loop: teleporting to every node is PageRank
+        (n_iter 6 also crosses a lineage checkpoint)."""
+        from generative_ner_spark.operators import graph
+
+        k4 = [(10, 11), (10, 12), (10, 13), (11, 12), (11, 13), (12, 13)]
+        extra = [(13, 20), (13, 21), (20, 21), (21, 30)]
+        edges = spark.createDataFrame(k4 + extra, "src long, dst long")
+        seeds = graph.degrees(edges).select("node")
+        for n_iter, damping in ((3, 0.85), (6, 0.7)):
+            want = sorted(graph.pagerank(
+                edges, n_iter=n_iter, damping=damping, round_to=6).collect())
+            got = sorted(graph.personalized_pagerank(
+                edges, seeds, n_iter=n_iter, damping=damping,
+                round_to=6).collect())
+            assert got == want
 
     def test_no_seed_in_graph_raises(self, spark):
         import pytest as _pytest
