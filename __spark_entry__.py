@@ -22,22 +22,7 @@ from pyspark.sql import functions as F
 
 from generative_ner_spark.operators import dedup, quality, similarity
 from generative_ner_spark.operators.quality import LANG_MARKERS
-
-
-def _par(df: DataFrame) -> DataFrame:
-    """Scale-adaptive scan parallelization (optimization guide §2.5
-    "input skew" / §6 small files): the testdata tables are single-file,
-    single-row-group parquet, so their scans plan as ONE task — and every
-    per-row-expensive projection that Catalyst collapses into the scan
-    stage (md5 shingling, minhash aggregates, Arrow UDF batches) then
-    runs serially on one core while the rest idle. Repartition up to the
-    cluster's defaultParallelism ONLY when the scan has fewer partitions:
-    at production scale a 100 TB table plans thousands of splits and this
-    is a no-op; locally it costs one slim exchange of the raw rows and
-    buys full-width execution of everything downstream."""
-    from generative_ner_spark.plans.session import adaptive_min_partitions
-
-    return adaptive_min_partitions(df)
+from generative_ner_spark.plans.session import adaptive_min_partitions
 
 
 # CPU-heavy consumers (shingling/minhash/simhash/Arrow UDFs) read these;
@@ -49,15 +34,15 @@ _PAR_TABLES = {"documents", "embeddings"}
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    return _par(df) if name in _PAR_TABLES else df
+    return adaptive_min_partitions(df) if name in _PAR_TABLES else df
 
 
 def _t_seq(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read WITHOUT the _par scan repartition — for scan-cheap queries
-    (one md5 per row, or no text column at all) where the
-    parallelization exchange costs more than the serial compute it
+    """Read WITHOUT the adaptive_min_partitions scan repartition — for
+    scan-cheap queries (one md5 per row, or no text column at all) where
+    the parallelization exchange costs more than the serial compute it
     would spread (measured in OPTIMIZATION_r06: q22/q44/q97 regressed
-    0.3-0.6 s each under _par while gaining nothing)."""
+    0.3-0.6 s each under the repartition while gaining nothing)."""
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
@@ -444,7 +429,7 @@ def q26_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q27_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-(source, lang) curation aggregates over quality features.
 
-    Reads documents WITHOUT the _par scan repartition: avg_stopword_ratio
+    Reads documents WITHOUT the scan repartition: avg_stopword_ratio
     is a float average whose round-6 value sits on a rounding boundary at
     some SFs, so Spark must replay DuckDB's sequential per-group addition
     order — a repartitioned scan reorders the FP sum and flips the 6th
@@ -1131,9 +1116,9 @@ def _part_coocc_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     the market-basket stand-in for the KG's entity co-mention graph."""
     from generative_ner_spark.operators import graph
 
-    # NO _par here (measured in OPTIMIZATION_r06): the first operator is
-    # a groupBy(basket) that reshuffles anyway, so a round-robin exchange
-    # of 6M rows ahead of it costs ~8s and buys nothing
+    # NO scan repartition here (measured in OPTIMIZATION_r06): the first
+    # operator is a groupBy(basket) that reshuffles anyway, so a
+    # round-robin exchange of 6M rows ahead of it costs ~8s and buys nothing
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     return graph.cooccurrence_edges(
         li, basket_col="l_orderkey", item_col="l_partkey")

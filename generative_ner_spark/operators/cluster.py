@@ -202,7 +202,7 @@ def semantic_dedup(
     vb = cells.select(F.col(id_col).alias("b"), F.col(vec_col).alias("_vb"))
     dropped = (
         pairs.join(va, "a").join(vb, "b")
-        .where(cosine_col(F.col("_va"), F.col("_vb"), dim)
+        .where(cosine_col(F.col("_va"), F.col("_vb"))
                >= F.lit(float(cosine_threshold)))
         .select(F.col("b").alias(id_col))
         .distinct()

@@ -1,8 +1,8 @@
 """Similarity search over an embedding column (array<float>).
 
 * brute_force_topk — exact cosine top-k for a single query vector: the query
-  is a literal array baked into the plan (no join at all); score is a
-  zip_with/aggregate expression (JVM, codegen), top-k via orderBy+limit
+  is a literal array baked into the plan (no join at all); score is the
+  cosine_col numpy kernel (one Arrow pass), top-k via orderBy+limit
   (Spark plans TakeOrderedAndProject — a per-partition heap + driver merge,
   NOT a full sort shuffle; this is the right plan at any scale).
 * knn_join_topk — exact k-NN for MANY queries: one numpy-matmul Arrow pass
@@ -27,6 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
+from pyspark.sql.types import DoubleType
 
 
 # Driver-side query collects are bounded by this default (overridable per
@@ -59,43 +60,8 @@ def _collect_query_rows(queries: DataFrame, cols: list[str],
     return rows
 
 
-def _dot(a, b, dim: int | None = None):
-    if dim is not None:
-        return _unrolled_sum(
-            [F.try_element_at(a, F.lit(i)).cast("double")
-             * F.try_element_at(b, F.lit(i)).cast("double")
-             for i in range(1, dim + 1)])
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _unrolled_sum(terms):
-    """lit(0.0) + t1 + ... + tn, LEFT-ASSOCIATIVE — the exact FP addition
-    sequence of the aggregate() fold it replaces, so the two forms are
-    bit-identical on equal-length arrays. Why unroll at all (r6, guide
-    §4.1): higher-order array functions are CodegenFallback — the lambda
-    runs interpreted per element, which dominates the exact-cosine verify
-    on millions of candidate pairs — while the unrolled chain is plain
-    whole-stage-codegen arithmetic. Only used when the caller declares a
-    fixed ``dim`` (the expression tree is O(dim): fine at 64-1024, not
-    for unbounded arrays). try_element_at: a shorter-than-dim array
-    yields NULL (matching zip_with's NULL padding) instead of ANSI's
-    INVALID_ARRAY_INDEX."""
-    out = F.lit(0.0)
-    for t in terms:
-        out = out + t
-    return out
-
-
-def _norm(a, dim: int | None = None):
-    if dim is not None:
-        sq = [F.try_element_at(a, F.lit(i)).cast("double")
-              * F.try_element_at(a, F.lit(i)).cast("double")
-              for i in range(1, dim + 1)]
-        return F.sqrt(_unrolled_sum(sq))
+def _norm(a):
+    """L2 norm as a left fold over the array (q16's norm column)."""
     return F.sqrt(
         F.aggregate(
             F.transform(a, lambda x: x.cast("double") * x.cast("double")),
@@ -105,14 +71,38 @@ def _norm(a, dim: int | None = None):
     )
 
 
-def cosine_col(a, b, dim: int | None = None):
-    # try_divide, not '/': Spark 4 ANSI mode raises DIVIDE_BY_ZERO on a
-    # double zero denominator, so ONE all-zero embedding (an empty-doc
-    # vector — and zero vectors reliably enter candidate sets: they land
-    # in LSH bucket 0 / one IVF cell) would crash every JVM scoring path.
-    # A zero-norm side yields NULL cosine instead; desc ordering sorts
-    # NULLs last, so degenerate vectors simply never rank.
-    return F.try_divide(_dot(a, b, dim), _norm(a, dim) * _norm(b, dim))
+@pandas_udf(DoubleType())
+def cosine_col(a: pd.Series, b: pd.Series) -> pd.Series:
+    """Exact cosine of two array columns: the one pairwise scorer of every
+    exact re-rank and verify (this module and cluster.semantic_dedup).
+    A numpy Arrow kernel, not an expression: the aggregate/zip_with fold
+    runs interpreted per element (CodegenFallback), and a dim-unrolled
+    chain overflows the JVM's 64 KB method limit at dim 64.
+
+    Rows are stacked per array length; the dot product and both squared
+    norms are LEFT folds over the columns from 0.0
+    (``acc = acc + A[:, i] * B[:, i]``), the addition order of Spark's
+    aggregate fold, so the doubles are bit-identical to it (np.dot/matmul
+    sums pairwise). NULL (numpy NaN -> Arrow null) for a zero norm, a NULL
+    array, a NULL element (NaN after Arrow) or unequal lengths; desc
+    ordering sorts NULLs last, so degenerate vectors never rank."""
+    out = np.full(len(a), np.nan)
+    na = np.array([-1 if v is None else len(v) for v in a], dtype=np.int64)
+    nb = np.array([-1 if v is None else len(v) for v in b], dtype=np.int64)
+    ok = (na == nb) & (na >= 0)
+    for d in np.unique(na[ok]):
+        rows = np.flatnonzero(ok & (na == d))
+        A, B = (np.array([s.iat[r] for r in rows], dtype=np.float64)
+                .reshape(len(rows), d) for s in (a, b))
+        dot = sa = sb = np.zeros(len(rows))
+        for i in range(d):
+            dot = dot + A[:, i] * B[:, i]
+            sa = sa + A[:, i] * A[:, i]
+            sb = sb + B[:, i] * B[:, i]
+        den = np.sqrt(sa) * np.sqrt(sb)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            out[rows] = np.where(den == 0.0, np.nan, dot / den)
+    return pd.Series(out)
 
 
 def brute_force_topk(
@@ -823,11 +813,8 @@ def embedding_near_dup_pairs(
         pairs
         .join(vecs.select(F.col("_id").alias("a"), F.col("_vec").alias("va")), "a")
         .join(vecs.select(F.col("_id").alias("b"), F.col("_vec").alias("vb")), "b")
-        # dim passed through -> unrolled codegen cosine (bit-identical to
-        # the fold; the interpreted HOF dominated this verify at 6M
-        # candidate pairs on the sf1.0 salted corpus)
         .withColumn("cosine",
-                    F.round(cosine_col(F.col("va"), F.col("vb"), dim), 6))
+                    F.round(cosine_col(F.col("va"), F.col("vb")), 6))
         .where(F.col("cosine") >= cosine_threshold)
         .select("a", "b", "cosine")
     )

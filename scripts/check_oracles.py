@@ -7,16 +7,20 @@ row count, column names, and order-insensitive values (floats rounded to
 float outputs, so both sides land on identical decimals).
 
 Usage: python scripts/check_oracles.py [sf_dir] [query ...]
+A query is its full name or a unique short name such as ``q25``.
 """
 
 from __future__ import annotations
 
 import math
 import sys
+from pathlib import Path
 
 import duckdb
 
-import __spark_entry__ as entrymod
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+
+import __spark_entry__ as entrymod  # noqa: E402
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -59,6 +63,25 @@ def rows_key(rows, cols):
     return sorted(normed, key=lambda row: tuple(_sort_key(c) for c in row))
 
 
+def resolve_names(args, names):
+    """Map each argument to a query name: an exact name, or the one name
+    it prefixes up to an underscore (``q25`` -> ``q25_...``). An unknown
+    or ambiguous argument exits non-zero, so a typo'd filter can never
+    check nothing and report success."""
+    out, bad = set(), []
+    for a in args:
+        hits = ([a] if a in names
+                else [n for n in names if n.startswith(a + "_")])
+        if len(hits) == 1:
+            out.add(hits[0])
+        else:
+            bad.append(f"{a}: ambiguous {hits}" if hits else f"{a}: unknown")
+    if bad:
+        raise SystemExit(f"bad query name(s): {'; '.join(bad)}; "
+                         f"known: {sorted(names)}")
+    return out
+
+
 def main():
     # optional: --json PATH writes a driver-shaped per-query artifact
     # (CORRECTNESS_FULL.json, r5 VERDICT "next round" item 3) covering
@@ -70,7 +93,6 @@ def main():
         json_path = args[i + 1]
         args = args[:i] + args[i + 2:]
     sf_dir = args[0] if args else "/root/testdata/sf0.001"
-    only = set(args[1:])
 
     from generative_ner_spark.plans.session import build_session
 
@@ -84,12 +106,7 @@ def main():
         )
 
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
-    unknown = only - set(qs)
-    if unknown:
-        # a typo'd filter used to silently check NOTHING and exit 0 —
-        # the gate reporting success with zero oracles run
-        raise SystemExit(f"unknown query name(s): {sorted(unknown)}; "
-                         f"known: {sorted(qs)}")
+    only = resolve_names(args[1:], qs)
     failures = []
     report = {}
     for name, fn in qs.items():
@@ -153,7 +170,7 @@ def main():
         else:
             print(f"ok   {name}: {len(srows)} rows match oracle")
 
-    print(f"\n{len(failures)} failures / {len(qs)} queries")
+    print(f"\n{len(failures)} failures / {len(report)} queries run")
     if json_path is not None:
         import json
 

@@ -1753,8 +1753,9 @@ class TestDedupSimilarity:
     def test_lsh_index_writable_and_reusable(self, spark, tmp_path):
         """The ANN index is a plain table: write it, read it back, probe the
         reloaded copy — identical results, zero re-bucketing of the corpus
-        (the probe plan over the reloaded index is scan+filter+topk only,
-        no Python stage)."""
+        (the probe plan over the reloaded index is scan+filter+cosine+topk:
+        its one Python stage is the cosine kernel, never the bucketing
+        UDF)."""
         import random
 
         rng = random.Random(11)
@@ -1776,7 +1777,8 @@ class TestDedupSimilarity:
         plan = similarity.probe_lsh_index(reloaded, q, k=6) \
             ._jdf.queryExecution().executedPlan().toString()
         assert "TakeOrderedAndProject" in plan
-        assert "ArrowEvalPython" not in plan and "MapInPandas" not in plan
+        assert plan.count("ArrowEvalPython") == 1 and "cosine_col" in plan
+        assert "buckets_udf" not in plan and "MapInPandas" not in plan
 
     def test_embedding_near_dup_pairs(self, spark):
         import random
@@ -1792,6 +1794,68 @@ class TestDedupSimilarity:
         got = {(r.a, r.b) for r in pairs.collect()}
         assert (0, 1) in got
         assert all({a, b} <= {0, 1} for a, b in got)
+
+    @pytest.mark.parametrize("dim", [4, 64])
+    def test_cosine_kernel_equals_left_fold(self, spark, dim):
+        """cosine_col's doubles equal a pure-Python left fold bit for bit
+        (compared unrounded with ==), and it is NULL for a zero vector, a
+        NULL array, a NULL element and unequal lengths."""
+        import random
+
+        import numpy as np
+
+        rng = random.Random(dim)
+
+        def vec():
+            return [float(np.float32(rng.gauss(0, 1))) for _ in range(dim)]
+
+        def fold(a, b):
+            dot = sa = sb = 0.0
+            for x, y in zip(a, b):
+                dot = dot + x * y
+                sa = sa + x * x
+                sb = sb + y * y
+            return dot / (math.sqrt(sa) * math.sqrt(sb))
+
+        rows = [(i, vec(), vec()) for i in range(200)]
+        null_el = vec()
+        null_el[dim // 2] = None
+        degenerate = [(1000, vec(), [0.0] * dim), (1001, None, vec()),
+                      (1002, vec(), null_el), (1003, vec(), vec()[:-1])]
+        df = spark.createDataFrame(
+            rows + degenerate, "id long, a array<float>, b array<float>")
+        got = {r.id: r.c for r in df.select(
+            "id", similarity.cosine_col("a", "b").alias("c")).collect()}
+        assert all(got[i] == fold(a, b) for i, a, b in rows)
+        assert [got[i] for i, _, _ in degenerate] == [None] * 4
+
+    def test_fixed_dim_scorers_compile_without_fallback(self, spark):
+        """The q25/q48 scorers at dim 64 run in generated code: with
+        codegen fallback off, a generated method over the JVM's 64 KB
+        limit raises instead of silently running interpreted."""
+        import numpy as np
+
+        from generative_ner_spark.operators import cluster
+
+        rng = np.random.RandomState(64)
+        base = rng.normal(size=(40, 64)).astype(np.float32)
+        rows = [(i, [float(x) for x in v]) for i, v in enumerate(base)]
+        rows += [(100 + i, rows[i][1]) for i in range(5)]  # planted copies
+        em = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+        key = "spark.sql.codegen.fallback"
+        prev = spark.conf.get(key)
+        spark.conf.set(key, "false")
+        try:
+            pairs = similarity.embedding_near_dup_pairs(
+                em, dim=64, cosine_threshold=0.99)
+            dropped = cluster.semantic_dedup(
+                em, dim=64, k=4, iters=2).where(~F.col("kept"))
+            got_pairs = {(r.a, r.b) for r in pairs.collect()}
+            got_dropped = {r.vec_id for r in dropped.collect()}
+        finally:
+            spark.conf.set(key, prev)
+        assert got_pairs == {(i, 100 + i) for i in range(5)}
+        assert got_dropped == {100 + i for i in range(5)}
 
     def test_knn_join(self, spark):
         em = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
