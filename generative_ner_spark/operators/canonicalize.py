@@ -32,6 +32,8 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from generative_ner_spark.plans.session import checkpoint_observed
+
 
 def with_shingles(df: DataFrame, name_col: str = "name", n: int = 3,
                   out: str = "shingles") -> DataFrame:
@@ -460,10 +462,10 @@ def connected_components(
     # materialize ONCE up front: the regime-selecting count plus either
     # regime's consumption (driver collect / distributed symmetrize) would
     # otherwise execute the caller's whole upstream plan twice — for a
-    # generic caller that can be an entire LSH blocking pass
-    edges = edges.localCheckpoint()
-    n_edges = edges.count()
-    if n_edges <= driver_threshold:
+    # generic caller that can be an entire LSH blocking pass; the count
+    # rides the checkpoint's own jobs
+    edges, seen = checkpoint_observed(edges)
+    if seen["n"] <= driver_threshold:
         parent: dict = {}
 
         def find(x):
@@ -512,29 +514,25 @@ def connected_components(
         .localCheckpoint()  # cut the upstream (LSH) DAG once, or every
         # round re-runs the whole blocking plan
     )
-    def _edge_sig(df: DataFrame) -> tuple:
-        """(count, order-independent xxhash64 fingerprint) in ONE pass —
-        the r6 convergence probe. The r5 check ran count() PLUS a full
-        exceptAll anti-join job per round; two scalar aggregates compare
-        the same sets with collision odds ~2^-64 per round (the star
-        rounds are monotone label-lowering, so a collision would merely
-        stop one round early on an astronomically unlikely fingerprint
-        tie — and both stars' output is already deduplicated, making
-        count+multiset-hash equality set equality)."""
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr("bit_xor(xxhash64(l, s))").alias("h"),
-        ).first()
-        return row["n"], row["h"]
-
     prev = None
     prev_sig = None
     stars = None
     converged = False
     rounds = 0
     for rounds in range(1, max_iter + 1):
-        ss = _small_star(_large_star(cur)).localCheckpoint()
-        sig = _edge_sig(ss)
+        # convergence signature (r6): (count, order-independent xxhash64
+        # fingerprint), observed by the round's own checkpoint jobs. The
+        # r5 check ran count() PLUS a full exceptAll anti-join job per
+        # round; two scalar aggregates compare the same sets with
+        # collision odds ~2^-64 per round (the star rounds are monotone
+        # label-lowering, so a collision would merely stop one round
+        # early on an astronomically unlikely fingerprint tie — and both
+        # stars' output is already deduplicated, making
+        # count+multiset-hash equality set equality)
+        ss, seen = checkpoint_observed(
+            _small_star(_large_star(cur)),
+            F.expr("bit_xor(xxhash64(l, s))").alias("h"))
+        sig = (seen["n"], seen["h"])
         if prev_sig is not None and sig == prev_sig:
             stars, converged = ss, True
             break

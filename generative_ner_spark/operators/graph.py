@@ -36,6 +36,10 @@ Scale shape, sized for 100 TB of edges:
 * ``khop_neighbors`` is frontier BFS: hop i joins ONLY the hop-(i-1)
   frontier (not the whole visited set) against the adjacency, anti-joins
   the visited set, unions. Frontiers are localCheckpointed per hop.
+* A scalar a loop needs about a frame it pins (a frontier's emptiness,
+  the node count, HITS' normalization totals) is observed by that
+  frame's checkpoint jobs (``checkpoint_observed``), never read by a
+  second probe job after it.
 """
 
 from __future__ import annotations
@@ -45,6 +49,8 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from generative_ner_spark.plans.session import checkpoint_observed
+
 
 # PageRank, personalized PageRank and label propagation truncate lineage
 # every this-many steps instead of every step, and pin their result once
@@ -53,7 +59,8 @@ from pyspark.sql import functions as F
 # per-step checkpoint pays an eager job and a full materialization per
 # step for a lineage problem that only exists past ~5 chained steps.
 # The frontier operators (khop, walks, closure) materialize every step
-# anyway: each step's emptiness decides whether to go on.
+# anyway: each step's emptiness, observed by that checkpoint, decides
+# whether to go on.
 _CHECKPOINT_EVERY = 4
 
 
@@ -227,14 +234,16 @@ def pagerank(
     q58 oracle's unrolled SQL.
 
     Scale shape: the adjacency is persisted once; degrees come off its
-    src partitions into a checkpointed rank frame, and the shared
+    src partitions into a checkpointed frame whose jobs also count the
+    nodes, the rank frame is a projection of it, and the shared
     ``_power_iteration`` pays ONE Exchange per step, with lineage
     truncated every ``_CHECKPOINT_EVERY`` steps.
     """
     with _cached() as keep:
         adj = keep(_adjacency(edges))
-        deg = _degrees(adj).localCheckpoint()  # also materializes adj
-        n = deg.count()
+        # also materializes adj; the node count rides the same jobs
+        deg, seen = checkpoint_observed(_degrees(adj))
+        n = seen["n"]
         if n == 0:  # empty graph: empty (node, degree, pr) frame, no 1/0
             return deg.withColumn("pr", F.lit(0.0))
         ranks = deg.select(
@@ -342,8 +351,9 @@ def khop_neighbors(
     Frontier BFS: hop i expands ONLY the hop-(i-1) frontier against the
     persisted adjacency and anti-joins the visited set — work per hop is
     O(frontier x avg-degree), never O(visited). Early-exits when a
-    frontier empties. Each hop's frames are localCheckpointed so the
-    final union is k shallow scans, not a k-deep join tree. The cached
+    frontier empties, as counted by the hop's own checkpoint jobs (no
+    separate emptiness job). Each hop's frames are localCheckpointed so
+    the final union is k shallow scans, not a k-deep join tree. The cached
     adjacency records its src sort, so when the per-hop join planner
     picks sort-merge (a large frontier at scale), the 2E-row side skips
     both its exchange and its per-hop re-sort — only the slim frontier
@@ -363,15 +373,14 @@ def khop_neighbors(
         )
         frontier = visited.select("node")
         for i in range(1, k + 1):
-            nxt = (
+            nxt, seen = checkpoint_observed(
                 adj.join(frontier.withColumnRenamed("node", "src"), "src")
                 .select(F.col("dst").alias("node"))
                 .distinct()
                 .join(visited.select("node"), "node", "left_anti")
                 .withColumn("hop", F.lit(i))
-                .localCheckpoint()
             )
-            if nxt.isEmpty():
+            if seen["n"] == 0:
                 break
             visited = visited.unionByName(nxt)
             frontier = nxt.select("node")
@@ -454,7 +463,7 @@ def random_walks(
             h = _md5_rank(
                 F.concat_ws(":", F.col("walk_id").cast("string"),
                             F.lit(str(i))), salt)
-            nxt = (
+            nxt, seen = checkpoint_observed(
                 frontier  # inner join: degree-0 walks stop here (no _nb row)
                 .join(nbrs.withColumnRenamed("src", "_cur"), "_cur")
                 .select(
@@ -464,9 +473,8 @@ def random_walks(
                         (F.pmod(h, F.size("_nb")) + F.lit(1)).cast("int"),
                     ).alias("node"),
                 )
-                .localCheckpoint()
             )
-            if nxt.isEmpty():
+            if seen["n"] == 0:
                 break
             steps.append(nxt)
             frontier = nxt.select("walk_id", "start_node",
@@ -610,48 +618,43 @@ def hits(
     the alternating half-steps join on — so neither half-step reshuffles
     the edges (the score frame arrives hash-partitioned on node from the
     previous groupBy, and both join sides align). Each half-step is ONE
-    map-side-combined groupBy; normalization totals cross the driver as
-    single scalars; the RAW per-half-step aggregate is localCheckpointed
-    (it feeds both the total and the normalized frame) and the
-    normalized frames stay lazy projections of it.
+    map-side-combined groupBy whose RAW aggregate is localCheckpointed;
+    the checkpoint's own jobs also observe the normalization total, and
+    the normalized frame is a lazy projection of it. The node set is
+    one observed checkpoint too (its count sets the uniform init), so
+    no job runs only to read a scalar.
     """
     with _cached() as keep:
         e_src = keep(_directed(edges))
         # derived FROM the cached src copy (already distinct — one more
         # slim exchange, no second expansion of the upstream edge build)
         e_dst = keep(e_src.repartition("dst"))
-        nodes = keep(
+        nodes, seen = checkpoint_observed(
             e_src.select(F.col("src").alias("node"))
             .unionByName(e_dst.select(F.col("dst").alias("node")))
             .distinct()
         )
-        n = nodes.count()
+        n = seen["n"]
         if n == 0:
             return nodes.select(
                 "node", F.lit(0.0).alias("hub"), F.lit(0.0).alias("auth"))
-        hub = nodes.select(
-            "node", (F.lit(1.0) / F.lit(float(n))).alias("hub")
-        ).localCheckpoint()
+        hub = nodes.select("node", (F.lit(1.0) / F.lit(float(n))).alias("hub"))
         auth = None
         for _ in range(n_iter):
-            araw = (
+            araw, seen = checkpoint_observed(
                 e_src.join(hub.withColumnRenamed("node", "src"), "src")
                 .groupBy(F.col("dst").alias("node"))
-                .agg(F.sum("hub").alias("_raw"))
-            ).localCheckpoint()
-            atot = araw.agg(F.sum("_raw")).first()[0]
-            auth = araw.select(
-                "node", (F.col("_raw") / F.lit(float(atot))).alias("auth")
-            )
-            hraw = (
+                .agg(F.sum("hub").alias("_raw")),
+                F.sum("_raw").alias("tot"))
+            auth = araw.select("node",
+                               (F.col("_raw") / seen["tot"]).alias("auth"))
+            hraw, seen = checkpoint_observed(
                 e_dst.join(auth.withColumnRenamed("node", "dst"), "dst")
                 .groupBy(F.col("src").alias("node"))
-                .agg(F.sum("auth").alias("_raw"))
-            ).localCheckpoint()
-            htot = hraw.agg(F.sum("_raw")).first()[0]
-            hub = hraw.select(
-                "node", (F.col("_raw") / F.lit(float(htot))).alias("hub")
-            )
+                .agg(F.sum("auth").alias("_raw")),
+                F.sum("_raw").alias("tot"))
+            hub = hraw.select("node",
+                              (F.col("_raw") / seen["tot"]).alias("hub"))
         out = (
             nodes.join(hub, "node", "left")
             .join(auth, "node", "left")
@@ -817,7 +820,7 @@ def bounded_closure(
         reached = reached.localCheckpoint()
         frontier = reached
         for d in range(2, int(max_depth) + 1):
-            step = (
+            step, seen = checkpoint_observed(
                 frontier.select(F.col("src"), F.col("dst").alias("_mid"))
                 .join(adj.select(F.col("src").alias("_mid"),
                                  F.col("dst")), "_mid")
@@ -827,9 +830,8 @@ def bounded_closure(
                 .join(reached.select("src", "dst"), ["src", "dst"],
                       "left_anti")
                 .withColumn("depth", F.lit(d))
-                .localCheckpoint()
             )
-            if step.isEmpty():  # converged before max_depth: stop expanding
+            if seen["n"] == 0:  # converged before max_depth: stop expanding
                 break
             reached = reached.unionByName(step).localCheckpoint()
             frontier = step
@@ -852,25 +854,25 @@ def personalized_pagerank(
     ignored; init = the seed distribution. Output (node, degree, pr).
 
     Scale shape = pagerank's, through the same ``_power_iteration``:
-    the teleport mass ``(1-d) * s(v)`` (``s`` = 1/|seeds| on seeds, 0
-    elsewhere) rides in the rank frame, joined on once from a slim
-    broadcast seed frame. The q98 oracle unrolls the identical updates.
+    the teleport mass ``(1-d) * s(v)`` (``s`` = 1/|seeds in the graph|
+    on those seeds, 0 elsewhere) rides in the rank frame. The seeds are
+    flagged on the degree frame by one join from a slim broadcast seed
+    frame, and the degree checkpoint counts them in its own jobs, so the
+    rank frame is a projection of that checkpoint. The q98 oracle
+    unrolls the identical updates.
     """
     with _cached() as keep:
         adj = keep(_adjacency(edges))
-        deg = _degrees(adj).localCheckpoint()  # also materializes adj
-        seed_nodes = deg.join(
-            seeds.select("node").distinct(), "node", "left_semi")
-        ns = seed_nodes.count()
-        if ns == 0:
+        flag = seeds.select("node").distinct().withColumn("_seed", F.lit(1))
+        deg, seen = checkpoint_observed(
+            _degrees(adj).join(F.broadcast(flag), "node", "left"),
+            F.count("_seed").alias("ns"))
+        if seen["ns"] == 0:
             raise ValueError(
                 "personalized_pagerank: no seed appears in the graph")
-        s = F.coalesce(F.col("_s"), F.lit(0.0))
-        ranks = (
-            deg.join(F.broadcast(seed_nodes.select(
-                "node", F.lit(1.0 / float(ns)).alias("_s"))), "node", "left")
-            .select("node", "degree",
-                    (F.lit(1.0 - damping) * s).alias("_t"), s.alias("pr"))
-            .localCheckpoint()
-        )
+        s = F.when(F.col("_seed").isNotNull(),
+                   F.lit(1.0 / float(seen["ns"]))).otherwise(F.lit(0.0))
+        ranks = deg.select("node", "degree",
+                           (F.lit(1.0 - damping) * s).alias("_t"),
+                           s.alias("pr"))
         return _power_iteration(adj, ranks, n_iter, damping, round_to)

@@ -235,9 +235,10 @@ def knn_join_topk(
 def _hyperplane(dim: int, table: int, plane: int) -> list[float]:
     """Deterministic ±1 hyperplane components (driver-side, md5-derived).
 
-    Precomputed into a LITERAL array so executors do a plain zip_with
-    multiply-add per row — deriving the components with per-row hash
-    expressions re-evaluated them for every vector (dominant ANN cost)."""
+    Stacked into the numpy matrix of ``_bucket_udf`` (and
+    ``_query_buckets``), so executors bucket a batch with one matmul —
+    deriving the components with per-row hash expressions re-evaluated
+    them for every vector (dominant ANN cost)."""
     import hashlib
 
     out = []

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from generative_ner_spark.plans.session import checkpoint_observed
+
 
 def _micros(c):
     """Integer-microsecond epoch for TIMESTAMP or TIMESTAMP_NTZ input.
@@ -536,32 +538,30 @@ def funnel_counts(
     over ONLY that step's events (the type filter prunes at the scan)
     plus a slim per-user join against the previous step's reach times —
     k steps = k slim passes, no window over the full event stream, no
-    per-user collect. NULL timestamps are dropped. Fully
-    SQL-expressible => full q101 oracle.
+    per-user collect. Each step's reach frame is checkpointed, and its
+    user count is observed by that checkpoint's own jobs. NULL
+    timestamps are dropped. Fully SQL-expressible => full q101 oracle.
     """
     if not steps:
         raise ValueError("funnel_counts: need at least one step")
     spark = events.sparkSession
     ev = events.where(F.col(ts_col).isNotNull())
-    reach = (
+    reach, seen = checkpoint_observed(
         ev.where(F.col(type_col) == steps[0])
         .groupBy(key_col)
         .agg(F.min(_micros(F.col(ts_col))).alias("_t"))
-        .localCheckpoint()
     )
-    counts = [reach.count()]
+    counts = [seen["n"]]
     for step in steps[1:]:
-        nxt = (
+        reach, seen = checkpoint_observed(
             ev.where(F.col(type_col) == step)
             .select(key_col, _micros(F.col(ts_col)).alias("_ts"))
             .join(reach, key_col)
             .where(F.col("_ts") > F.col("_t"))
             .groupBy(key_col)
             .agg(F.min("_ts").alias("_t"))
-            .localCheckpoint()
         )
-        counts.append(nxt.count())
-        reach = nxt
+        counts.append(seen["n"])
     # conversion rounding happens IN-ENGINE: python round() is
     # half-even while Spark/DuckDB round() are half-away — computing
     # driver-side would diverge from the oracle on exact halves

@@ -14,7 +14,24 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
+from pyspark.sql import functions as F
+
+
+def checkpoint_observed(df, *aggs):
+    """Eager ``localCheckpoint`` of ``df`` -> ``(pinned, observed)``, where
+    ``observed`` maps ``n`` (the row count) and each of ``aggs`` (named
+    aggregate columns) to its value over the pinned rows. The values are
+    gathered by the checkpoint's own jobs (``DataFrame.observe``), so a
+    loop that needs "is it empty / how many / what total" after pinning a
+    frame pays no second job for it. An empty frame observes ``n = 0``
+    and NULL (None) for sum-like aggregates. One Observation per call: an
+    Observation can be filled only once, and ``observe`` sits directly
+    under the checkpoint so nothing above it can skip its rows."""
+    obs = Observation()
+    pinned = df.observe(obs, F.count(F.lit(1)).alias("n"), *aggs)
+    pinned = pinned.localCheckpoint()
+    return pinned, obs.get
 
 
 def adaptive_min_partitions(df):

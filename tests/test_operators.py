@@ -1890,10 +1890,9 @@ class TestDedupSimilarity:
                .orderBy("rank").collect()]
         # zero-norm cosine is NULL (numpy NaN -> Arrow null) and ranks LAST
         # (window desc = NULLS LAST), so with >= k finite candidates the
-        # undefined row never enters the top-k; the JVM expression paths
-        # (brute_force_topk / the old crossJoin form) RAISE DIVIDE_BY_ZERO
-        # under Spark 4 ANSI on the same input — the numpy path degrades
-        # gracefully instead
+        # undefined row never enters the top-k; brute_force_topk scores
+        # with the cosine_col kernel, which also returns NULL for a zero
+        # norm, so neither path raises under Spark 4 ANSI
         assert 0 not in got
         qvec = [float(x) for x in em.where("vec_id = 1").first()["embedding"]]
         exact = [r.vec_id for r in similarity.brute_force_topk(
@@ -2551,8 +2550,9 @@ class TestConnectedComponentsIterative:
         rows = got.collect()
         assert {r.component for r in rows} == {"n00000"}
         assert len(rows) == n
-        # ~log2(10^4) contraction rounds + 1 confirmation round
-        assert stats["converged"] and stats["rounds"] <= 16, stats
+        # ~log2(10^4) contraction rounds + 1 confirmation round; the
+        # exact count pins the (count, bit_xor) convergence signature
+        assert stats["converged"] and stats["rounds"] == 15, stats
 
 
 class TestCurate:
@@ -5470,6 +5470,108 @@ class TestFunnelCounts:
             df, ["view", "click"]).collect()}
         assert out[1].n_users == 1 and out[2].n_users == 0
         assert out[2].conversion == 0.0
+
+
+def _observed_loop_case(spark, name):
+    """(call, expected observed checkpoints, check over the collected
+    output) for one loop operator on a tiny input."""
+    from datetime import datetime
+
+    from generative_ner_spark.operators import graph, temporal
+    from generative_ner_spark.operators.canonicalize import (
+        connected_components,
+    )
+
+    diamond = spark.createDataFrame(
+        [(1, 2), (1, 3), (2, 4), (3, 4)], "src long, dst long")
+    seed = spark.createDataFrame([(1,)], "node long")
+    if name == "pagerank":  # the node count rides the degree checkpoint
+        return (lambda: graph.pagerank(diamond, n_iter=1), 1,
+                lambda rows: {r.node: r.pr for r in rows}
+                == {1: 0.25, 2: 0.25, 3: 0.25, 4: 0.25})
+    if name == "personalized_pagerank":  # so does the seed count
+        return (lambda: graph.personalized_pagerank(
+                    diamond, seed, n_iter=1), 1,
+                lambda rows: {r.node: r.pr for r in rows}
+                == {1: 0.15, 2: 0.425, 3: 0.425, 4: 0.0})
+    if name == "khop_neighbors":  # hops 1 and 2, then hop 3 is empty
+        return (lambda: graph.khop_neighbors(diamond, seed, k=10), 3,
+                lambda rows: {r.node: r.hop for r in rows}
+                == {1: 0, 2: 1, 3: 1, 4: 2})
+    if name == "random_walks":  # a degree-0 seed stops after step 1
+        lone = spark.createDataFrame([(99,)], "node long")
+        return (lambda: graph.random_walks(diamond, seeds=lone), 1,
+                lambda rows: [(r.start_node, r.step, r.node) for r in rows]
+                == [(99, 0, 99)])
+    if name == "bounded_closure":  # depth 2 adds (a, c); depth 3 is empty
+        chain = spark.createDataFrame(
+            [("a", "b"), ("b", "c")], "src string, dst string")
+        return (lambda: graph.bounded_closure(chain, max_depth=10), 2,
+                lambda rows: sorted(map(tuple, rows))
+                == [("a", "b", 1), ("a", "c", 2), ("b", "c", 1)])
+    if name == "hits":  # the node set, then one per half-step
+        return (lambda: graph.hits(diamond, n_iter=1), 3,
+                lambda rows: {r.node: (r.hub, r.auth) for r in rows}
+                == {1: (0.333333, 0.0), 2: (0.333333, 0.25),
+                    3: (0.333333, 0.25), 4: (0.0, 0.5)})
+    if name.startswith("connected_components"):
+        pairs = spark.createDataFrame(
+            [("a", "b"), ("b", "c"), ("x", "y")], "a string, b string")
+        # up front, then one per round: the second round confirms the
+        # first's signature; the driver regime has no rounds
+        thr, expected = {"connected_components-distributed": (0, 3)}.get(
+            name, (2_000_000, 1))
+        return (lambda: connected_components(pairs, driver_threshold=thr),
+                expected,
+                lambda rows: {r.id: r.component for r in rows}
+                == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"})
+    assert name == "funnel_counts"
+    t = [datetime(2024, 1, 1, h) for h in range(3)]
+    events = spark.createDataFrame(
+        [(1, "view", t[0]), (1, "click", t[1]), (2, "view", t[2])],
+        "user_id long, event_type string, ts timestamp")
+    # every step is counted by its checkpoint; nobody reaches "refund"
+    return (lambda: temporal.funnel_counts(
+                events, ["view", "click", "refund"]), 3,
+            lambda rows: [r.n_users for r in sorted(rows)] == [2, 1, 0])
+
+
+class TestObservedCheckpoints:
+    @pytest.mark.parametrize("name", [
+        "pagerank", "personalized_pagerank", "khop_neighbors",
+        "random_walks", "bounded_closure", "hits",
+        "connected_components-distributed", "connected_components-driver",
+        "funnel_counts",
+    ])
+    def test_loop_reads_scalars_from_its_checkpoints(self, spark, name):
+        """Every per-round scalar of a loop operator (emptiness, node or
+        seed count, HITS' totals, the components signature, funnel step
+        counts) is observed by the checkpoint it runs anyway: no
+        count/isEmpty/first probe job runs while the operator does, and
+        the number of observed checkpoints pins where each loop stops."""
+        from generative_ner_spark.operators import (
+            canonicalize, graph, temporal,
+        )
+        from generative_ner_spark.plans import session
+
+        call, expected, check = _observed_loop_case(spark, name)
+        calls = []
+
+        def spy(df, *aggs):
+            calls.append(len(aggs))
+            return session.checkpoint_observed(df, *aggs)
+
+        def probe(*args, **kwargs):
+            raise AssertionError("probe job inside a loop operator")
+
+        with pytest.MonkeyPatch.context() as mp:
+            for mod in (graph, canonicalize, temporal):
+                mp.setattr(mod, "checkpoint_observed", spy)
+            for method in ("count", "isEmpty", "first"):
+                mp.setattr(type(spark.range(0)), method, probe)
+            out = call()
+        assert len(calls) == expected, calls
+        assert check(out.collect())
 
 
 class TestRetentionCohorts:
