@@ -782,7 +782,7 @@ _BOILER = ["subscribe to our newsletter today", "follow us for more updates"]
 def q40_domain_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """URL extraction + per-domain corpus stats (operators/urls.py) over a
     deterministically URL-salted corpus (raw testdata has no URLs): the
-    C4-style decision table for domain blocklist filtering. Extraction is
+    C4-style per-domain decision table. Extraction is
     one narrow codegen pass; the domain agg is map-side combined."""
     from generative_ner_spark.operators import urls
 
@@ -1557,8 +1557,7 @@ def q82_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KMV distinct-count sketch (sketches.kmv_sketch, k=128): distinct
     parts per lineitem return flag, estimated from the 128 smallest
     md5-unit hashes — deterministic order statistics, so the ESTIMATE
-    itself is oracle-exact; the sketch rows are mergeable set algebra
-    (pinned by pytest). ~2000 true distincts per flag exercises the
+    itself is oracle-exact. ~2000 true distincts per flag exercises the
     (k-1)/h_k branch."""
     from generative_ner_spark.operators import sketches
 

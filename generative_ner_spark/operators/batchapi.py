@@ -93,19 +93,6 @@ def save_batch_files(tasks: DataFrame, path: str,
     )
 
 
-def stub_batch_responder(tasks: DataFrame) -> DataFrame:
-    """Deterministic local stand-in for the Batch API: one response row per
-    task, intentionally SHUFFLED (repartitioned) to prove the keyed join is
-    order-independent — exactly the property the reference's pop(0) lacks."""
-    return (
-        tasks.select(
-            "custom_id",
-            F.concat(F.lit("echo:"), F.col("custom_id")).alias("generated_text"),
-        )
-        .repartition(7)  # scramble order on purpose
-    )
-
-
 def join_results(inputs: DataFrame, results: DataFrame) -> DataFrame:
     """Keyed equi-join on custom_id (replaces run_batchapi.py:68 pop(0))."""
     return inputs.join(results, "custom_id", "inner")

@@ -4,8 +4,8 @@ Reference: src/gpt/cost.py — per-model $/1k-token tables, tiktoken counting,
 Batch-API halving, running-total budget abort (CostError at
 total >= limit, cost.py:219-221). Re-expressed as:
 
-* token counting as a COLUMN: tiktoken if importable (worker-side, exact),
-  else the public ~4-chars/token heuristic — one narrow projection;
+* token counting as a COLUMN: the public ~4-chars/token heuristic — one
+  narrow projection (tiktoken is not a dependency);
 * cost as arithmetic columns from a driver-side price table (model prices
   are the PUBLIC OpenAI list prices the reference also hardcodes);
 * budget enforcement at stage boundaries: Spark cannot cheaply abort
@@ -15,7 +15,6 @@ total >= limit, cost.py:219-221). Re-expressed as:
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -78,11 +77,9 @@ def resolve_model_prices(model: str) -> dict:
 
 
 def token_count_col(text_col: str) -> Column:
-    """Estimated token count column.
-
-    tiktoken is not importable JVM-side; when it IS available a pandas UDF
-    path would be exact — in this container it is absent, so the documented
-    ~4-chars-per-token heuristic applies (ceil(len/4), floor 1 for non-empty).
+    """Estimated token count column: the documented ~4-chars-per-token
+    heuristic (ceil(len/4), floor 1 for non-empty). The reference counts
+    with tiktoken, which is not a dependency here.
     """
     c = F.length(F.col(text_col))
     # NULL text (a failed generation) is 0 tokens, like empty: the old
@@ -92,29 +89,6 @@ def token_count_col(text_col: str) -> Column:
     return F.when(c.isNull() | (c == 0), F.lit(0)).otherwise(
         F.ceil(c / 4.0).cast("long")
     )
-
-
-def exact_token_count_udf(model: str = "gpt-4o-mini-2024-07-18"):
-    """EXACT token counting as an Arrow pandas UDF via tiktoken (the
-    reference counts prompt tokens with tiktoken before estimating,
-    src/gpt/openai_api.py usage + cost.py). Raises ImportError when
-    tiktoken is absent (this container) — callers fall back to
-    token_count_col's documented chars/4 heuristic. The encoder is built
-    once per worker process, never per batch."""
-    import tiktoken  # ImportError here = caller falls back
-
-    from pyspark.sql.pandas.functions import pandas_udf
-
-    _enc_cache: dict = {}
-
-    @pandas_udf("long")
-    def fn(texts: pd.Series) -> pd.Series:
-        if model not in _enc_cache:
-            _enc_cache[model] = tiktoken.encoding_for_model(model)
-        enc = _enc_cache[model]
-        return texts.map(lambda t: len(enc.encode(t)) if t else 0)
-
-    return fn
 
 
 def count_fee(prompt_tokens: int, completion_tokens: int, model: str,

@@ -41,15 +41,6 @@ def exact_duplicates(df: DataFrame, id_col: str = "doc_id",
     )
 
 
-def dedup_exact(df: DataFrame, id_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
-    """df minus exact duplicates (keeps min-id representative per group)."""
-    keep = exact_duplicates(df, id_col, text_col).select(
-        F.col("keep_id").alias(id_col)
-    )
-    return df.join(keep, id_col, "left_semi")
-
-
 def near_duplicate_pairs_minhash(
     df: DataFrame,
     id_col: str = "doc_id",

@@ -76,20 +76,6 @@ def collective_demo_turns(
     return out
 
 
-def splice_demonstrations_collective(
-    demos: list[dict[str, Any]],
-    messages: list[dict[str, str]],
-    labels2names: dict[str, str],
-    language: str = "en",
-) -> list[dict[str, str]]:
-    """Collective splice (run_gpt.py:113-119): each demo contributes its full
-    (user, assistant-gold) turn pair BEFORE the target's user turn; the
-    target's gold assistant turn is stripped (messages[:-1]). For targets
-    rendered with a system turn, callers compose messages[:1] + turns +
-    messages[1:-1] instead (render_prompts does)."""
-    return collective_demo_turns(demos, labels2names, language) + messages[:-1]
-
-
 def splice_demonstrations_individual(
     demos: list[dict[str, Any]],
     messages: list[dict[str, str]],

@@ -262,31 +262,6 @@ def detect_mentions_fused(
     return examples_with_golds.mapInPandas(fn, _MENTION_SCHEMA)
 
 
-def individual_label_order(
-    labels2names: dict[str, str],
-    shuffle: bool = False,
-    rng=None,
-) -> list[str]:
-    """Label order for individual-format prompts.
-
-    Parity target: preprocessor.py:173-175 — ``labels =
-    list(labels2names.keys()); if shuffle: random.shuffle(labels)``. The
-    reference shuffles with the GLOBAL RNG (order depends on every prior
-    random call in the process — not reproducible, and meaningless on a
-    1000-executor cluster). Pass an explicit ``rng`` (e.g.
-    ``random.Random(f"{seed}:{example_id}")``) for the deterministic,
-    distributable restatement; passing the ``random`` module itself
-    reproduces the reference byte-for-byte when the global RNG is pre-seeded
-    (pinned in tests).
-    """
-    labels = list(labels2names)
-    if shuffle:
-        import random as _random
-
-        (rng if rng is not None else _random).shuffle(labels)
-    return labels
-
-
 def detect_mentions_individual(
     examples_with_golds: DataFrame,
     cfg: SynthConfig,

@@ -121,19 +121,16 @@ def cooccurrence_edges(
         .agg(F.sort_array(F.collect_set("_it")).alias("_its"))
     )
     if max_basket is not None:
-        # localCheckpoint, not persist: eager, shared by the metrics agg
-        # and the cap filter, and released by GC when this frame drops
-        # out of scope — a persist here would leak cache for the session
-        baskets = baskets.localCheckpoint()
+        # localCheckpoint, not persist: released by GC when this frame
+        # drops out of scope. The capped counts are observed by the
+        # checkpoint's own job, so the metrics cost no second job
+        over = F.size("_its") > max_basket
+        baskets, seen = checkpoint_observed(
+            baskets, F.count(F.when(over, 1)).alias("b"),
+            F.sum(F.when(over, F.size("_its"))).alias("r"))
         if metrics is not None:
-            over = (
-                baskets.where(F.size("_its") > max_basket)
-                .agg(F.count("*").alias("b"),
-                     F.coalesce(F.sum(F.size("_its")), F.lit(0)).alias("r"))
-                .first()
-            )
-            metrics["capped_baskets"] = over["b"]
-            metrics["capped_rows"] = int(over["r"])
+            metrics["capped_baskets"] = seen["b"]
+            metrics["capped_rows"] = int(seen["r"] or 0)
         baskets = baskets.where(F.size("_its") <= max_basket)
     pairs = F.flatten(
         F.transform(
@@ -178,12 +175,6 @@ def _directed(edges: DataFrame) -> DataFrame:
 def _degrees(adj: DataFrame) -> DataFrame:
     return adj.groupBy(F.col("src").alias("node")).agg(
         F.count("*").alias("degree"))
-
-
-def degrees(edges: DataFrame) -> DataFrame:
-    """(node, degree) over a canonical undirected edge list, counted on
-    the adjacency's src partitions (no exchange past the adjacency's)."""
-    return _degrees(_adjacency(edges))
 
 
 def _power_iteration(adj: DataFrame, ranks: DataFrame, n_iter: int,

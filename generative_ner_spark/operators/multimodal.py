@@ -1,17 +1,11 @@
-"""Multimodal column plumbing: binary media payloads with typed metadata.
-
-The container has no image/audio libraries, so the DECODE step is stubbed
-behind ``decoder`` callables (deterministic fakes by default; a real
-deployment passes PIL/librosa-backed ones). Everything Spark-side — schema,
-partition-preserving mapInPandas, Arrow batch shape, metadata extraction —
-is real and tested.
+"""Multimodal column plumbing: media spans of interleaved documents,
+their binary payloads with typed metadata, and per-document composition
+features.
 
 Design: media arrives either inline (``content: binary``) or by reference
 (``media_ref: string`` into object storage). At 100 TB you NEVER collect
-binaries through the driver; fetch+decode happens inside mapInPandas on
-executors, reading from the object store directly. Feature outputs are
-fixed-width float arrays so downstream similarity ops (similarity.py)
-apply unchanged.
+binaries through the driver; the fetch happens inside mapInPandas on
+executors, reading from the object store directly.
 """
 
 from __future__ import annotations
@@ -22,49 +16,7 @@ from typing import Callable, Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType, BinaryType, FloatType, IntegerType, LongType, StringType,
-    StructField, StructType,
-)
-
-MEDIA_META_SCHEMA = StructType(
-    [
-        StructField("media_ref", StringType()),
-        StructField("kind", StringType()),
-        StructField("size_bytes", LongType()),
-        StructField("content_hash", StringType()),
-    ]
-)
-
-MEDIA_FEATURES_SCHEMA = StructType(
-    [
-        StructField("media_ref", StringType()),
-        StructField("kind", StringType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("n_frames", IntegerType()),
-        StructField("features", ArrayType(FloatType())),
-    ]
-)
-
-
-def fake_decode(kind: str, payload: bytes) -> dict:
-    """Deterministic stand-in for image/audio decode (no media libs here).
-
-    Real deployments replace this with a PIL/ffmpeg/librosa-backed callable
-    of the same signature. Raises on unknown kind like a real decoder would.
-    """
-    if kind not in ("image", "audio", "video"):
-        raise NotImplementedError(f"no decoder for kind={kind!r}")
-    h = hashlib.md5(payload).digest()
-    dims = int.from_bytes(h[:2], "big")
-    feats = [((b / 255.0) * 2.0 - 1.0) for b in h]  # 16-dim deterministic
-    return {
-        "width": 16 + dims % 1024,
-        "height": 16 + (dims >> 4) % 1024,
-        "n_frames": 1 if kind == "image" else 1 + h[2] % 300,
-        "features": feats,
-    }
+from pyspark.sql.types import BinaryType, StructField, StructType
 
 
 def extract_media_spans(docs: DataFrame) -> DataFrame:
@@ -119,46 +71,6 @@ def media_metadata(media_with_content: DataFrame) -> DataFrame:
     )
 
 
-def decode_features(
-    media_with_content: DataFrame,
-    decoder: Callable[[str, bytes], dict] = fake_decode,
-) -> DataFrame:
-    """Decode + feature-extract in Arrow batches (executor-side).
-
-    Plumbing is real; the default decoder is the deterministic fake.
-    """
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in
-                   ("media_ref", "kind", "width", "height", "n_frames", "features")}
-            for ref, kind, content in zip(pdf["media_ref"], pdf["kind"], pdf["content"]):
-                d = decoder(kind, bytes(content))
-                out["media_ref"].append(ref)
-                out["kind"].append(kind)
-                out["width"].append(d["width"])
-                out["height"].append(d["height"])
-                out["n_frames"].append(d["n_frames"])
-                out["features"].append(d["features"])
-            yield pd.DataFrame(out)
-
-    return media_with_content.mapInPandas(fn, MEDIA_FEATURES_SCHEMA)
-
-
-def frame_sample_plan(decoded: DataFrame, every_n: int = 30) -> DataFrame:
-    """Frame-sampling plan for video/audio: (media_ref, frame_idx) rows.
-
-    Pure JVM explode of a sequence — demonstrates the fan-out shape without
-    decoding (decode of sampled frames would be another decode_features
-    pass over (media_ref, frame_idx))."""
-    return decoded.where(F.col("n_frames") > 1).select(
-        "media_ref",
-        F.explode(
-            F.sequence(F.lit(0), F.col("n_frames") - 1, F.lit(every_n))
-        ).alias("frame_idx"),
-    )
-
-
 def composition_features(docs: DataFrame) -> DataFrame:
     """Per-doc interleaved-composition features over the spans array —
     the OBELICS-style structural filter for an interleaved text+media
@@ -188,20 +100,3 @@ def composition_features(docs: DataFrame) -> DataFrame:
         .alias("media_per_text"),
         (n_text > 0).alias("has_text"),
     )
-
-
-def filter_media_composition(
-    docs: DataFrame,
-    require_text: bool = True,
-    max_media_per_text: float | None = None,
-) -> DataFrame:
-    """Keep documents passing the structural composition gates. The
-    predicate is pushed into the same narrow projection as
-    composition_features — rejected docs never leave the scan stage."""
-    feat = composition_features(docs)
-    cond = F.lit(True)
-    if require_text:
-        cond = cond & F.col("has_text")
-    if max_media_per_text is not None:
-        cond = cond & (F.col("media_per_text") <= max_media_per_text)
-    return feat.where(cond)

@@ -187,22 +187,6 @@ def _md5_mod_1m(key_col: str, salt: str) -> Column:
     return F.pmod(h, F.lit(1_000_000))
 
 
-def hash_sample_cond(key_col: str, rate: float, salt: str = "sample") -> Column:
-    """Deterministic hash-sampling predicate: keep a row iff
-    md5(salt:key) mod 10^6 < rate * 10^6.
-
-    The reproducible downsampling primitive a curation pipeline needs:
-    no RNG state, no shuffle, no sort — a pure rowwise filter that gives
-    the SAME sample on every run, engine, and cluster size (md5 is md5),
-    and composes with any partitioning. Rate granularity 1e-6.
-    """
-    # round(), not int(): float artifacts (0.3 * 1e6 = 299999.99999...)
-    # would truncate to 299999 and disagree with an oracle that writes the
-    # intended threshold 300000
-    threshold = round(rate * 1_000_000)
-    return _md5_mod_1m(key_col, salt) < F.lit(threshold)
-
-
 def stratified_hash_sample(
     df: DataFrame,
     rates: dict,
@@ -224,7 +208,9 @@ def stratified_hash_sample(
     # absent map key even with ANSI on — token_budget_sample relies on
     # that — but try_element_at documents the intent and is immune to
     # the strictly-raising behavior some ANSI configurations adopt).
-    # round() for the same float-artifact reason as hash_sample_cond.
+    # round(), not int(): float artifacts (0.3 * 1e6 = 299999.99999...)
+    # would truncate to 299999 and disagree with an oracle that writes the
+    # intended threshold 300000
     threshold = F.lit(round(default_rate * 1_000_000))
     if rates:
         pairs: list = []
@@ -251,8 +237,8 @@ def assign_split(
     function of the key — no RNG, no shuffle, no sort; re-running on a
     grown corpus keeps every previously-assigned row in its split
     (hash-stable), unlike randomSplit. Weights are normalized; interval
-    edges are round()ed the same way hash_sample_cond rounds (cross-engine
-    threshold parity). Split names are assigned in sorted-name order so
+    edges are round()ed the same way stratified_hash_sample rounds
+    (cross-engine threshold parity). Split names are assigned in sorted-name order so
     the interval layout is reproducible from the dict alone.
     """
     total = float(sum(weights.values()))

@@ -1,4 +1,4 @@
-"""Mergeable cardinality sketches — the KMV (k-minimum-values)
+"""Cardinality sketches — the KMV (k-minimum-values)
 distinct-count estimator (Bar-Yossef et al. RANDOM'02; the theta-sketch
 family's core). Where HyperLogLog needs engine-specific register
 encodings, KMV is pure order statistics over a hash: keep the k SMALLEST
@@ -6,17 +6,10 @@ normalized hash values per group; if fewer than k distinct values exist
 the sketch IS the exact answer, otherwise ``D ≈ (k-1) / h_(k)`` (the
 k-th smallest hash, mapped into (0,1)). Standard error ~ 1/sqrt(k-2).
 
-Why a sketch at all when groupBy(countDistinct) exists: the sketch row
-is MERGEABLE — union two groups' sketches (array_union, re-sort, keep k)
-and re-estimate WITHOUT rescanning either corpus. That is the 100 TB
-workflow: materialize per-partition/per-day sketch tables once, answer
-"distinct users across any date range / shard union" from kilobytes.
-
 Determinism: the hash is the repo's standard md5-prefix integer
 (conv(substring(md5(salt:value), 1, 15), 16, 10), < 2^60) divided by
 2^60 — identical on every engine and run, so the ESTIMATE is
-oracle-exact (q82 replays it in SQL) and sketch merges are
-set-algebraic, not approximate-on-approximate.
+oracle-exact (q82 replays it in SQL).
 """
 
 from __future__ import annotations
@@ -62,9 +55,8 @@ def kmv_sketch(
     collapse BEFORE the k-selection via a map-side-combined
     (group, hash) groupBy — the same shuffle an exact countDistinct
     pays once, after which the k-smallest election and the sketch fold
-    run on the deduped slim frame. The payoff is downstream: the sketch
-    table is kilobytes per group and answers any UNION of groups /
-    snapshots via merge_kmv_sketches without touching the corpus again.
+    run on the deduped slim frame; the sketch table is kilobytes per
+    group.
     """
     hashed = (
         df.where(F.col(value_col).isNotNull())
@@ -84,39 +76,3 @@ def kmv_sketch(
         F.size("sketch").alias("n_kept"),
         _estimate(F.col("sketch"), k).alias("est_distinct"),
     )
-
-
-def merge_kmv_sketches(
-    sketches: DataFrame,
-    k: int,
-    group_col: str | None = None,
-    sketch_col: str = "sketch",
-) -> DataFrame:
-    """Merge sketch rows — across snapshots, shards, or (with
-    ``group_col=None``) ALL groups into one corpus-wide estimate —
-    without rescanning any data: union the hash sets, keep the k
-    smallest, re-estimate. Exact set algebra on deterministic hashes:
-    merging sketches of A and B gives byte-identically the sketch of
-    A ∪ B (pinned by test).
-
-    ``k`` must be the k the inputs were built with (a merge can only
-    LOWER resolution, never invent it)."""
-    exploded = sketches.select(
-        *([F.col(group_col)] if group_col else []),
-        F.explode(sketch_col).alias("_h"),
-    ).distinct()
-    if group_col:
-        w = Window.partitionBy(group_col).orderBy(F.col("_h").asc())
-    else:
-        w = Window.partitionBy(F.lit(1)).orderBy(F.col("_h").asc())
-    topk = exploded.withColumn("_rn", F.row_number().over(w)).where(
-        F.col("_rn") <= k)
-    grouped = (topk.groupBy(group_col) if group_col
-               else topk.groupBy(F.lit(1).alias("_g")))
-    out = grouped.agg(F.sort_array(F.collect_list("_h")).alias("sketch"))
-    cols = ([F.col(group_col)] if group_col else []) + [
-        F.col("sketch"),
-        F.size("sketch").alias("n_kept"),
-        _estimate(F.col("sketch"), k).alias("est_distinct"),
-    ]
-    return out.select(*cols)

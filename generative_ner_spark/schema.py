@@ -50,43 +50,6 @@ GOLD_ENTITY_SCHEMA = StructType(
     ]
 )
 
-# Exploded per-text-span working row ("example" in reference terms:
-# example_id == f"{doc_id}:{span_offset}").
-EXAMPLE_SCHEMA = StructType(
-    [
-        StructField("example_id", StringType(), False),
-        StructField("doc_id", StringType(), False),
-        StructField("span_offset", IntegerType(), False),
-        StructField("text", StringType(), False),
-    ]
-)
-
-# Stub/LLM generation output (reference: generated_text of pred.py:55).
-GENERATION_SCHEMA = StructType(
-    [
-        StructField("example_id", StringType(), False),
-        StructField("doc_id", StringType(), False),
-        StructField("span_offset", IntegerType(), False),
-        StructField("text", StringType(), False),
-        StructField("label", StringType(), True),  # individual format only
-        StructField("generated_text", StringType(), False),
-        StructField("prompt_hash", StringType(), False),
-    ]
-)
-
-# Grounded mention (reference span tuple (start,end,label) + provenance).
-MENTION_SCHEMA = StructType(
-    [
-        StructField("example_id", StringType(), False),
-        StructField("doc_id", StringType(), False),
-        StructField("span_offset", IntegerType(), False),
-        StructField("start", LongType(), False),
-        StructField("end", LongType(), False),
-        StructField("label", StringType(), False),
-        StructField("mention_norm", StringType(), False),
-    ]
-)
-
 # Entity-linking dictionary (broadcast side), FIXTURES.md F5.
 ALIAS_SCHEMA = StructType(
     [
@@ -103,17 +66,5 @@ ENTITY_SCHEMA = StructType(
         StructField("entity_id", StringType(), False),
         StructField("name", StringType(), False),
         StructField("entity_type", StringType(), False),
-    ]
-)
-
-# (subj, pred, obj) triple with lineage (north rule).
-TRIPLE_SCHEMA = StructType(
-    [
-        StructField("subj_id", StringType(), False),
-        StructField("pred", StringType(), False),
-        StructField("obj_id", StringType(), False),
-        StructField("doc_id", StringType(), False),
-        StructField("span_offset", IntegerType(), False),
-        StructField("partition_id", IntegerType(), True),  # lineage
     ]
 )

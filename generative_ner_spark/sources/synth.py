@@ -1,14 +1,11 @@
 """Deterministic synthetic interleaved text+media corpus (FIXTURES.md F1-F5).
 
 No external data: the corpus is a pure function of (doc_index, config), so it
-can be generated
-
-  * driver-side for small unit tests (``corpus_rows``), and
-  * DISTRIBUTED for benchmarks via ``spark.range(n_docs)`` + ``mapInPandas``
-    (``synth_documents``) — each executor generates its own partition's docs
-    with zero driver involvement and zero shuffle. This is the 100 TB-shaped
-    path: at real scale you'd point the pipeline at an Iceberg table instead;
-    the generator stands in for it with identical schema.
+is generated DISTRIBUTED via ``spark.range(n_docs)`` + ``mapInPandas``
+(``corpus.synth_documents``) — each executor generates its own partition's
+docs with zero driver involvement and zero shuffle. This is the 100 TB-shaped
+path: at real scale you'd point the pipeline at an Iceberg table instead; the
+generator stands in for it with identical schema.
 
 Corpus properties required by FIXTURES.md F1:
   * media spans interleaved between text spans (carry-through invariant),
@@ -28,7 +25,7 @@ from __future__ import annotations
 import hashlib
 import random
 from dataclasses import dataclass
-from typing import Any, Iterator
+from typing import Any
 
 from generative_ner_spark.functions.textops import normalize_answer
 
@@ -245,18 +242,6 @@ def make_document(doc_index: int, cfg: SynthConfig,
              "offset": offset}
         )
     return {"doc_id": doc_id, "spans": spans, "golds": golds}
-
-
-def corpus_rows(cfg: SynthConfig) -> tuple[list[dict], list[dict]]:
-    """Driver-side corpus for tests: (document rows, gold rows)."""
-    cat = entity_catalog(cfg)
-    docs, golds = [], []
-    for i in range(cfg.n_docs):
-        d = make_document(i, cfg, cat)
-        docs.append({"doc_id": d["doc_id"], "spans": d["spans"]})
-        for g in d["golds"]:
-            golds.append({"doc_id": d["doc_id"], **g})
-    return docs, golds
 
 
 # ---------------------------------------------------------------------------

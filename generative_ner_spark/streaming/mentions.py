@@ -1,15 +1,10 @@
-"""Structured-Streaming variant of the mention-detection stage.
+"""Structured-Streaming stages over interleaved documents.
 
 The reference is batch-only (no streaming code exists in the repo — verified
-in SURVEY.md §1.3), but the stage DAG was designed so detection runs under
-``foreachBatch`` unchanged: each micro-batch of interleaved documents goes
-through the SAME explode -> fused detect -> link -> triples plan and lands
-in the partitioned triple sink. Exactly-once-per-batch comes from the
-streaming checkpoint (offsets) + an IDEMPOTENT per-batch write: the sink is
-partitioned by (batch_id, pred) and written with dynamic partition
-overwrite, so a batch replayed after a failure rewrites exactly its own
-partitions instead of appending duplicates (a plain mode('append') would
-double the replayed batch — at-least-once, not exactly-once).
+in SURVEY.md §1.3). These are the stateful continuous-ingest stages:
+tumbling-window mention counts under a watermark, first-seen dedup with
+TTL state, and a per-key throttle. The window builder also runs in batch
+(q35), and first-seen dedup has a deterministic batch twin (q36).
 
 At production scale this is the continuous-ingest path: readStream from the
 Iceberg/Kafka landing table, watermark on ingest time if late media spans
@@ -19,60 +14,8 @@ are immutable rows).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
-
-from generative_ner_spark import schema
-from generative_ner_spark.operators import detect, linking, triples as T
-from generative_ner_spark.sources.synth import SynthConfig
-
-
-def stream_documents(spark: SparkSession, input_dir: str,
-                     max_files_per_trigger: int = 4) -> DataFrame:
-    """File-landing-zone source of interleaved docs (JSONL)."""
-    return (
-        spark.readStream.schema(schema.DOCUMENT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(input_dir)
-    )
-
-
-def make_batch_processor(
-    golds: DataFrame,
-    alias_df: DataFrame,
-    canonical_df: DataFrame,
-    cfg: SynthConfig,
-    sink_dir: str,
-):
-    """foreachBatch body as a testable function: batch plan reused verbatim.
-
-    Idempotent per batch: dynamic partition overwrite on (batch_id, pred) —
-    a replay of batch N rewrites only batch N's partitions (exactly-once
-    sink contents under foreachBatch's at-least-once invocation)."""
-
-    def process(batch_docs: DataFrame, batch_id: int) -> None:
-        examples = detect.attach_golds(
-            detect.explode_text_spans(batch_docs), golds
-        )
-        mentions = detect.detect_mentions_fused(examples, cfg)
-        linked = (
-            linking.link_mentions(mentions, alias_df)
-            .join(F.broadcast(canonical_df), "entity_id", "left")
-            .withColumn(
-                "canonical_id", F.coalesce("canonical_id", "entity_id")
-            )
-        )
-        (
-            T.materialize_triples(linked)
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id", "pred")
-            .parquet(sink_dir)
-        )
-
-    return process
 
 
 def word_pattern(term: str) -> str:
@@ -109,8 +52,7 @@ def windowed_mention_counts_stream(
     """STATEFUL streaming stage: tumbling-window mention counts with a
     watermark bounding state and defining late-data semantics.
 
-    Unlike the foreachBatch path (stateless per batch), this is a real
-    Structured-Streaming stateful aggregation: ``withWatermark`` +
+    A real Structured-Streaming stateful aggregation: ``withWatermark`` +
     ``groupBy(window(ts), label)``. Windows older than
     (max event time − delay) have their state EVICTED at the end of the
     batch in which the watermark crosses them — that is what makes
@@ -369,23 +311,4 @@ def streaming_throttle(
         stateStructType="last_seen_ms long",
         outputMode="update",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def start_mention_stream(
-    docs_stream: DataFrame,
-    golds: DataFrame,
-    alias_df: DataFrame,
-    canonical_df: DataFrame,
-    cfg: SynthConfig,
-    sink_dir: str,
-    checkpoint_dir: str,
-) -> StreamingQuery:
-    """foreachBatch: batch plan reused verbatim per micro-batch."""
-    process = make_batch_processor(golds, alias_df, canonical_df, cfg, sink_dir)
-    return (
-        docs_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )

@@ -1,14 +1,18 @@
-"""COVERAGE.md names live code, and the package keeps no dead functions.
+"""COVERAGE.md names live code, and the package holds only code that runs.
 
 Two static checks over the source tree (no Spark):
 
 * every ``module.name`` COVERAGE.md cites (``a/b`` continuations
-  included, as in ``dedup.exact_duplicates/dedup_exact``) is a top-level
-  definition of that ``generative_ner_spark`` module, and something that
-  runs it refers to it: ``__spark_entry__.py``, ``jobs/``, ``bench*.py``
-  or ``tests/``;
-* every top-level package function is referred to somewhere outside its
-  own definition.
+  included, as in ``llm.render_chat_template/with_rendered_prompt``) is a
+  top-level definition of that ``generative_ner_spark`` module, and
+  something that runs it refers to it: ``__spark_entry__.py``, ``jobs/``,
+  ``bench*.py`` or ``tests/``;
+* every top-level package definition (``def``, ``class`` or assignment)
+  is reached, through references in code, from what runs —
+  ``__spark_entry__.py``, ``jobs/``, ``bench*.py``, ``perfbench/`` and
+  ``scripts/`` — or from a COVERAGE.md citation. COVERAGE.md is the one
+  list of definitions kept for tests alone (reference counterparts and
+  test oracles); anything else that only tests reach is deleted.
 """
 
 from __future__ import annotations
@@ -80,18 +84,59 @@ def test_coverage_names_resolve_and_are_exercised():
     assert not bad, f"COVERAGE.md cites: {bad}"
 
 
-def test_every_package_function_is_referenced():
-    files = _py_files(ROOT)
-    texts = {p: p.read_text() for p in files}
-    dead = []
-    for path in PKG.rglob("*.py"):
-        lines = texts[path].splitlines()
+def _aliases(tree: ast.AST, mods) -> dict[str, set[tuple[str, str | None]]]:
+    """Local name -> what a package import binds it to: ``(module, name)``
+    for a definition, ``(module, None)`` for a module."""
+    out: dict = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and (
+                node.level or (node.module or "").startswith(PKG.name)):
+            last = (node.module or "").rpartition(".")[2]
+            for a in node.names:
+                out.setdefault(a.asname or a.name, set()).add(
+                    (last, a.name) if last in mods else (a.name, None))
+    return out
+
+
+def _refs(node: ast.AST, mod: str | None, aliases, mods
+          ) -> set[tuple[str, str]]:
+    """(module, name) pairs ``node``'s code refers to: a bare name (its own
+    module's definition, or what it was imported as), ``m.name`` on an
+    imported module, and every name a ``from`` import inside ``node``
+    binds. Strings, comments and docstrings never count."""
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out |= aliases.get(n.id, set()) | {(mod, n.id)}
+        elif isinstance(n, ast.Attribute) and isinstance(n.value, ast.Name):
+            out |= {(m, n.attr) for m, name in aliases.get(n.value.id, ())
+                    if name is None}
+        elif isinstance(n, ast.ImportFrom):
+            for targets in _aliases(n, mods).values():
+                out |= targets
+    return out
+
+
+def test_every_definition_is_reached_or_cited():
+    mods = _modules()
+    defs = {}
+    for mod, path in mods.items():
+        aliases = _aliases(ast.parse(path.read_text()), mods)
         for name, node in _top_level(path).items():
-            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                continue
-            own = "\n".join(lines[:node.lineno - 1] + lines[node.end_lineno:])
-            pat = re.compile(rf"\b{name}\b")
-            if not any(pat.search(own if p == path else t)
-                       for p, t in texts.items()):
-                dead.append(f"{path.relative_to(ROOT)}:{name}")
-    assert not dead, f"package functions nothing refers to: {dead}"
+            defs[(mod, name)] = (node, mod, aliases)
+    todo = set(_cited())
+    for path in _py_files(ROOT / "__spark_entry__.py", ROOT / "jobs",
+                          ROOT / "perfbench", ROOT / "scripts",
+                          *ROOT.glob("bench*.py")):
+        tree = ast.parse(path.read_text())
+        todo |= _refs(tree, None, _aliases(tree, mods), mods)
+    reached = set()
+    while todo:
+        key = todo.pop()
+        if key in defs and key not in reached:
+            reached.add(key)
+            todo |= _refs(*defs[key], mods)
+    dead = sorted(f"{m}.{n}" for m, n in defs.keys() - reached)
+    assert not dead, (
+        "package definitions that nothing running reaches and COVERAGE.md "
+        f"does not cite (delete them, or cite a reference counterpart): {dead}")
