@@ -248,12 +248,28 @@ def q16_embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("vec_id")
 
 
+def _probe_vector(em: DataFrame) -> list | None:
+    """The vec_id = 0 embedding that q17, q18 and q29 rank against, or
+    None when the table has no such row (those queries then return no
+    rows)."""
+    row = em.where("vec_id = 0").select("embedding").first()
+    return None if row is None else list(row[0])
+
+
+def _no_probe(em: DataFrame) -> DataFrame:
+    """The empty (vec_id, cosine) result of a top-k without a probe."""
+    return em.select("vec_id", F.lit(None).cast("double").alias("cosine")
+                     ).limit(0)
+
+
 def q17_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force exact cosine top-10 vs the vec_id=0 vector (ANN baseline).
     Plans as TakeOrderedAndProject: per-partition heap, no full sort."""
     em = _t(spark, sf_dir, "embeddings")
-    qvec = em.where("vec_id = 0").select("embedding").first()[0]
-    return similarity.brute_force_topk(em.where("vec_id != 0"), list(qvec), k=10)
+    qvec = _probe_vector(em)
+    if qvec is None:
+        return _no_probe(em)
+    return similarity.brute_force_topk(em.where("vec_id != 0"), qvec, k=10)
 
 
 def q18_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -264,7 +280,9 @@ def q18_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine re-rank — end-to-end in SQL. Recall vs the exact q17 top-k is
     additionally pinned in tests/test_operators.py."""
     em = _t(spark, sf_dir, "embeddings")
-    qvec = em.where("vec_id = 0").select("embedding").first()[0]
+    qvec = _probe_vector(em)
+    if qvec is None:
+        return _no_probe(em)
     # the oracle's hyperplane literals are generated for dim=64: if the
     # testdata embeddings are ever regenerated at a different width, fail
     # HERE with the cause, not downstream as an inscrutable hash mismatch
@@ -274,7 +292,7 @@ def q18_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # planes=6 (64 buckets/table) keeps bucket occupancy high enough on a
     # near-random corpus that the probe gathers >= k candidates
     return similarity.lsh_bucketed_topk(
-        em.where("vec_id != 0"), list(qvec), dim=len(qvec), k=10,
+        em.where("vec_id != 0"), qvec, dim=len(qvec), k=10,
         tables=8, planes=6,
     )
 
@@ -557,7 +575,9 @@ def q29_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     The DuckDB oracle replays exactly that (same pattern as q25). Raw-
     corpus recall vs the exact q17 top-k stays pinned in tests."""
     em = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    qvec = em.where("vec_id = 0").select("embedding").first()[0]
+    qvec = _probe_vector(em)
+    if qvec is None:
+        return _no_probe(em)
     copies = (
         em.where("vec_id = 0")
         .crossJoin(spark.range(12).select(F.col("id").alias("_i")))
@@ -568,7 +588,7 @@ def q29_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     corpus = em.where("vec_id != 0").unionByName(copies)
     return similarity.ivf_topk(
-        corpus, list(qvec), dim=len(qvec), k=10,
+        corpus, qvec, dim=len(qvec), k=10,
         n_cells=16, nprobe=6,
     )
 
@@ -683,12 +703,10 @@ def q35_windowed_mention_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q36_first_seen_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of the STREAMING first-seen dedup (shared fingerprint
-    derivation — streaming/mentions.py _fingerprinted): the corpus is
-    salted with hour-late byte-identical copies of the first 50 docs; the
-    operator must keep exactly the earliest (ingest_ts, doc_id) row per
-    fingerprint. TTL expiry/re-emission is streaming-only and pinned in
-    pytest."""
+    """First-seen document dedup (streaming/mentions.py
+    first_seen_dedup_batch_replay): the corpus is salted with hour-late
+    byte-identical copies of the first 50 docs; the operator must keep
+    exactly the earliest (ingest_ts, doc_id) row per fingerprint."""
     from generative_ner_spark.streaming import mentions as sm
 
     out = sm.first_seen_dedup_batch_replay(

@@ -16,8 +16,6 @@ Reference parity sources (file:line into /root/reference):
   - parser                 src/data/preprocessor.py:39-57
   - parse_output           src/data/preprocessor.py:195-201
   - regex grounding        src/gpt/base/utils.py:4-9
-  - remove_overlapped      src/gpt/base/utils.py:12-25 (dead code in ref;
-                           exposed here as an optional op, off by default)
   - prediction filtering   src/prediction/pred.py:43-65
   - BIO decode             scripts/conll2003.py:176-197
   - words -> text/offsets  scripts/conll2003.py:161-173
@@ -119,29 +117,6 @@ def regex_ground(txt: str, pattern: str) -> list[tuple[int, int]]:
     """
     recompiler = re.compile(pattern)
     return [(m.start(), m.end()) for m in recompiler.finditer(txt)]
-
-
-def remove_overlapped_offsets(
-    offsets: list[tuple[int, int]],
-) -> list[tuple[int, int]]:
-    """Keep spans not strictly contained in another (src/gpt/base/utils.py:12-25).
-
-    Dead code in the reference (defined, never called — grep-verified);
-    provided as an optional operator, OFF by default for parity.
-    """
-    removed: list[tuple[int, int]] = []
-    uniq = list(set(offsets))
-    for start, end in uniq:
-        contained = False
-        for s_start, s_end in uniq:
-            if start == s_start and end == s_end:
-                continue
-            if start >= s_start and end <= s_end:
-                contained = True
-                break
-        if not contained:
-            removed.append((start, end))
-    return removed
 
 
 # ---------------------------------------------------------------------------
@@ -296,22 +271,6 @@ def calculate_metrics(
         else float("nan")
     )
     return precision, recall, f1
-
-
-def evaluate_span_sets(
-    pairs: Iterable[tuple[Iterable[tuple], Iterable[tuple]]],
-) -> dict[str, float]:
-    """Micro P/R/F1 over (golds, preds) per record — set-intersection exact
-    match, parity with src/evaluation/eval.py:13-27."""
-    n_correct = n_pred = n_gold = 0
-    for golds, preds in pairs:
-        gold_set = set(golds)
-        pred_set = set(preds)
-        n_gold += len(gold_set)
-        n_pred += len(pred_set)
-        n_correct += len(pred_set & gold_set)
-    p, r, f1 = calculate_metrics(n_correct, n_pred, n_gold)
-    return {"precision": p, "recall": r, "f1": f1}
 
 
 # ---------------------------------------------------------------------------

@@ -261,109 +261,3 @@ def retrieve_batches(spark, client, state_path: str, out_dir: str,
         client.download_results(b, os.path.join(out_dir, f"{b}.jsonl"))
     return spark.read.schema(
         "custom_id string, generated_text string").json(out_dir)
-
-
-def wrap_task_envelope(task: dict, endpoint: str = "/v1/chat/completions") -> dict:
-    """{custom_id, example_id, body} task row -> the service's batch
-    envelope {custom_id, method, url, body} (drops the Spark-side join
-    column; hermetically pinned, used by OpenAIBatchClient.upload_file)."""
-    return {
-        "custom_id": task["custom_id"],
-        "method": "POST",
-        "url": endpoint,
-        "body": task["body"],
-    }
-
-
-def flatten_result_line(rec: dict) -> dict:
-    """Service output line -> the (custom_id, generated_text) row
-    retrieve_batches reads; a missing/errored response flattens to a NULL
-    generated_text (the downstream null-generation guard owns it)."""
-    body = (rec.get("response") or {}).get("body") or {}
-    choices = body.get("choices") or []
-    # (... or {}): an explicit ``"message": null`` (content-filtered
-    # responses) must flatten to NULL too, not AttributeError on None
-    text = ((choices[0].get("message") or {}).get("content")
-            if choices else None)
-    return {"custom_id": rec["custom_id"], "generated_text": text}
-
-
-class OpenAIBatchClient:
-    """REAL Batch-API transport: the thin adapter that slots the OpenAI
-    client into the same protocol LocalBatchClient implements, so
-    submit_batches / poll_batches / retrieve_batches run unchanged against
-    the live service (reference flow: openai_api.py:393-500).
-
-    The openai package imports lazily (absent from this sandbox); the
-    opt-in ``realhttp``-marked tests exercise this class when the package
-    and OPENAI_API_KEY exist and skip cleanly otherwise.
-
-    Two shape translations live here and nowhere else:
-    * upload: save_batch_files writes {custom_id, example_id, body} rows
-      (the q22-oracle-pinned shape); the service expects the batch
-      envelope {custom_id, method, url, body} with body.messages and no
-      example_id — each line is wrapped on the way up (reference builds
-      the envelope at task-construction time, openai_api.py:318-340; we
-      keep the Spark-side table join-friendly instead).
-    * download: the service's output lines nest the text at
-      response.body.choices[0].message.content; they are flattened to the
-      (custom_id, generated_text) rows retrieve_batches reads.
-    """
-
-    ENDPOINT = "/v1/chat/completions"
-
-    def __init__(self, api_key: str | None = None,
-                 completion_window: str = "24h",
-                 description: str = "generative_ner_spark batch"):
-        from openai import OpenAI  # lazy: not in the sandbox
-
-        self.client = OpenAI(api_key=api_key) if api_key else OpenAI()
-        self.completion_window = completion_window
-        self.description = description
-
-    def upload_file(self, path: str) -> str:
-        import io
-        import json as _json
-        import os
-
-        buf = io.BytesIO()
-        with open(path) as f:
-            for line in f:
-                if not line.strip():
-                    continue
-                task = _json.loads(line)
-                buf.write((_json.dumps(
-                    wrap_task_envelope(task, self.ENDPOINT)) + "\n"
-                ).encode())
-        buf.seek(0)
-        buf.name = os.path.basename(path) + ".jsonl"
-        return self.client.files.create(file=buf, purpose="batch").id
-
-    def create_batch(self, file_id: str) -> str:
-        return self.client.batches.create(
-            input_file_id=file_id,
-            endpoint=self.ENDPOINT,
-            completion_window=self.completion_window,
-            metadata={"description": self.description},
-        ).id
-
-    def batch_status(self, batch_id: str) -> str:
-        return self.client.batches.retrieve(batch_id).status
-
-    def download_results(self, batch_id: str, dest_path: str) -> None:
-        import json as _json
-
-        job = self.client.batches.retrieve(batch_id)
-        if not job.output_file_id:
-            # completed-but-no-output means every request errored; surface
-            # the error file id instead of writing an empty results file
-            raise RuntimeError(
-                f"batch {batch_id} has no output_file_id "
-                f"(error_file_id={job.error_file_id!r})")
-        raw = self.client.files.content(job.output_file_id).text
-        with open(dest_path, "w") as out:
-            for line in raw.splitlines():
-                if not line.strip():
-                    continue
-                out.write(_json.dumps(
-                    flatten_result_line(_json.loads(line))) + "\n")

@@ -35,21 +35,6 @@ from pyspark.sql import functions as F
 from generative_ner_spark.plans.session import checkpoint_observed
 
 
-def with_shingles(df: DataFrame, name_col: str = "name", n: int = 3,
-                  out: str = "shingles") -> DataFrame:
-    """Add a distinct character-n-gram shingle array column (JVM-side).
-
-    Strings shorter than n get a single shingle = the whole string, so every
-    entity has a non-empty set.
-    """
-    expr = (
-        f"CASE WHEN length({name_col}) < {n} THEN array({name_col}) "
-        f"ELSE array_distinct(transform(sequence(1, length({name_col}) - {n - 1}), "
-        f"i -> substring({name_col}, i, {n}))) END"
-    )
-    return df.withColumn(out, F.expr(expr))
-
-
 # Universal-hash family over the Mersenne prime 2^31-1: keeps every product
 # below 2^62, so the expressions are safe under Spark 4's default ANSI mode
 # (long-overflow would otherwise raise).
@@ -92,9 +77,9 @@ def shingle_hash_rows(
     interpreted transform/array_distinct higher-order pass that built
     shingle ARRAYS for every document before anything else ran.
     DUPLICATE positions are retained — the consumer's collect_set
-    drops them. Same <n contract as with_shingles: a short string
-    yields its whole self as the single shingle (substring truncates),
-    so every named entity has at least one row."""
+    drops them. A string shorter than n yields its whole self as the
+    single shingle (substring truncates), so every named entity has at
+    least one row."""
     return (
         entities.select(F.col(id_col).alias("id"),
                         F.col(name_col).alias("nm"))
@@ -123,7 +108,13 @@ def _signatures(sets: DataFrame, k: int, scheme: str) -> DataFrame:
 
     * ``kmin``: slot i = min over h of (h * a_i + b_i) mod p, the
       _mh_coeffs universal-hash family;
-    * ``oph``: see minhash_df_oph.
+    * ``oph``: one-permutation hashing (Li, Owen & Zhang, NeurIPS
+      2012): h lands in slot h mod k and each slot keeps its min, one
+      update per shingle instead of k. Empty slots are densified as a
+      pure function of the set, (min h + slot * C) mod p, so identical
+      sets give identical signatures; near-identical short sets may
+      disagree on densified slots, which lowers banding recall but not
+      the exact-Jaccard verify's precision.
 
     Products stay below 2^62 in int64 and np.mod is a floor mod like
     Spark's pmod, so every value equals the SQL formula the DuckDB
@@ -159,47 +150,6 @@ def _signatures(sets: DataFrame, k: int, scheme: str) -> DataFrame:
 
     id_t = sets.schema["id"].dataType.simpleString()
     return sets.mapInPandas(kernel, f"id {id_t}, minhash array<bigint>")
-
-
-def _array_signatures(sh_df: DataFrame, id_col: str, shingle_col: str,
-                      k: int, hash_family: str, scheme: str) -> DataFrame:
-    hashed = sh_df.select(
-        F.col(id_col).alias("id"),
-        F.transform(shingle_col, lambda s: _raw_shingle_hash(s, hash_family))
-        .alias("shingles"))
-    return _signatures(hashed, k, scheme)
-
-
-def minhash_df(sh_df: DataFrame, id_col: str = "id",
-               shingle_col: str = "shingles", k: int = 64,
-               hash_family: str = "xxhash64") -> DataFrame:
-    """(id, shingles) -> (id, minhash ARRAY<LONG>), k-min scheme: one
-    string hash per shingle (a JVM-side transform), then the _signatures
-    kernel. No shuffle: each id's set is already one row."""
-    return _array_signatures(sh_df, id_col, shingle_col, k, hash_family,
-                             "kmin")
-
-
-def minhash_df_oph(sh_df: DataFrame, id_col: str = "id",
-                   shingle_col: str = "shingles", k: int = 64,
-                   hash_family: str = "xxhash64") -> DataFrame:
-    """(id, shingles) -> (id, minhash ARRAY<LONG>) via ONE-PERMUTATION
-    HASHING (Li, Owen & Zhang, NeurIPS 2012): each shingle's single hash
-    lands in bucket h mod k and each bucket keeps its min — one update
-    per shingle instead of the k-universal-hash family's k. The trade:
-    per-signature-slot variance is higher and short documents leave
-    empty buckets.
-
-    Empty buckets are DENSIFIED deterministically as a pure function of
-    the set, (min h + bucket * C) mod p, so identical shingle sets always
-    produce identical signatures (byte-reproducible, any cluster size);
-    near-identical sets may disagree on densified slots, mildly lowering
-    banding recall for short docs — the exact-Jaccard verify stage is
-    unaffected, so precision is identical to the k-min scheme. Same
-    _signatures kernel as minhash_df.
-    """
-    return _array_signatures(sh_df, id_col, shingle_col, k, hash_family,
-                             "oph")
 
 
 def capped_self_join_pairs(

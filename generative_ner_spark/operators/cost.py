@@ -8,9 +8,10 @@ total >= limit, cost.py:219-221). Re-expressed as:
   narrow projection (tiktoken is not a dependency);
 * cost as arithmetic columns from a driver-side price table (model prices
   are the PUBLIC OpenAI list prices the reference also hardcodes);
-* budget enforcement at stage boundaries: Spark cannot cheaply abort
-  mid-stage, so the check runs between micro-batches/stages on the
-  aggregated total (cost.py:197-223 semantics, same default limit).
+* the budget abort lives with the job that spends:
+  jobs/run_gpt_spark.py ``generate_with_budget`` charges each dispatched
+  chunk with these columns and stops dispatching at the limit
+  (cost.py:197-223 semantics).
 """
 
 from __future__ import annotations
@@ -51,8 +52,8 @@ FX_RATE_JPY = 150.0  # cost.py:4
 
 
 class CostError(RuntimeError):
-    """Budget exceeded / unknown or superseded model (parity with
-    src/gpt/cost.py CostError + its RuntimeError raises)."""
+    """Unknown or superseded model (parity with src/gpt/cost.py's
+    RuntimeError raises)."""
 
 
 def resolve_model_prices(model: str) -> dict:
@@ -91,27 +92,6 @@ def token_count_col(text_col: str) -> Column:
     )
 
 
-def count_fee(prompt_tokens: int, completion_tokens: int, model: str,
-              use_batchapi: bool = False) -> dict:
-    """Scalar twin of the reference's count_fee (src/gpt/cost.py:133-171):
-    returns {usd, jpy, prompt_tokens, completion_tokens} for one response's
-    usage, with the Batch-API halving and the superseded/unknown-model
-    raises. Used by the parity tests against the reference's own function;
-    the distributed path is with_cost_estimate (identical arithmetic as
-    columns)."""
-    prices = resolve_model_prices(model)
-    fee = (prices["prompt"] * prompt_tokens / 1000
-           + prices["completion"] * completion_tokens / 1000)
-    if use_batchapi:
-        fee /= 2
-    return {
-        "usd": fee,
-        "jpy": fee * FX_RATE_JPY,
-        "prompt_tokens": prompt_tokens,
-        "completion_tokens": completion_tokens,
-    }
-
-
 def with_cost_estimate(
     df: DataFrame,
     prompt_col: str,
@@ -139,25 +119,3 @@ def with_cost_estimate(
 def total_cost(df_with_cost: DataFrame) -> float:
     row = df_with_cost.agg(F.sum("usd_cost").alias("usd")).collect()[0]
     return float(row["usd"] or 0.0)
-
-
-class CostBudget:
-    """Running-total budget with abort (cost.py:197-223 semantics).
-
-    ``charge`` is called at stage boundaries with that stage's aggregated
-    USD; raises CostError once the running total reaches the limit
-    (estimate-only mode skips the abort, like the reference's
-    mode='estimate')."""
-
-    def __init__(self, limit_usd: float = 1.0, estimate_only: bool = False):
-        self.limit = limit_usd
-        self.estimate_only = estimate_only
-        self.total = 0.0
-
-    def charge(self, usd: float) -> float:
-        self.total += usd
-        if not self.estimate_only and self.total >= self.limit:
-            raise CostError(
-                f"cost budget exceeded: ${self.total:.4f} >= ${self.limit:.4f}"
-            )
-        return self.total

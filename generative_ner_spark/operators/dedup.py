@@ -443,7 +443,8 @@ def write_minhash_index(
       buckets.
     - ``_minhash_manifest.json`` — every signature parameter, so probes
       can never drift from the index's (k, bands, shingle_n, family,
-      scheme) tuning.
+      scheme) tuning, and both tables' schemas (an empty corpus writes
+      no parquet file to infer one from).
 
     Returns the manifest dict.
     """
@@ -467,21 +468,22 @@ def write_minhash_index(
         banded = (banded
                   .withColumn("_rn", F.row_number().over(w))
                   .where(F.col("_rn") <= max_bucket).drop("_rn"))
-    banding_path = os.path.join(path, "banding")
+    banding = banded.withColumn(
+        "_bkt", F.pmod(F.col("band_hash"), F.lit(n_buckets)))
+    shingles = sh.withColumn(
+        "_sbkt", F.pmod(F.xxhash64(F.col("id").cast("string")),
+                        F.lit(n_buckets)))
+    schemas = {"banding_schema": banding.schema.toDDL(),
+               "shingles_schema": shingles.schema.toDDL()}
     # repartition by the layout key before the partitioned write (guide
     # §6 file sizing): without it every upstream task writes a sliver
     # into every bucket directory — tasks x n_buckets tiny files whose
     # open/commit overhead dominates the write locally and poisons every
     # later probe's listing at scale; with it each bucket is one file
-    (banded
-     .withColumn("_bkt", F.pmod(F.col("band_hash"), F.lit(n_buckets)))
-     .repartition(F.col("_bkt"))
+    (banding.repartition(F.col("_bkt"))
      .write.partitionBy("_bkt").mode("overwrite")
-     .parquet(banding_path))
-    (sh
-     .withColumn("_sbkt", F.pmod(F.xxhash64(F.col("id").cast("string")),
-                                 F.lit(n_buckets)))
-     .repartition(F.col("_sbkt"))
+     .parquet(os.path.join(path, "banding")))
+    (shingles.repartition(F.col("_sbkt"))
      .write.partitionBy("_sbkt").mode("overwrite")
      .parquet(os.path.join(path, "shingles")))
     sh.unpersist()
@@ -490,8 +492,8 @@ def write_minhash_index(
         # both counts are parquet-metadata reads over the just-written
         # index (no data scan): shingles has one row per doc, so the
         # uncapped banding total is n_docs * bands
-        written = spark.read.parquet(banding_path).count()
-        n_docs = spark.read.parquet(os.path.join(path, "shingles")).count()
+        written = _read_index(spark, path, "banding", schemas).count()
+        n_docs = _read_index(spark, path, "shingles", schemas).count()
         n_capped = n_docs * bands - written
     manifest = {
         "id_col": id_col, "text_col": text_col, "k": k, "bands": bands,
@@ -502,59 +504,20 @@ def write_minhash_index(
         # shingle sets are stored as full-width hash longs (r6); probes
         # refuse an index written under a different representation
         "shingle_repr": "hash64",
+        **schemas,
     }
     with open(os.path.join(path, "_minhash_manifest.json"), "w") as f:
         json.dump(manifest, f)
     return manifest
 
 
-def append_to_minhash_index(
-    new_df: DataFrame,
-    path: str,
-) -> None:
-    """Add a batch's banding rows + shingle sets to a written MinHash
-    index (same bucket-partitioned layout, ``mode=append``) — the
-    continuous-crawl loop: dedup a batch against the index, ACCEPT the
-    survivors, append them so the NEXT batch dedups against corpus +
-    all previously accepted batches, never recomputing history.
-
-    Signature parameters come from the manifest (a probe or append can
-    never drift from the index tuning). Appended ids must be disjoint
-    from everything already indexed (the dedup_against_index contract
-    upholds this when you append its survivors). The write-time
-    ``max_bucket`` cap is NOT re-applied across old+new postings — a
-    bucket can exceed the cap by the appended rows; rebuild the index
-    (write_minhash_index) when accumulated appends warrant re-capping.
-    """
-    import json
+def _read_index(spark, path: str, table: str, manifest: dict) -> DataFrame:
+    """One table of a written MinHash index, read with the schema it was
+    written with."""
     import os
 
-    from generative_ner_spark.operators.canonicalize import (
-        shingle_band_rows,
-    )
-
-    with open(os.path.join(path, "_minhash_manifest.json")) as f:
-        m = json.load(f)
-    sh, banded = shingle_band_rows(
-        new_df, m["id_col"], m["text_col"], k=m["k"], bands=m["bands"],
-        n=m["shingle_n"], hash_family=m["hash_family"], scheme=m["scheme"],
-    )
-    sh.persist()  # both writes below read it: hash the text once
-    n_buckets = m["n_buckets"]
-    # same pre-write repartition as write_minhash_index: one file per
-    # touched bucket per append instead of tasks x buckets slivers
-    (banded
-     .withColumn("_bkt", F.pmod(F.col("band_hash"), F.lit(n_buckets)))
-     .repartition(F.col("_bkt"))
-     .write.partitionBy("_bkt").mode("append")
-     .parquet(os.path.join(path, "banding")))
-    (sh
-     .withColumn("_sbkt", F.pmod(F.xxhash64(F.col("id").cast("string")),
-                                 F.lit(n_buckets)))
-     .repartition(F.col("_sbkt"))
-     .write.partitionBy("_sbkt").mode("append")
-     .parquet(os.path.join(path, "shingles")))
-    sh.unpersist()
+    return spark.read.schema(manifest[f"{table}_schema"]).parquet(
+        os.path.join(path, table))
 
 
 def dedup_against_index(
@@ -623,7 +586,7 @@ def dedup_against_index(
     )
     if metrics is not None:
         metrics["broadcast_regime"] = small
-    corpus_banding = spark.read.parquet(os.path.join(path, "banding"))
+    corpus_banding = _read_index(spark, path, "banding", m)
     new_slim = banded_new.select(
         F.col("id").alias("b"), "band", "band_hash", "_bkt")
     if small:
@@ -650,7 +613,7 @@ def dedup_against_index(
                    F.lit(n_buckets)).alias("_sb")).distinct().collect()
     ]
     corpus_sh = (
-        spark.read.parquet(os.path.join(path, "shingles"))
+        _read_index(spark, path, "shingles", m)
         .where(F.col("_sbkt").isin(sbkts))
         .select(F.col("id").alias("a"), F.col("shingles").alias("sh_a"))
     )

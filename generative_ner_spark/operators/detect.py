@@ -566,30 +566,6 @@ def ground(generations: DataFrame, names2labels: dict[str, str] | None = None) -
     return generations.mapInPandas(fn, _MENTION_SCHEMA)
 
 
-def prune_contained_mentions(mentions: DataFrame) -> DataFrame:
-    """Optional overlap pruning (S26): drop spans strictly contained in
-    another span of the same example.
-
-    Parity target: remove_overlapped_offsets (/root/reference/src/gpt/base/
-    utils.py:12-25) — DEAD CODE in the reference (defined, never called), so
-    this operator is OFF by default everywhere. Spark form: collect the
-    example's span set once, keep spans for which no distinct superspan
-    exists — one groupBy + one array `exists` per row, no self-join.
-    """
-    spans = mentions.groupBy("example_id").agg(
-        F.collect_set(F.struct("start", "end")).alias("_all")
-    )
-    joined = mentions.join(spans, "example_id")
-    contained = F.exists(
-        "_all",
-        lambda s: (
-            ((s["start"] < F.col("start")) & (F.col("end") <= s["end"]))
-            | ((s["start"] <= F.col("start")) & (F.col("end") < s["end"]))
-        ),
-    )
-    return joined.where(~contained).drop("_all")
-
-
 def mention_context_windows(
     df,
     terms: list,

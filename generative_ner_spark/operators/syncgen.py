@@ -14,8 +14,7 @@ Spark restatement:
   * the HTTP call becomes an injectable ``responder(messages, params) ->
     (text, finish_reason)`` invoked inside ``mapInPandas`` Arrow batches —
     a deterministic local stub here (no network in the sandbox), the real
-    OpenAI client in production (a per-worker client singleton, same
-    pattern as operators/llm.py);
+    OpenAI client in production (a per-worker client singleton);
   * the finish-reason guard becomes a per-row ``error`` column instead of a
     process-killing raise — on a 1000-executor run one truncated response
     must not abort the stage; rows with errors are NOT cached, so a re-run

@@ -76,6 +76,9 @@ def build_session(
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # no [Stage N:>  ] redraws: they bury every log line of a
+        # non-interactive run
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
     for k, v in (extra_conf or {}).items():

@@ -2,7 +2,7 @@
 
 Reference: scripts/conll2003.py:126-197 — a sequential file reader that
 splits sentences on blank lines, documents on ``-DOCSTART-``, then decodes
-IOB2 tags to char-offset entities. Re-expressed for Spark in two layers:
+IOB2 tags to char-offset entities. Re-expressed for Spark as:
 
 * ``read_conll_distributed`` — the Spark job: ``spark.read.text`` with a
   running-group window (sum of boundary flags over line order) assigns
@@ -17,10 +17,9 @@ IOB2 tags to char-offset entities. Re-expressed for Spark in two layers:
   is inherently sequential); many files parallelize across files via the
   ``input_file_name`` partition key.
 
-* ``conll_lines_to_documents`` — the pure kernel on an iterator of lines;
-  the distributed path shares its document-record construction via
-  ``_doc_record`` (one copy of the parity-critical id/example shape) and
-  tests assert the two paths equal.
+* ``_doc_record`` — the one copy of the parity-critical document shape
+  (doc_id scheme, example ids, entity layout); tests/reference_loop.py
+  holds the line-by-line kernel the tests compare the Spark job with.
 
 INTENTIONAL divergence from the reference (recorded in COVERAGE.md): the
 reference's ``read_conll`` never flushes words pending at EOF (a file not
@@ -34,7 +33,7 @@ files differs by exactly the sentences the reference loses.
 from __future__ import annotations
 
 import hashlib
-from typing import Any, Iterable, Iterator
+from typing import Any, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -68,45 +67,6 @@ def _doc_record(basename: str, doc_idx: int,
             for j, s in enumerate(sentences)
         ],
     }
-
-
-def conll_lines_to_documents(
-    lines: Iterable[str], basename: str = "conll"
-) -> Iterator[dict[str, Any]]:
-    """Pure kernel: CoNLL lines -> document dicts (scripts/conll2003.py:
-    109-149 semantics, with the EOF/docstart pending-word flush fix — see
-    module docstring)."""
-    sentences: list[dict[str, Any]] = []
-    words: list[str] = []
-    labels: list[str] = []
-    doc_idx = 0
-
-    def flush_sentence():
-        nonlocal words, labels
-        if words:
-            sentences.append(textops.conll_to_example(words, labels))
-            words, labels = [], []
-
-    def flush_doc():
-        nonlocal sentences, doc_idx
-        if sentences:
-            yield _doc_record(basename, doc_idx, sentences)
-            doc_idx += 1
-            sentences = []
-
-    for raw in lines:
-        line = raw.rstrip()
-        if line.startswith("-DOCSTART"):
-            flush_sentence()
-            yield from flush_doc()
-        elif not line:
-            flush_sentence()
-        else:
-            cols = line.split(" ")
-            words.append(cols[0])
-            labels.append(cols[-1])
-    flush_sentence()
-    yield from flush_doc()
 
 
 def _file_basenames(files: list[str]) -> dict[str, str]:

@@ -77,34 +77,34 @@ def generate_with_budget(spark, fused_prompts, responder, args, cache_dir,
         .select("example_id", "prompt", "prompt_hash", "_chunk")
         .persist()
     )
+    # snapshot the distinct prompts this run will actually PAY for (not
+    # yet cached) BEFORE generate_sync appends to the cache: one snapshot
+    # serves every chunk, because chunks split on prompt_hash and no
+    # chunk's appends can reach another chunk's prompts
+    fresh = bucketed.dropDuplicates(["prompt_hash"])
+    if cache_dir and os.path.exists(cache_dir):
+        cached = spark.read.parquet(cache_dir).select(
+            "prompt_hash").distinct()
+        fresh = fresh.join(cached, "prompt_hash", "left_anti")
+    fresh = fresh.select(
+        "prompt_hash", "_chunk",
+        F.concat_ws(
+            "\n", F.transform("prompt", lambda m: m["content"])
+        ).alias("_p"),
+    ).persist()
+    fresh.count()
+    # every chunk's size from one job over the persisted frame
+    sizes = dict(bucketed.groupBy("_chunk").count().collect())
     spent = 0.0
     parts = []
     n_dispatched = n_skipped = 0
-    for c in range(n_chunks):
-        chunk = bucketed.where(F.col("_chunk") == c).drop("_chunk")
-        n_chunk = chunk.count()
-        if n_chunk == 0:
-            continue
+    for c in sorted(sizes):
         if spent >= args.budget_usd:
-            n_skipped += n_chunk
+            n_skipped += sizes[c]
             continue
-        # snapshot the distinct prompts this chunk will actually PAY for
-        # (not yet cached) BEFORE generate_sync appends to the cache
-        fresh = chunk.dropDuplicates(["prompt_hash"])
-        if cache_dir and os.path.exists(cache_dir):
-            cached = spark.read.parquet(cache_dir).select(
-                "prompt_hash").distinct()
-            fresh = fresh.join(cached, "prompt_hash", "left_anti")
-        fresh = fresh.select(
-            "prompt_hash",
-            F.concat_ws(
-                "\n", F.transform("prompt", lambda m: m["content"])
-            ).alias("_p"),
-        ).persist()
-        fresh.count()
         g = syncgen.generate_sync(
-            chunk.select("example_id", "prompt"), responder,
-            model=args.model, temperature=args.temperature,
+            bucketed.where(F.col("_chunk") == c).select("example_id", "prompt"),
+            responder, model=args.model, temperature=args.temperature,
             max_tokens=args.max_tokens, top_p=args.top_p, seed=args.seed,
             n=args.n, cache_dir=cache_dir,
         )
@@ -113,10 +113,11 @@ def generate_with_budget(spark, fused_prompts, responder, args, cache_dir,
             F.coalesce("generated_text", F.lit("")).alias("_g"),
         ).dropDuplicates(["prompt_hash"])
         spent += cost.total_cost(cost.with_cost_estimate(
-            fresh.join(gt, "prompt_hash"), "_p", "_g", model=args.model))
-        fresh.unpersist()
+            fresh.where(F.col("_chunk") == c).join(gt, "prompt_hash"),
+            "_p", "_g", model=args.model))
         parts.append(g)
-        n_dispatched += n_chunk
+        n_dispatched += sizes[c]
+    fresh.unpersist()
     bucketed.unpersist()
     if parts:
         gens = parts[0]

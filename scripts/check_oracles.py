@@ -24,6 +24,7 @@ import __spark_entry__ as entrymod  # noqa: E402
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
+DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
 
 def norm_val(v):
@@ -92,7 +93,7 @@ def main():
         i = args.index("--json")
         json_path = args[i + 1]
         args = args[:i] + args[i + 2:]
-    sf_dir = args[0] if args else "/root/testdata/sf0.001"
+    sf_dir = args[0] if args else DEFAULT_SF_DIR
 
     from generative_ner_spark.plans.session import build_session
 

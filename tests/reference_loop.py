@@ -14,15 +14,22 @@ The Spark pipeline must match these triples at P >= 0.95 and R >= 0.95
 pipeline is allowed to diverge: Spark uses MinHash-LSH *blocking* (approx
 recall) with exact-Jaccard verification, the oracle checks ALL pairs — so
 any miss is an LSH recall miss, bounded by the (b, r) S-curve.
+
+The module also holds the smaller pure oracles the tests check running
+code against: the line-by-line CoNLL reader (vs read_conll_distributed),
+micro P/R/F1 over span sets (vs evaluate.evaluate_predictions), the
+scalar fee (vs cost.with_cost_estimate), and one entry into the MinHash
+signature kernel through the shingler canonical_map runs.
 """
 
 from __future__ import annotations
 
 from collections import defaultdict
-from typing import Any
+from typing import Any, Iterable, Iterator
 
 from generative_ner_spark.functions import textops
-from generative_ner_spark.sources import synth
+from generative_ner_spark.operators import cost
+from generative_ner_spark.sources import conll, synth
 from generative_ner_spark.sources.synth import LABELS2NAMES, SynthConfig
 
 NAMES2LABELS = {v: k for k, v in LABELS2NAMES.items()}
@@ -146,3 +153,92 @@ def oracle_triples(cfg: SynthConfig) -> set[tuple]:
             for b in ordered[i + 1 :]:
                 triples.add((a, "co_occurs_with", b, doc_id, off))
     return triples
+
+
+def conll_lines_to_documents(
+    lines: Iterable[str], basename: str = "conll"
+) -> Iterator[dict[str, Any]]:
+    """CoNLL lines -> document dicts, one line at a time
+    (scripts/conll2003.py:109-149 semantics, with the EOF/docstart
+    pending-word flush fix recorded in COVERAGE.md)."""
+    sentences: list[dict[str, Any]] = []
+    words: list[str] = []
+    labels: list[str] = []
+    doc_idx = 0
+
+    def flush_sentence():
+        nonlocal words, labels
+        if words:
+            sentences.append(textops.conll_to_example(words, labels))
+            words, labels = [], []
+
+    def flush_doc():
+        nonlocal sentences, doc_idx
+        if sentences:
+            yield conll._doc_record(basename, doc_idx, sentences)
+            doc_idx += 1
+            sentences = []
+
+    for raw in lines:
+        line = raw.rstrip()
+        if line.startswith("-DOCSTART"):
+            flush_sentence()
+            yield from flush_doc()
+        elif not line:
+            flush_sentence()
+        else:
+            cols = line.split(" ")
+            words.append(cols[0])
+            labels.append(cols[-1])
+    flush_sentence()
+    yield from flush_doc()
+
+
+def evaluate_span_sets(
+    pairs: Iterable[tuple[Iterable[tuple], Iterable[tuple]]],
+) -> dict[str, float]:
+    """Micro P/R/F1 over (golds, preds) per record — set-intersection exact
+    match, parity with src/evaluation/eval.py:13-27."""
+    n_correct = n_pred = n_gold = 0
+    for golds, preds in pairs:
+        gold_set = set(golds)
+        pred_set = set(preds)
+        n_gold += len(gold_set)
+        n_pred += len(pred_set)
+        n_correct += len(pred_set & gold_set)
+    p, r, f1 = textops.calculate_metrics(n_correct, n_pred, n_gold)
+    return {"precision": p, "recall": r, "f1": f1}
+
+
+def count_fee(prompt_tokens: int, completion_tokens: int, model: str,
+              use_batchapi: bool = False) -> dict:
+    """The reference's count_fee (src/gpt/cost.py:133-171) for one
+    response's usage: {usd, jpy, prompt_tokens, completion_tokens}, with
+    the Batch-API halving and the superseded/unknown-model raises."""
+    prices = cost.resolve_model_prices(model)
+    fee = (prices["prompt"] * prompt_tokens / 1000
+           + prices["completion"] * completion_tokens / 1000)
+    if use_batchapi:
+        fee /= 2
+    return {
+        "usd": fee,
+        "jpy": fee * cost.FX_RATE_JPY,
+        "prompt_tokens": prompt_tokens,
+        "completion_tokens": completion_tokens,
+    }
+
+
+def minhash_signatures(df, text_col: str, n: int, k: int = 64,
+                       hash_family: str = "xxhash64", scheme: str = "kmin"):
+    """(id, <text_col>) -> (id, minhash): the shingler canonical_map runs
+    (shingle_hash_rows, one distinct hash set per id) feeding the
+    _signatures kernel."""
+    from pyspark.sql import functions as F
+
+    from generative_ner_spark.operators.canonicalize import (
+        _signatures, shingle_hash_rows,
+    )
+
+    sets = (shingle_hash_rows(df, "id", text_col, n=n, hash_family=hash_family)
+            .groupBy("id").agg(F.collect_set("_sh").alias("shingles")))
+    return _signatures(sets, k, scheme)

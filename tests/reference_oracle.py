@@ -89,9 +89,7 @@ def load_reference() -> SimpleNamespace:
     for fn in ("normalize_answer", "parser", "parse_output"):
         exec(_extract_def(pre, fn), ns)
 
-    utils = REF_DIR / "src/gpt/base/utils.py"
-    for fn in ("regex", "remove_overlapped_offsets"):
-        exec(_extract_def(utils, fn), ns)
+    exec(_extract_def(REF_DIR / "src/gpt/base/utils.py", "regex"), ns)
 
     ev = REF_DIR / "src/evaluation/eval.py"
     exec(_extract_def(ev, "calculate_metrics"), ns)

@@ -100,12 +100,8 @@ def test_md5_hash_family_twins_fuzz(spark):
     import re
 
     from generative_ner_spark.operators import dedup
-    from generative_ner_spark.operators.canonicalize import (
-        _MH_P,
-        _mh_coeffs,
-        minhash_df,
-        with_shingles,
-    )
+    from generative_ner_spark.operators.canonicalize import _MH_P, _mh_coeffs
+    from tests.reference_loop import minhash_signatures
 
     rng = random.Random(99)
     alphabet = "abcXYZ019 .,:;!?()[]'\"-_/\t"
@@ -129,11 +125,9 @@ def test_md5_hash_family_twins_fuzz(spark):
         assert got_sh[i] == sig, (i, t)
 
     # --- minhash (md5-prefix universal hashing) --------------------------
-    sh_df = with_shingles(
-        df.selectExpr("doc_id as id", "text as nm"), "nm", n=5
-    ).select("id", "shingles")
-    got_mh = {r.id: list(r.minhash) for r in minhash_df(
-        sh_df, "id", "shingles", k=16, hash_family="md5").collect()}
+    got_mh = {r.id: list(r.minhash) for r in minhash_signatures(
+        df.selectExpr("doc_id as id", "text as nm"), "nm", n=5, k=16,
+        hash_family="md5").collect()}
     coeffs = _mh_coeffs(16)
     for i, t in enumerate(texts):
         if len(t) < 5:

@@ -18,14 +18,11 @@ from generative_ner_spark.operators.canonicalize import (
     _mh_coeffs,
     canonical_map,
     lsh_candidate_pairs,
-    minhash_df,
-    minhash_df_oph,
     shingle_band_rows,
-    with_shingles,
 )
 from generative_ner_spark.sources import corpus
 from generative_ner_spark.sources.synth import SynthConfig
-from tests.reference_loop import oracle_canonical_map
+from tests.reference_loop import minhash_signatures, oracle_canonical_map
 
 # shorter than n, '' (what NULL text becomes in dedup), repeated shingles,
 # near duplicates and a name long enough to fill most OPH buckets
@@ -72,17 +69,16 @@ def names_df(spark):
 
 @pytest.mark.parametrize("family", ["xxhash64", "md5"])
 def test_kernel_matches_pure_formulas(spark, names_df, family):
-    """k-min and OPH signatures from the array API equal the formulas the
-    DuckDB oracles replay, for both hash families."""
+    """k-min and OPH signatures from the _signatures kernel equal the
+    formulas the DuckDB oracles replay, for both hash families."""
     hashes = {f"e{i}": _full_hashes(spark, family, nm)
               for i, nm in enumerate(NAMES)}
-    sh = with_shingles(names_df.selectExpr("entity_id as id", "name as nm"),
-                       "nm", n=3).select("id", "shingles")
-    got = {r.id: list(r.minhash)
-           for r in minhash_df(sh, k=16, hash_family=family).collect()}
+    named = names_df.selectExpr("entity_id as id", "name as nm")
+    got = {r.id: list(r.minhash) for r in minhash_signatures(
+        named, "nm", n=3, k=16, hash_family=family).collect()}
     assert got == {i: _kmin(hs, 16) for i, hs in hashes.items()}
-    got = {r.id: list(r.minhash)
-           for r in minhash_df_oph(sh, hash_family=family).collect()}
+    got = {r.id: list(r.minhash) for r in minhash_signatures(
+        named, "nm", n=3, hash_family=family, scheme="oph").collect()}
     assert got == {i: _oph(hs, 64) for i, hs in hashes.items()}
 
 

@@ -3,16 +3,18 @@
 Two static checks over the source tree (no Spark):
 
 * every ``module.name`` COVERAGE.md cites (``a/b`` continuations
-  included, as in ``llm.render_chat_template/with_rendered_prompt``) is a
-  top-level definition of that ``generative_ner_spark`` module, and
+  included, as in ``triples.write_triples_snapshot/read_triples_snapshot``)
+  is a top-level definition of that ``generative_ner_spark`` module, and
   something that runs it refers to it: ``__spark_entry__.py``, ``jobs/``,
   ``bench*.py`` or ``tests/``;
 * every top-level package definition (``def``, ``class`` or assignment)
   is reached, through references in code, from what runs —
   ``__spark_entry__.py``, ``jobs/``, ``bench*.py``, ``perfbench/`` and
   ``scripts/`` — or from a COVERAGE.md citation. COVERAGE.md is the one
-  list of definitions kept for tests alone (reference counterparts and
-  test oracles); anything else that only tests reach is deleted.
+  list of definitions kept for tests alone; anything else that only tests
+  reach is deleted, and what the citations alone keep stays small
+  (``CITED_ONLY_MAX_LINES``): a pure oracle belongs under ``tests/`` and
+  a second copy of running code is deleted.
 """
 
 from __future__ import annotations
@@ -24,6 +26,7 @@ import re
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 PKG = ROOT / "generative_ner_spark"
 SKIP_DIRS = {".perfbench", "__pycache__", ".git"}
+CITED_ONLY_MAX_LINES = 150
 
 
 def _py_files(*roots: pathlib.Path) -> list[pathlib.Path]:
@@ -117,26 +120,58 @@ def _refs(node: ast.AST, mod: str | None, aliases, mods
     return out
 
 
-def test_every_definition_is_reached_or_cited():
-    mods = _modules()
+def _definitions(mods) -> dict:
+    """(module, name) -> (node, module, aliases) for every top-level
+    package definition: the arguments ``_refs`` walks it with."""
     defs = {}
     for mod, path in mods.items():
         aliases = _aliases(ast.parse(path.read_text()), mods)
         for name, node in _top_level(path).items():
             defs[(mod, name)] = (node, mod, aliases)
-    todo = set(_cited())
+    return defs
+
+
+def _running_roots(mods) -> set[tuple[str, str]]:
+    """What the entry points, jobs, benches and scripts refer to."""
+    roots = set()
     for path in _py_files(ROOT / "__spark_entry__.py", ROOT / "jobs",
                           ROOT / "perfbench", ROOT / "scripts",
                           *ROOT.glob("bench*.py")):
         tree = ast.parse(path.read_text())
-        todo |= _refs(tree, None, _aliases(tree, mods), mods)
-    reached = set()
+        roots |= _refs(tree, None, _aliases(tree, mods), mods)
+    return roots
+
+
+def _reached(roots, defs, mods) -> set[tuple[str, str]]:
+    todo, reached = set(roots), set()
     while todo:
         key = todo.pop()
         if key in defs and key not in reached:
             reached.add(key)
             todo |= _refs(*defs[key], mods)
+    return reached
+
+
+def test_every_definition_is_reached_or_cited():
+    mods = _modules()
+    defs = _definitions(mods)
+    reached = _reached(_running_roots(mods) | _cited(), defs, mods)
     dead = sorted(f"{m}.{n}" for m, n in defs.keys() - reached)
     assert not dead, (
         "package definitions that nothing running reaches and COVERAGE.md "
         f"does not cite (delete them, or cite a reference counterpart): {dead}")
+
+
+def test_citation_only_code_stays_small():
+    """Raw lines of the definitions that only COVERAGE.md citations keep
+    alive: the walk above without the citation roots, subtracted."""
+    mods = _modules()
+    defs = _definitions(mods)
+    running = _reached(_running_roots(mods), defs, mods)
+    kept = _reached(_running_roots(mods) | _cited(), defs, mods) - running
+    lines = {f"{m}.{n}": defs[(m, n)][0].end_lineno - defs[(m, n)][0].lineno
+             + 1 for m, n in kept}
+    assert sum(lines.values()) <= CITED_ONLY_MAX_LINES, (
+        "definitions only COVERAGE.md citations keep alive: move a pure "
+        "oracle under tests/, delete a second copy of running code, or "
+        f"wire the definition into what runs: {sorted(lines.items())}")

@@ -1,4 +1,4 @@
-"""Tests for CoNLL ingestion, formats, batch API, cost, demos, llm templates,
+"""Tests for CoNLL ingestion, formats, batch API, cost, demos,
 dedup/similarity, multimodal, and streaming."""
 
 from __future__ import annotations
@@ -13,11 +13,14 @@ from pyspark.sql import functions as F
 
 from generative_ner_spark.functions import textops
 from generative_ner_spark.operators import (
-    batchapi, cost, dedup, demos, detect, linking, llm, multimodal, quality,
+    batchapi, cost, dedup, demos, detect, linking, multimodal, quality,
     similarity, syncgen,
 )
 from generative_ner_spark.sources import conll, corpus
 from generative_ner_spark.sources.synth import LABELS2NAMES, SynthConfig
+from tests.reference_loop import (
+    conll_lines_to_documents, count_fee, minhash_signatures,
+)
 from tests.reference_oracle import reference, requires_reference
 
 CONLL_SAMPLE = """-DOCSTART- -X- -X- O
@@ -40,7 +43,7 @@ BRUSSELS NNP B-NP B-LOC
 
 class TestConll:
     def test_pure_kernel(self):
-        docs = list(conll.conll_lines_to_documents(CONLL_SAMPLE.splitlines(), "x"))
+        docs = list(conll_lines_to_documents(CONLL_SAMPLE.splitlines(), "x"))
         assert [d["doc_id"] for d in docs] == ["x-0", "x-1"]
         assert len(docs[0]["examples"]) == 2
         ex0 = docs[0]["examples"][0]
@@ -59,7 +62,7 @@ class TestConll:
         }
         want = {
             d["doc_id"]: d["examples"]
-            for d in conll.conll_lines_to_documents(
+            for d in conll_lines_to_documents(
                 CONLL_SAMPLE.splitlines(), "sample"
             )
         }
@@ -710,7 +713,7 @@ class TestConvertConllCli:
         out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
         assert rc == 0
         back = spark.read.json(str(tmp_path / "out" / "train"))
-        want = list(conll.conll_lines_to_documents(
+        want = list(conll_lines_to_documents(
             CONLL_SAMPLE.splitlines(), str(raw)))
         assert out["documents"]["train"] == len(want)
         got_texts = {
@@ -972,14 +975,29 @@ class TestCost:
         # batch API halves
         est_b = cost.with_cost_estimate(df, "prompt", "completion", batch_api=True)
         assert abs(cost.total_cost(est_b) - cost.total_cost(est) / 2) < 1e-9
-        # budget abort
-        budget = cost.CostBudget(limit_usd=0.001)
-        budget.charge(0.0005)
-        with pytest.raises(cost.CostError):
-            budget.charge(0.0006)
-        # estimate mode never aborts (cost.py mode='estimate')
-        est_only = cost.CostBudget(limit_usd=0.001, estimate_only=True)
-        assert est_only.charge(5.0) == 5.0
+
+    def test_cost_columns_equal_count_fee(self, spark):
+        """with_cost_estimate's usd_cost/jpy_cost equal the reference's
+        scalar count_fee for every model in the fee table, sync and
+        Batch API (the columns round to 8 decimals)."""
+        from functools import reduce
+
+        df = spark.createDataFrame(
+            [("x" * 4935, "y" * 2267)], "prompt string, completion string")
+        est = reduce(lambda a, b: a.unionByName(b), [
+            cost.with_cost_estimate(
+                df, "prompt", "completion", model=model, batch_api=batch
+            ).select(F.lit(model).alias("model"),
+                     F.lit(batch).alias("batch"), "prompt_tokens",
+                     "completion_tokens", "usd_cost", "jpy_cost")
+            for model in cost.MODEL_COSTS for batch in (False, True)])
+        rows = est.collect()
+        assert len(rows) == 2 * len(cost.MODEL_COSTS)
+        for r in rows:
+            assert (r.prompt_tokens, r.completion_tokens) == (1234, 567)
+            want = count_fee(1234, 567, r.model, use_batchapi=r.batch)
+            assert abs(r.usd_cost - want["usd"]) < 1e-8, r
+            assert abs(r.jpy_cost - want["jpy"]) < 1e-6, r
 
     @staticmethod
     def _ref_cost_module():
@@ -1005,7 +1023,7 @@ class TestCost:
         for model in supported:
             for batch in (False, True):
                 want = ref.count_fee(usage, model, use_batchapi=batch)
-                got = cost.count_fee(1234, 567, model, use_batchapi=batch)
+                got = count_fee(1234, 567, model, use_batchapi=batch)
                 assert abs(got["usd"] - want.usd) < 1e-12, (model, batch)
                 assert abs(got["jpy"] - want.jpy) < 1e-9, (model, batch)
                 assert got["prompt_tokens"] == want.prompt_tokens
@@ -1014,11 +1032,11 @@ class TestCost:
             with pytest.raises(RuntimeError, match="cheaper"):
                 ref.count_fee(usage, model)
             with pytest.raises(cost.CostError, match="cheaper"):
-                cost.count_fee(1234, 567, model)
+                count_fee(1234, 567, model)
         with pytest.raises(RuntimeError, match="unknown"):
             ref.count_fee(usage, "gpt-99-nonexistent")
         with pytest.raises(cost.CostError, match="unknown"):
-            cost.count_fee(1, 1, "gpt-99-nonexistent")
+            count_fee(1, 1, "gpt-99-nonexistent")
 
 class TestDemos:
     def test_sample_deterministic(self, spark):
@@ -1051,166 +1069,6 @@ class TestDemos:
             "user", "assistant", "user", "assistant", "user", "assistant", "user"
         ]
         assert spliced[-1]["role"] == "user"
-
-
-def _make_fake_loader():
-    """Returns a pure-python (tokenizer, model) loader speaking the API
-    generate_with_model uses. Everything is nested so cloudpickle ships
-    the whole closure by VALUE to workers (top-level test-module
-    functions/classes pickle by reference and fail to import
-    executor-side)."""
-
-    def _fake_loader(model_name):
-        assert model_name == "fake/model"
-
-        class FakeEnc(dict):
-            def to(self, device):
-                return self
-
-        class FakeTok:
-            chat_template = "x [INST] q [/INST] a"
-            eos_token = "<eos>"
-            eos_token_id = 0
-
-            def __call__(self, texts, return_tensors=None, padding=None,
-                         padding_side=None):
-                # the reference tokenizes with LEFT padding (pred.py:13-29) —
-                # the wiring must request it
-                assert padding is True and padding_side == "left", (
-                    padding, padding_side)
-                assert return_tensors == "pt"
-                return FakeEnc(prompts=list(texts))
-
-            def decode(self, tokens):
-                return tokens  # "tokens" are the generated strings themselves
-
-        class FakeModel:
-            device = "cpu"
-
-            def generate(self, prompts=None, max_new_tokens=None,
-                         pad_token_id=None, **kw):
-                assert pad_token_id == 0 and max_new_tokens == 7
-                return [f"{p} [/INST] ANSWER({p.split()[-1]})<eos>trailing"
-                        for p in prompts]
-
-        return FakeTok(), FakeModel()
-
-    return _fake_loader
-
-
-class TestLlmTemplates:
-    @pytest.mark.parametrize("tpl,resp", [
-        ("xx [INST] yy [/INST]", "[/INST]"),
-        ("<|start_header_id|>u<|end_header_id|>", "<|start_header_id|>assistant<|end_header_id|>"),
-        ("<start_of_turn>user<end_of_turn>", "<start_of_turn>model\n"),
-        ("<|im_start|>a<|im_end|>", "<|im_start|>assistant\n"),
-    ])
-    def test_families(self, tpl, resp):
-        assert llm.detect_templates(tpl)["response"] == resp
-
-    def test_unknown_raises(self):
-        with pytest.raises(NotImplementedError):
-            llm.detect_templates("no known markers")
-
-    def test_generate_with_model_full_wiring_via_injected_loader(self, spark):
-        """The forward-pass WIRING runs end-to-end without torch: the
-        injected pure-python (tokenizer, model) pair pins that the
-        mapInPandas stage requests left-padded batch tokenization, calls
-        model.generate with the configured max_new_tokens/pad_token_id,
-        folds the eos token to a newline, and strips everything up to the
-        detected response template (pred.py:13-29 semantics). Only the
-        real HF weight load stays env-gated behind _load_singleton."""
-        df = spark.createDataFrame(
-            [("e1", "tag the word alpha"), ("e2", "tag the word beta")],
-            "example_id string, prompt_text string",
-        ).repartition(1)
-        out = {r.example_id: r.generated_text for r in llm.generate_with_model(
-            df, "fake/model", max_new_tokens=7, loader=_make_fake_loader(),
-        ).collect()}
-        assert out == {"e1": "ANSWER(alpha)\ntrailing",
-                       "e2": "ANSWER(beta)\ntrailing"}
-
-    def test_generate_with_model_default_loader_is_torch_gated(self, spark):
-        df = spark.createDataFrame(
-            [("e1", "x")], "example_id string, prompt_text string")
-        with pytest.raises(Exception, match="transformers/torch"):
-            llm.generate_with_model(df, "any/model").collect()
-
-    # Public chat-template strings for the four families the reference
-    # detects (preprocessor.py:76-106) — ChatML/Llama-3/Gemma/Mistral
-    # formats are publicly documented; these exercise REAL jinja rendering.
-    CHATML = (
-        "{% for message in messages %}{{'<|im_start|>' + message['role'] + '\n'"
-        " + message['content'] + '<|im_end|>' + '\n'}}{% endfor %}"
-        "{% if add_generation_prompt %}{{ '<|im_start|>assistant\n' }}{% endif %}"
-    )
-    LLAMA3 = (
-        "{{ bos_token }}{% for message in messages %}"
-        "{{ '<|start_header_id|>' + message['role'] + '<|end_header_id|>\n\n'"
-        " + message['content'] + '<|eot_id|>' }}{% endfor %}"
-        "{% if add_generation_prompt %}"
-        "{{ '<|start_header_id|>assistant<|end_header_id|>\n\n' }}{% endif %}"
-    )
-    GEMMA = (
-        "{{ bos_token }}{% for message in messages %}"
-        "{% if message['role'] == 'assistant' %}{% set role = 'model' %}"
-        "{% else %}{% set role = message['role'] %}{% endif %}"
-        "{{ '<start_of_turn>' + role + '\n' + message['content']"
-        " + '<end_of_turn>\n' }}{% endfor %}"
-        "{% if add_generation_prompt %}{{'<start_of_turn>model\n'}}{% endif %}"
-    )
-    MISTRAL = (
-        "{{ bos_token }}{% for message in messages %}"
-        "{% if message['role'] == 'system' %}"
-        "{{ raise_exception('System role not supported') }}{% endif %}"
-        "{% if message['role'] == 'user' %}{{ '[INST] ' + message['content']"
-        " + ' [/INST]' }}{% else %}{{ ' ' + message['content'] + eos_token }}"
-        "{% endif %}{% endfor %}"
-    )
-
-    def test_render_chat_template_families(self):
-        """Real jinja rendering (the public apply_chat_template contract)
-        for all four families; the generation prompt ends with exactly the
-        response marker detect_templates extracts — proving render and
-        split-on-response stay consistent (pred.py:13-29 chain)."""
-        msgs = [{"role": "user", "content": "Extract entities."},
-                {"role": "assistant", "content": "[]"}]
-        for tpl, bos in ((self.CHATML, ""), (self.LLAMA3, "<|begin_of_text|>"),
-                         (self.GEMMA, "<bos>")):
-            out = llm.render_chat_template(msgs, tpl, bos_token=bos)
-            resp = llm.detect_templates(tpl)["response"]
-            # whitespace after the marker varies per family (llama3 pads
-            # with \n\n); the split-on-response chain strips it anyway
-            assert out.rstrip().endswith(resp.rstrip()), (tpl[:30], out[-60:])
-            assert "Extract entities." in out and out.startswith(bos)
-        out = llm.render_chat_template(
-            msgs, self.MISTRAL, add_generation_prompt=False,
-            bos_token="<s>", eos_token="</s>")
-        assert out == "<s>[INST] Extract entities. [/INST] []</s>"
-
-    def test_render_chat_template_raise_exception_hook(self):
-        """Templates reject unsupported turns via raise_exception — the
-        sandboxed-env hook real model templates rely on."""
-        with pytest.raises(ValueError, match="System role not supported"):
-            llm.render_chat_template(
-                [{"role": "system", "content": "x"}], self.MISTRAL)
-
-    def test_with_rendered_prompt_column(self, spark):
-        """The Spark column form: render_prompts output -> rendered
-        prompt_text rows, template compiled once per worker; row parity
-        with the pure function."""
-        cfg = SynthConfig(n_docs=6)
-        ex = corpus.synth_examples_with_golds(spark, cfg, num_partitions=2)
-        prompts = detect.render_prompts(ex, "collective")
-        rendered = llm.with_rendered_prompt(prompts, self.CHATML)
-        rows = rendered.select("example_id", "prompt", "prompt_text").collect()
-        assert rows
-        for r in rows:
-            want = llm.render_chat_template(
-                [{"role": m.role, "content": m.content} for m in r.prompt],
-                self.CHATML)
-            assert r.prompt_text == want
-            assert r.prompt_text.endswith("<|im_start|>assistant\n")
 
 
 class TestDedupSimilarity:
@@ -1322,10 +1180,6 @@ class TestDedupSimilarity:
         a pure function of the set), short documents with mostly-empty
         buckets don't crash or emit nulls, and the component-wise fuzzy
         dedup built on it keeps one survivor per cluster."""
-        from generative_ner_spark.operators.canonicalize import (
-            minhash_df_oph, with_shingles,
-        )
-
         base = "the quick brown fox jumps over the lazy dog " * 8
         rows = [(str(i), base[: len(base) - i]) for i in range(3)]
         rows += [(str(100 + i),
@@ -1339,9 +1193,9 @@ class TestDedupSimilarity:
         assert {("0", "1"), ("0", "2"), ("1", "2"), ("200", "201")} <= got
         assert all((int(a) < 100) == (int(b) < 100) for a, b in got)
         # identical sets -> identical signatures, no nulls anywhere
-        sh = with_shingles(df.selectExpr("doc_id as id", "text as nm"),
-                           "nm", n=5).select("id", "shingles")
-        sigs = {r.id: tuple(r.minhash) for r in minhash_df_oph(sh).collect()}
+        sigs = {r.id: tuple(r.minhash) for r in minhash_signatures(
+            df.selectExpr("doc_id as id", "text as nm"), "nm", n=5,
+            scheme="oph").collect()}
         assert sigs["200"] == sigs["201"]
         assert all(len(s) == 64 and None not in s for s in sigs.values())
         kept = {r.doc_id for r in dedup.near_dedup_documents(
@@ -2250,72 +2104,6 @@ class TestStreaming:
         assert all(r.window_start == _dt.datetime(2025, 1, 1, 10, 0)
                    for r in out)
 
-    def test_streaming_first_seen_dedup_with_ttl(self, spark, tmp_path):
-        """applyInPandasWithState dedup: the first occurrence of each text
-        fingerprint is emitted, later arrivals inside the TTL are
-        suppressed across micro-batches, and after the watermark passes
-        first_seen + TTL the state times out — a re-arrival is emitted
-        AGAIN (the dedup layer forgets, state stays bounded). Five
-        single-file batches drive each phase."""
-        import json as _json
-        import os as _os
-        import time as _time
-
-        from generative_ner_spark.streaming import mentions as sm
-
-        indir = tmp_path / "dedup_in"
-        indir.mkdir()
-
-        def doc(doc_id, text, ts):
-            return _json.dumps({
-                "doc_id": doc_id,
-                "spans": [{"kind": "text", "text": text,
-                           "media_ref": None, "offset": 0}],
-                "ingest_ts": ts,
-            })
-
-        X = "alpha beta gamma"
-        files = [
-            ("f1.json", [doc("x1", X, "2025-01-01T10:00:00Z"),
-                         doc("y1", "something else", "2025-01-01T10:01:00Z")]),
-            ("f2.json", [doc("x2", X, "2025-01-01T10:05:00Z")]),  # dup: suppressed
-            ("f3.json", [doc("z1", "advancer one", "2025-01-01T11:30:00Z")]),
-            # f4: no X data, watermark (11:20) > X timeout (10:30) -> state expires
-            ("f4.json", [doc("z2", "advancer two", "2025-01-01T11:31:00Z")]),
-            ("f5.json", [doc("x3", X, "2025-01-01T11:25:00Z")]),  # re-emitted
-        ]
-        now = _time.time()
-        for i, (name, lines) in enumerate(files):
-            p = indir / name
-            p.write_text("\n".join(lines) + "\n")
-            _os.utime(p, (now + i * 10, now + i * 10))
-
-        stream = (
-            spark.readStream
-            .schema("doc_id string, "
-                    "spans array<struct<kind:string,text:string,"
-                    "media_ref:string,offset:int>>, ingest_ts timestamp")
-            .option("maxFilesPerTrigger", 1)
-            .json(str(indir))
-        )
-        deduped = sm.streaming_first_seen_dedup(
-            stream, watermark_delay="10 minutes", dedup_ttl_minutes=30)
-        q = (
-            deduped.writeStream.format("memory").queryName("sdedup")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "sdedup_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-        rows = spark.sql("SELECT * FROM sdedup").collect()
-        emitted = [r.doc_id for r in rows]
-        assert "x1" in emitted and "x2" not in emitted  # cross-batch dedup
-        assert "x3" in emitted  # TTL expiry -> forgotten -> re-emitted
-        assert {"y1", "z1", "z2"} <= set(emitted)
-        assert len(emitted) == len(set(emitted)) == 5
-
-
 class TestIoAndPruning:
     def test_label_discovery(self, spark):
         cfg = SynthConfig(n_docs=30)
@@ -2342,32 +2130,6 @@ class TestIoAndPruning:
             for r in df.collect()
         }
         assert key(back) == key(docs)
-
-    def test_prune_contained_spans_matches_reference_fn(self, spark):
-        rows = [
-            ("e1", "d1", 0, 0, 5, "PER", "x"),
-            ("e1", "d1", 0, 1, 3, "PER", "x"),   # strictly inside (0,5) -> drop
-            ("e1", "d1", 0, 6, 8, "LOC", "y"),
-            ("e1", "d1", 0, 6, 8, "ORG", "z"),   # duplicate offsets stay
-            ("e2", "d1", 1, 2, 4, "PER", "w"),   # other example untouched
-        ]
-        m = spark.createDataFrame(
-            rows,
-            "example_id string, doc_id string, span_offset int, start long, "
-            "end long, label string, mention_norm string",
-        )
-        got = {
-            (r.example_id, r.start, r.end, r.label)
-            for r in detect.prune_contained_mentions(m).collect()
-        }
-        assert got == {
-            ("e1", 0, 5, "PER"), ("e1", 6, 8, "LOC"), ("e1", 6, 8, "ORG"),
-            ("e2", 2, 4, "PER"),
-        }
-        # cross-check offset semantics vs the reference's pure function
-        offs = [(0, 5), (1, 3), (6, 8), (6, 8)]
-        assert sorted(textops.remove_overlapped_offsets(offs)) == [(0, 5), (6, 8)]
-
 
 class TestConnectedComponentsIterative:
     def test_iterative_equals_union_find(self, spark):
@@ -2575,48 +2337,6 @@ class TestRound5AdviceRegressions:
             "entity_id string, name string, entity_type string")
         assert catalog_fingerprint(changed) != fp
 
-    def test_streaming_first_seen_dedup_custom_ts_col(self, spark, tmp_path):
-        """ADVICE r4: _ts_ms was computed from F.col(ts_col) AFTER
-        _fingerprinted renamed the column to 'ingest_ts', so any
-        non-default ts_col threw UNRESOLVED_COLUMN at build time."""
-        import json as _json
-
-        from generative_ner_spark.streaming import mentions as sm
-
-        indir = tmp_path / "custom_ts_in"
-        indir.mkdir()
-        (indir / "f1.json").write_text("\n".join(
-            _json.dumps({
-                "doc_id": d,
-                "spans": [{"kind": "text", "text": t,
-                           "media_ref": None, "offset": 0}],
-                "event_ts": ts,
-            })
-            for d, t, ts in [
-                ("a1", "same text", "2025-01-01T10:00:00Z"),
-                ("a2", "same text", "2025-01-01T10:01:00Z"),  # dup
-                ("b1", "other text", "2025-01-01T10:02:00Z"),
-            ]) + "\n")
-        stream = (
-            spark.readStream
-            .schema("doc_id string, "
-                    "spans array<struct<kind:string,text:string,"
-                    "media_ref:string,offset:int>>, event_ts timestamp")
-            .json(str(indir))
-        )
-        deduped = sm.streaming_first_seen_dedup(stream, ts_col="event_ts")
-        q = (
-            deduped.writeStream.format("memory").queryName("sdedup_ts")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "sdedup_ts_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        emitted = {r.doc_id for r in
-                   spark.sql("SELECT * FROM sdedup_ts").collect()}
-        assert emitted == {"a1", "b1"}
-
     def test_url_pattern_vertical_tab_engine_parity(self, spark):
         """ADVICE r4: \\s differs between Java (includes \\x0b) and
         RE2/DuckDB (does not) — URL_PAT must use an explicit class so the
@@ -2774,37 +2494,6 @@ class TestStratifiedSampleManyGroups:
         zero = {r.doc_id for r in df.collect()
                 if int(r.grp[3:]) < 2000 and int(r.grp[3:]) % 10 == 0}
         assert not (zero & kept)
-
-
-class TestOpenAIAdapterTranslations:
-    """Hermetic pins for OpenAIBatchClient's two shape translations (the
-    realhttp-marked tests cover only the live transport)."""
-
-    def test_wrap_task_envelope(self):
-        task = {"custom_id": "task-7", "example_id": "e7",
-                "body": {"model": "m", "messages": [
-                    {"role": "user", "content": "hi"}]}}
-        env = batchapi.wrap_task_envelope(task)
-        assert env == {"custom_id": "task-7", "method": "POST",
-                       "url": "/v1/chat/completions", "body": task["body"]}
-        assert "example_id" not in env  # join column stays Spark-side
-
-    def test_flatten_result_line(self):
-        ok = {"custom_id": "task-1", "response": {"body": {"choices": [
-            {"message": {"role": "assistant", "content": "PER: Alice"}}]}}}
-        assert batchapi.flatten_result_line(ok) == {
-            "custom_id": "task-1", "generated_text": "PER: Alice"}
-        # errored / empty responses flatten to NULL, not a crash
-        for bad in ({"custom_id": "t", "response": None},
-                    {"custom_id": "t"},
-                    {"custom_id": "t", "response": {"body": {"choices": []}}},
-                    # explicit "message": null (content-filtered): NULL,
-                    # not AttributeError on None
-                    {"custom_id": "t", "response": {"body": {"choices": [
-                        {"message": None,
-                         "finish_reason": "content_filter"}]}}}):
-            assert batchapi.flatten_result_line(bad) == {
-                "custom_id": "t", "generated_text": None}
 
 
 class TestTfidf:
@@ -3133,31 +2822,6 @@ class TestIncrementalDedupIndex:
         kept = {r.doc_id for r in
                 dedup.dedup_against_index(batch, p).collect()}
         assert kept == set()  # matched through the capped bucket's keeps
-
-    def test_append_then_next_batch_dedups_against_it(self, spark,
-                                                      tmp_path):
-        """The continuous-crawl loop: batch1's survivors are APPENDED to
-        the index, so batch2 near-copies of batch1 docs drop — without
-        recomputing or re-reading corpus or batch1 history."""
-        corpus = self._corpus(spark, n=15)
-        p = str(tmp_path / "mh_app")
-        dedup.write_minhash_index(corpus, p, n_buckets=8)
-        b1 = self._corpus(spark, n=3).select(
-            (F.col("doc_id") + 400).alias("doc_id"),
-            F.reverse(F.col("text")).alias("text"))
-        s1 = dedup.dedup_against_index(b1, p)
-        assert s1.count() == 3  # all fresh
-        dedup.append_to_minhash_index(s1, p)
-        # batch2: near-copy of an appended batch1 doc + one fresh doc
-        b2 = b1.where("doc_id = 401").select(
-            (F.col("doc_id") + 100).alias("doc_id"),
-            F.concat(F.col("text"), F.lit(" t")).alias("text"))
-        fresh = spark.createDataFrame(
-            [(700, " ".join(f"zq{j}zz" for j in range(30)))],
-            "doc_id long, text string")
-        kept = {r.doc_id for r in dedup.dedup_against_index(
-            b2.unionByName(fresh), p).collect()}
-        assert kept == {700}
 
     def test_write_cap_disabled(self, spark, tmp_path):
         corpus = self._corpus(spark, n=12)
@@ -5532,75 +5196,6 @@ class TestGraphAnalyticsCliNewStages:
         assert cc["a"] > 0 and cc["e"] == 0.0
         lp = spark.read.parquet(f"{out_dir}/linkpred")
         assert set(lp.columns) == {"a", "b", "n_common", "aa"}
-
-
-class TestStreamingThrottle:
-    def test_throttle_suppression_clock_and_state_expiry(
-            self, spark, tmp_path):
-        """streaming_throttle: first event per key emits; later events
-        inside the quiet period are suppressed AND advance the clock
-        (island semantics — the q91 batch twin's contract); once the
-        watermark passes last_seen + quiet the state expires and the
-        next arrival emits again. Keys throttle independently."""
-        import json as _json
-        import os as _os
-        import time as _time
-
-        from generative_ner_spark.streaming import mentions as sm
-
-        indir = tmp_path / "thr_in"
-        indir.mkdir()
-
-        def ev(eid, uid, ts):
-            return _json.dumps(
-                {"event_id": eid, "user_id": uid, "ingest_ts": ts})
-
-        files = [
-            # b1: u1 emits e1; e2 ten minutes later is suppressed
-            ("f1.json", [ev("e1", "u1", "2025-01-01T10:00:00Z"),
-                         ev("e2", "u1", "2025-01-01T10:10:00Z"),
-                         ev("k1", "u2", "2025-01-01T10:00:00Z")]),
-            # b2: e3 within 30min of e2 (clock ADVANCED by the
-            # suppressed e2): suppressed
-            ("f2.json", [ev("e3", "u1", "2025-01-01T10:20:00Z")]),
-            # b3: other-key advancer moves the watermark to 11:50 —
-            # u1's state (last_seen 10:20 + 30min = 10:50) expires
-            ("f3.json", [ev("k2", "u2", "2025-01-01T12:00:00Z")]),
-            # b4: u1 re-arrival past the quiet period: emitted
-            ("f4.json", [ev("e4", "u1", "2025-01-01T11:55:00Z")]),
-        ]
-        now = _time.time()
-        for i, (name, lines) in enumerate(files):
-            p = indir / name
-            p.write_text("\n".join(lines) + "\n")
-            _os.utime(p, (now + i * 10, now + i * 10))
-
-        stream = (
-            spark.readStream
-            .schema("event_id string, user_id string, ingest_ts timestamp")
-            .option("maxFilesPerTrigger", 1)
-            .json(str(indir))
-        )
-        out = sm.streaming_throttle(
-            stream, quiet_seconds=1800, watermark_delay="10 minutes")
-        q = (
-            out.writeStream.format("memory").queryName("sthrottle")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "thr_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-        emitted = [r.event_id for r in
-                   spark.sql("SELECT * FROM sthrottle").collect()]
-        assert "e1" in emitted            # first per key
-        assert "e2" not in emitted        # inside quiet period
-        assert "e3" not in emitted        # clock advanced by e2
-        assert "e4" in emitted            # state expired, re-emitted
-        assert "k1" in emitted            # other key independent
-        # k2 arrives 2h after k1: past ITS quiet period too
-        assert "k2" in emitted
-        assert len(emitted) == len(set(emitted)) == 4
 
 
 class TestCdcFuzzVsPythonReplay:

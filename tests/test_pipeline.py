@@ -110,6 +110,13 @@ def test_media_spans_carried_not_processed(spark, pipeline_result):
     assert orphans.count() == 0
 
 
+def test_session_has_no_console_progress_bar(spark):
+    """build_session turns Spark's console progress bar off: its
+    [Stage N:>] redraws would bury every log line of a script run."""
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.ui.showConsoleProgress") == "false"
+
+
 def test_spark_eval_operator_matches_reference_math(spark, pipeline_result):
     docs, golds, res = pipeline_result
     frame = evaluate.mention_eval_frame(res.mentions, golds)
@@ -119,7 +126,7 @@ def test_spark_eval_operator_matches_reference_math(spark, pipeline_result):
     assert 0.8 < m["recall"] <= 1.0
     # cross-check against pure-python eval on collected rows
     rows = frame.collect()
-    from generative_ner_spark.functions.textops import evaluate_span_sets
+    from tests.reference_loop import evaluate_span_sets
 
     pure = evaluate_span_sets(
         (

