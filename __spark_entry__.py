@@ -963,8 +963,7 @@ def q49_grouped_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group exact quantiles (quality.grouped_quantiles): p25/50/75/90
     of event value per event_type via Spark's exact `percentile` — the
     same linear-interpolation definition as DuckDB quantile_cont, so the
-    values hash-match at 6dp. exact=False (approx_percentile sketch) is
-    the documented 100 TB path."""
+    values hash-match at 6dp."""
     ev = _t(spark, sf_dir, "events")
     return quality.grouped_quantiles(ev, "event_type", "value").orderBy(
         "event_type", "p")
@@ -1037,7 +1036,7 @@ def q52_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = _t(spark, sf_dir, "events").select("event_id", "user_id", "ts")
     return temporal.sessionize(
-        ev, key_cols="user_id", ts_col="ts", gap_seconds=43200,
+        ev, key_col="user_id", ts_col="ts", gap_seconds=43200,
         seq_col="event_id",
     ).orderBy("user_id", "session_idx")
 

@@ -222,7 +222,7 @@ def _temporal_build(spark: SparkSession, size: int) -> tuple:
 def _temporal_run(inp: tuple) -> DataFrame:
     events, snapshot, changes = inp
     sessions = temporal.sessionize(
-        events, key_cols="user_id", ts_col="ts", gap_seconds=1800,
+        events, key_col="user_id", ts_col="ts", gap_seconds=1800,
         seq_col="event_id", value_aggs={"v_sum": ("value", "sum")})
     merged = temporal.merge_changelog(snapshot, changes, key_cols="k",
                                       ts_col="ts", op_col="op", seq_col="seq")

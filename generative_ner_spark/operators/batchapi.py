@@ -216,12 +216,13 @@ def submit_batches(client, batch_files_dir: str, state_path: str) -> list[str]:
     return [r["batch_id"] for r in records]
 
 
-def poll_batches(client, state_path: str, poll_interval_s: float = 0.0,
+def poll_batches(client, state_path: str,
                  max_polls: int = 1000) -> dict[str, str]:
     """Poll every submitted job to a terminal status (run_batchapi.py:
-    17-23 loop semantics, bounded by max_polls instead of forever)."""
+    17-23 loop semantics, bounded by max_polls instead of forever). The
+    loop does not sleep: a client for a remote service paces its own
+    ``batch_status`` calls."""
     import json as _json
-    import time as _time
 
     with open(state_path) as f:
         bids = [_json.loads(ln)["batch_id"] for ln in f if ln.strip()]
@@ -232,8 +233,6 @@ def poll_batches(client, state_path: str, poll_interval_s: float = 0.0,
                 statuses[b] = client.batch_status(b)
         if all(s in TERMINAL_BATCH_STATUSES for s in statuses.values()):
             return statuses
-        if poll_interval_s:
-            _time.sleep(poll_interval_s)
     raise TimeoutError(f"batches not terminal after {max_polls} polls: "
                        f"{statuses}")
 

@@ -650,8 +650,6 @@ def duplicate_window_spans(
     id_col: str = "doc_id",
     text_col: str = "text",
     w: int = 8,
-    broadcast_dup_hashes: bool = False,
-    eager: bool = True,
 ) -> DataFrame:
     """Exact duplicate-substring detection at token-window granularity —
     the distributed restatement of suffix-array exact-substring dedup
@@ -675,9 +673,7 @@ def duplicate_window_spans(
     2. duplicate hashes = groupBy(hash).count > 1 — map-side partial
        agg absorbs the overwhelmingly-unique mass before the shuffle;
     3. positions of duplicated windows = semi-join grams against the
-       dup-hash set (broadcast it via ``broadcast_dup_hashes`` when the
-       dup vocabulary is known-small; default shuffle semi-join is
-       safe at any dup rate);
+       dup-hash set (a shuffle semi-join: safe at any dup rate);
     4. merge per doc: windows are width-``w`` intervals, so after
        sorting by start, a hit starts a new span iff its start exceeds
        the previous start + ``w`` (lag + cumsum island trick), then
@@ -706,8 +702,6 @@ def duplicate_window_spans(
         )
     ).persist()
     dups = grams.groupBy("h").count().where(F.col("count") > 1).select("h")
-    if broadcast_dup_hashes:
-        dups = F.broadcast(dups)
     hits = grams.join(dups, "h", "left_semi").select("id", "i")
     wd = Window.partitionBy("id").orderBy("i")
     islands = (
@@ -732,11 +726,7 @@ def duplicate_window_spans(
     )
     # pin the (small) span result, then release the corpus-sized grams
     # cache — without this the exploded gram frame stayed pinned for the
-    # session lifetime (same release discipline as jaccard_set_join).
-    # eager=False hands back the LAZY plan instead (plan inspection /
-    # further composition) and leaves the grams cache for the caller.
-    if not eager:
-        return out
+    # session lifetime (same release discipline as jaccard_set_join)
     out = out.localCheckpoint()
     grams.unpersist()
     return out

@@ -40,6 +40,8 @@ from generative_ner_spark.functions import textops
 from generative_ner_spark.sources.synth import LABELS2NAMES, SynthConfig
 from generative_ner_spark.sources import synth
 
+_NAMES2LABELS = {v: k for k, v in LABELS2NAMES.items()}
+
 
 def explode_text_spans(docs: DataFrame) -> DataFrame:
     """docs(doc_id, spans) -> (example_id, doc_id, span_offset, text).
@@ -217,7 +219,6 @@ _MENTION_SCHEMA = StructType(
 def detect_mentions_fused(
     examples_with_golds: DataFrame,
     cfg: SynthConfig,
-    names2labels: dict[str, str] | None = None,
 ) -> DataFrame:
     """Single-pass prompt -> generate -> parse -> ground (one mapInPandas).
 
@@ -227,9 +228,6 @@ def detect_mentions_fused(
     (pinned by tests/test_pipeline.py exact-parity test, which runs the
     two-stage path).
     """
-    n2l = names2labels if names2labels is not None else {
-        v: k for k, v in LABELS2NAMES.items()
-    }
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -246,7 +244,7 @@ def detect_mentions_fused(
                 )
                 lowered = text.lower()
                 for s, e, label in textops.spans_from_generation_collective(
-                    text, gen, n2l
+                    text, gen, _NAMES2LABELS
                 ):
                     rows["example_id"].append(eid)
                     rows["doc_id"].append(did)
@@ -266,9 +264,6 @@ def detect_mentions_individual(
     examples_with_golds: DataFrame,
     cfg: SynthConfig,
     labels2names: dict[str, str] | None = None,
-    language: str = "en",
-    shuffle: bool = False,
-    seed: int = 0,
 ) -> DataFrame:
     """Individual-format path: one generation per (example, label).
 
@@ -278,49 +273,18 @@ def detect_mentions_individual(
     fused generate+parse+ground per row; span label = the QUERIED label
     (pred.py:64), parsing accepts only bare strings (pred.py:62-63).
 
-    ``language`` selects the prompt language ('en'/'ja',
-    preprocessor.py:159-168 — validated here; the stub generator's output
-    contract is language-blind, so mentions are identical).
-    ``shuffle`` applies the reference's label-shuffle option
-    (preprocessor.py:174-175) as a per-example seeded permutation of the
-    fan-out order — it changes prompt/QA-turn order (and therefore cache
-    keys in a real deployment), NEVER the emitted mention set (pinned in
-    tests).
+    The fan-out runs over the labels in sorted order (the reference's
+    order is dict insertion; sorted is reproducible). The stub
+    generator's output contract is language-blind, so no prompt language
+    is taken here.
 
     Scale: the fan-out is a narrow explode (no shuffle); generation cost
     x N_labels is the reference's own cost model for this format.
     """
-    if language not in ("en", "ja"):  # parity: preprocessor.py:168
-        raise ValueError(
-            f"Unsupported language: {language}. Supported languages are 'ja' and 'en'."
-        )
-    l2n = labels2names or LABELS2NAMES
-    if shuffle:
-        import random as _random
-
-        base = sorted(l2n)
-
-        # no memo: the permutation is a cheap O(n_labels) seeded shuffle,
-        # and example_ids rarely repeat within a worker — a dict keyed on
-        # them would grow for the lifetime of each long-lived Python worker
-        @pandas_udf("array<string>")
-        def order_udf(eids: pd.Series) -> pd.Series:
-            out = []
-            for eid in eids:
-                labels = list(base)
-                _random.Random(f"{seed}:{eid}").shuffle(labels)
-                out.append(labels)
-            return pd.Series(out)
-
-        fanned = examples_with_golds.withColumn(
-            "label", F.explode(order_udf(F.col("example_id")))
-        )
-    else:
-        labels = sorted(l2n)  # deterministic order (names2labels.values()
-        # order in the reference is dict-insertion; sorted for reproducibility)
-        fanned = examples_with_golds.withColumn(
-            "label", F.explode(F.array(*[F.lit(x) for x in labels]))
-        )
+    labels = sorted(labels2names or LABELS2NAMES)
+    fanned = examples_with_golds.withColumn(
+        "label", F.explode(F.array(*[F.lit(x) for x in labels]))
+    )
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -522,16 +486,13 @@ def ground_individual(generations: DataFrame) -> DataFrame:
     return generations.mapInPandas(fn, _MENTION_SCHEMA)
 
 
-def ground(generations: DataFrame, names2labels: dict[str, str] | None = None) -> DataFrame:
+def ground(generations: DataFrame) -> DataFrame:
     """Generations -> grounded mentions (one row per (start, end, label)).
 
     Parse/filter/ground parity: textops.spans_from_generation_collective
     (reference pred.py:43-55). ``mention_norm`` (the normalized matched
     surface) is the entity-linking join key.
     """
-    n2l = names2labels if names2labels is not None else {
-        v: k for k, v in LABELS2NAMES.items()
-    }
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -550,7 +511,7 @@ def ground(generations: DataFrame, names2labels: dict[str, str] | None = None) -
                     continue
                 lowered = text.lower()
                 for s, e, label in textops.spans_from_generation_collective(
-                    text, gen, n2l
+                    text, gen, _NAMES2LABELS
                 ):
                     rows["example_id"].append(eid)
                     rows["doc_id"].append(did)

@@ -588,7 +588,6 @@ def triangle_count_approx(
 def hits(
     edges: DataFrame,
     n_iter: int = 2,
-    round_to: int | None = 6,
 ) -> DataFrame:
     """HITS hubs & authorities (Kleinberg JACM'99) over a DIRECTED edge
     list ``(src, dst)`` -> ``(node, hub, auth)`` — the complement of
@@ -646,26 +645,20 @@ def hits(
                 F.sum("_raw").alias("tot"))
             hub = hraw.select("node",
                               (F.col("_raw") / seen["tot"]).alias("hub"))
-        out = (
+        return (
             nodes.join(hub, "node", "left")
             .join(auth, "node", "left")
             .select(
                 "node",
-                F.coalesce(F.col("hub"), F.lit(0.0)).alias("hub"),
-                F.coalesce(F.col("auth"), F.lit(0.0)).alias("auth"),
+                F.round(F.coalesce(F.col("hub"), F.lit(0.0)), 6).alias("hub"),
+                F.round(F.coalesce(F.col("auth"), F.lit(0.0)), 6)
+                .alias("auth"),
             )
+            .localCheckpoint()
         )
-        if round_to is not None:
-            out = out.select(
-                "node", F.round("hub", round_to).alias("hub"),
-                F.round("auth", round_to).alias("auth"))
-        return out.localCheckpoint()
 
 
-def clustering_coefficient(
-    edges: DataFrame,
-    round_to: int | None = 6,
-) -> DataFrame:
+def clustering_coefficient(edges: DataFrame) -> DataFrame:
     """Per-node LOCAL clustering coefficient over a canonical undirected
     edge list: ``cc(v) = 2 * T(v) / (deg(v) * (deg(v) - 1))`` — the
     fraction of v's neighbor pairs that are themselves connected, the
@@ -695,16 +688,13 @@ def clustering_coefficient(
             "node", "degree",
             F.coalesce(F.col("n_triangles"), F.lit(0)).alias("n_triangles"),
         ).select(
-            "node", "degree", "n_triangles",
-            (F.round(cc, round_to) if round_to is not None else cc)
-            .alias("cc"),
+            "node", "degree", "n_triangles", F.round(cc, 6).alias("cc"),
         ).localCheckpoint()
 
 
 def adamic_adar(
     edges: DataFrame,
     min_score: float = 0.0,
-    exclude_existing: bool = True,
     round_to: int = 6,
     max_apex_degree: int | None = None,
     metrics: dict | None = None,
@@ -714,8 +704,8 @@ def adamic_adar(
     ``aa(a, b) = Σ_{z ∈ N(a) ∩ N(b)} 1 / ln(deg z)`` — common neighbors
     weighted down by how promiscuous they are, the classic "which KG
     entities should probably be linked" score. Output ``(a, b,
-    n_common, aa)`` with a < b; ``exclude_existing`` (default) drops
-    pairs already connected — the link-PREDICTION framing.
+    n_common, aa)`` with a < b; pairs already connected are dropped —
+    the link-PREDICTION framing.
 
     Scale shape: wedges are generated once per apex by a self-join of
     the adjacency on its src key, the apex's degree joined on from the
@@ -778,10 +768,9 @@ def adamic_adar(
             ).alias("aa"),
         )
     )
-    if exclude_existing:
-        ex = edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        pairs = pairs.join(ex, ["a", "b"], "left_anti")
-    return pairs.where(F.col("aa") >= min_score)
+    ex = edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+    return (pairs.join(ex, ["a", "b"], "left_anti")
+            .where(F.col("aa") >= min_score))
 
 
 def bounded_closure(

@@ -522,28 +522,18 @@ def grouped_quantiles(
     group_col: str,
     value_col: str,
     probs: tuple = (0.25, 0.5, 0.75, 0.9),
-    exact: bool = True,
-    accuracy: int = 10000,
 ) -> DataFrame:
     """Per-group quantiles of a numeric column -> (group, p, q) rows.
 
-    Corpus length/score distribution reporting. ``exact=True`` uses
-    Spark's exact ``percentile`` (linear interpolation, the same
-    definition as DuckDB/ANSI quantile_cont — hash-matchable) but its
-    aggregation buffer holds the group's distinct values: fine for
-    per-language stats, NOT for a 100 TB ungrouped run. ``exact=False``
-    is the scale path: ``approx_percentile`` (KLL-style sketch, bounded
-    memory, mergeable map-side) — no cross-engine oracle, rows-only
-    checkable. Output q rounded to 6dp for stable value hashing.
+    Corpus length/score distribution reporting. Spark's exact
+    ``percentile`` (linear interpolation, the same definition as
+    DuckDB/ANSI quantile_cont — hash-matchable); its aggregation buffer
+    holds the group's distinct values: fine for per-group stats over a
+    few groups, not for one huge ungrouped column. Output q rounded to
+    6dp for stable value hashing.
     """
     plist = [float(p) for p in probs]
-    agg = (
-        F.percentile(F.col(value_col), F.array(*[F.lit(p) for p in plist]))
-        if exact
-        else F.percentile_approx(
-            F.col(value_col), F.array(*[F.lit(p) for p in plist]),
-            F.lit(accuracy))
-    )
+    agg = F.percentile(F.col(value_col), F.array(*[F.lit(p) for p in plist]))
     out = df.groupBy(group_col).agg(agg.alias("_qs"))
     return out.select(
         group_col,
@@ -562,8 +552,6 @@ def weighted_sample(
     weight_col: str,
     key_col: str = "doc_id",
     salt: str = "wsamp",
-    group_col: str | None = None,
-    salt_buckets: int = 32,
 ) -> DataFrame:
     """Deterministic weighted sampling WITHOUT replacement (Efraimidis-
     Spirakis A-ES): each row gets priority u^(1/w) for a hash-derived
@@ -577,15 +565,11 @@ def weighted_sample(
     non-positive weight are never selected. Ties (same priority) break
     by ``key_col``. Output = input columns, the ``n`` winners.
 
-    Scale shape: global mode (``group_col=None``) is orderBy+limit —
-    Catalyst's TakeOrderedAndProject keeps a bounded top-n per
-    partition and merges n*partitions rows on the driver: no full sort,
-    no full shuffle; sized for n up to ~millions, not a 10%-of-corpus
-    cut (use token_budget_sample / stratified_hash_sample for rate
-    sampling). Per-group mode reuses the capped_group_sample two-phase
-    window — (group, hash-bucket) pre-rank first, so a hot group
-    spreads over ``salt_buckets`` reducers, then the tiny survivor
-    re-rank; exact by the same bucket-winner argument.
+    Scale shape: orderBy+limit — Catalyst's TakeOrderedAndProject keeps
+    a bounded top-n per partition and merges n*partitions rows on the
+    driver: no full sort, no full shuffle; sized for n up to ~millions,
+    not a 10%-of-corpus cut (use token_budget_sample /
+    stratified_hash_sample for rate sampling).
 
     The q53 oracle replays ln((rk+1)/2^60)/w in DuckDB: both engines
     evaluate IEEE-double ln/div on identical inputs, so the ordering —
@@ -595,31 +579,12 @@ def weighted_sample(
     u = (rk + F.lit(1)).cast("double") / F.lit(float(1 << 60))
     w_ok = F.col(weight_col).cast("double")
     es = F.log(u) / w_ok  # ln(u) <= 0; larger (closer to 0) wins
-    staged = (
+    return (
         df.where(w_ok.isNotNull() & (w_ok > 0))
         .withColumn("_es", es)
-    )
-    if group_col is None:
-        return (staged.orderBy(F.desc("_es"), key_col)
-                .limit(n).drop("_es"))
-    from pyspark.sql import Window
-
-    bucket = F.pmod(F.xxhash64(F.concat(F.lit("wsb:"),
-                                        F.col(key_col).cast("string"))),
-                    F.lit(salt_buckets))
-    staged = staged.withColumn("_bk", bucket)
-    w1 = Window.partitionBy(group_col, "_bk").orderBy(F.desc("_es"),
-                                                      key_col)
-    phase1 = (
-        staged.withColumn("_rn", F.row_number().over(w1))
-        .where(F.col("_rn") <= n)
-        .drop("_rn", "_bk")
-    )
-    w2 = Window.partitionBy(group_col).orderBy(F.desc("_es"), key_col)
-    return (
-        phase1.withColumn("_rn", F.row_number().over(w2))
-        .where(F.col("_rn") <= n)
-        .drop("_rn", "_es")
+        .orderBy(F.desc("_es"), key_col)
+        .limit(n)
+        .drop("_es")
     )
 
 
@@ -628,21 +593,15 @@ def filter_by_group_quantile(
     group_col: str,
     value_col: str,
     prob: float = 0.5,
-    keep: str = "above",
-    exact: bool = True,
-    accuracy: int = 10000,
-    broadcast_thresholds: bool = True,
 ) -> DataFrame:
     """Relative per-group gating: keep rows whose ``value_col`` is >=
-    (``keep="above"``) or <= (``keep="below"``) their OWN group's
-    ``prob``-quantile — the CCNet-style per-language threshold ("keep
-    each language's better half"), which an absolute global cutoff
-    can't express (it would empty low-resource groups).
+    their OWN group's ``prob``-quantile — the CCNet-style per-language
+    threshold ("keep each language's better half"), which an absolute
+    global cutoff can't express (it would empty low-resource groups).
 
     Scale shape: ONE map-side-combined groupBy computes the per-group
-    threshold (group-count-sized output, broadcast back by default;
-    ``exact=False`` switches to the mergeable approx_percentile sketch
-    for huge groups). The filter itself is a codegen comparison.
+    threshold (group-count-sized output, broadcast back). The filter
+    itself is a codegen comparison.
 
     Cross-engine exactness of the boundary (why q72 can hash-match):
     linear interpolation lands either ON an order statistic (frac 0, or
@@ -651,20 +610,10 @@ def filter_by_group_quantile(
     value can sit; so the >=/<= comparison never depends on float
     rounding of the interpolation.
     """
-    if keep not in ("above", "below"):
-        raise ValueError("keep must be 'above' or 'below'")
-    agg = (
-        F.percentile(F.col(value_col), F.lit(float(prob)))
-        if exact
-        else F.percentile_approx(F.col(value_col), F.lit(float(prob)),
-                                 F.lit(accuracy))
-    )
-    thr = df.groupBy(group_col).agg(agg.alias("_thr"))
-    if broadcast_thresholds:
-        thr = F.broadcast(thr)
-    cond = (F.col(value_col) >= F.col("_thr") if keep == "above"
-            else F.col(value_col) <= F.col("_thr"))
-    return df.join(thr, group_col).where(cond).drop("_thr")
+    thr = df.groupBy(group_col).agg(
+        F.percentile(F.col(value_col), F.lit(float(prob))).alias("_thr"))
+    return (df.join(F.broadcast(thr), group_col)
+            .where(F.col(value_col) >= F.col("_thr")).drop("_thr"))
 
 
 def hashed_quality_score(
@@ -733,52 +682,35 @@ def bucket_by_group_quantiles(
     df: DataFrame,
     group_col: str,
     value_col: str,
-    probs: tuple = (1.0 / 3.0, 2.0 / 3.0),
-    labels: tuple = ("head", "middle", "tail"),
     out_col: str = "bucket",
-    exact: bool = True,
-    accuracy: int = 10000,
-    broadcast_thresholds: bool = True,
 ) -> DataFrame:
     """Per-group quantile BUCKETING — the CCNet head/middle/tail split:
     each row is labeled by where its ``value_col`` falls among its OWN
-    group's quantiles (``labels[i]`` iff value <= the ``probs[i]``
-    threshold, last label otherwise). With value = perplexity/NLL and
-    group = language this is exactly CCNet §4.3's per-language quality
-    tiers; filter_by_group_quantile is the one-threshold special case
-    that DROPS a side, this keeps every row and labels it.
+    group's terciles ("head" iff value <= the 1/3 quantile, else
+    "middle" iff value <= the 2/3 quantile, else "tail"). With value =
+    perplexity/NLL and group = language this is exactly CCNet §4.3's
+    per-language quality tiers; filter_by_group_quantile is the
+    one-threshold special case that DROPS a side, this keeps every row
+    and labels it.
 
-    Scale shape: ONE map-side-combined groupBy computes all thresholds
-    per group (group-count-sized, broadcast back by default); the
-    labeling is a codegen CASE over len(probs) comparisons — O(probs),
-    not O(groups). Boundary cross-engine exactness: same argument as
-    filter_by_group_quantile (the interpolated quantile is an order
-    statistic or strictly between two — no row value can sit on a
-    float-ambiguous edge), so the q81 oracle hash-matches.
+    Scale shape: ONE map-side-combined groupBy computes both thresholds
+    per group (group-count-sized, broadcast back); the labeling is a
+    codegen CASE over two comparisons — not O(groups). Boundary
+    cross-engine exactness: same argument as filter_by_group_quantile
+    (the interpolated quantile is an order statistic or strictly between
+    two — no row value can sit on a float-ambiguous edge), so the q81
+    oracle hash-matches.
     """
-    if len(labels) != len(probs) + 1:
-        raise ValueError("need len(labels) == len(probs) + 1")
-    if list(probs) != sorted(probs):
-        raise ValueError("probs must be ascending")
-    qagg = (
-        F.percentile(F.col(value_col),
-                     F.array(*[F.lit(float(p)) for p in probs]))
-        if exact
-        else F.percentile_approx(
-            F.col(value_col),
-            F.array(*[F.lit(float(p)) for p in probs]),
-            F.lit(accuracy))
+    thr = df.groupBy(group_col).agg(F.percentile(
+        F.col(value_col), F.array(F.lit(1.0 / 3.0), F.lit(2.0 / 3.0))
+    ).alias("_thr"))
+    label = (
+        F.when(F.col(value_col) <= F.element_at("_thr", 1), F.lit("head"))
+        .when(F.col(value_col) <= F.element_at("_thr", 2), F.lit("middle"))
+        .otherwise(F.lit("tail"))
     )
-    thr = df.groupBy(group_col).agg(qagg.alias("_thr"))
-    if broadcast_thresholds:
-        thr = F.broadcast(thr)
-    label = F.lit(labels[-1])
-    for i in range(len(probs) - 1, -1, -1):
-        label = F.when(
-            F.col(value_col) <= F.element_at("_thr", i + 1),
-            F.lit(labels[i]),
-        ).otherwise(label)
-    return df.join(thr, group_col).withColumn(out_col, label).drop("_thr")
+    return (df.join(F.broadcast(thr), group_col)
+            .withColumn(out_col, label).drop("_thr"))
 
 
 def group_percent_rank(
@@ -786,7 +718,6 @@ def group_percent_rank(
     group_col: str,
     value_col: str,
     out_col: str = "pct",
-    descending: bool = False,
     round_to: int = 6,
 ) -> DataFrame:
     """Per-group CDF normalization: ``out_col = percent_rank()`` of
@@ -802,9 +733,7 @@ def group_percent_rank(
     float-exact."""
     from pyspark.sql import Window
 
-    order = (F.col(value_col).desc() if descending
-             else F.col(value_col).asc())
-    w = Window.partitionBy(group_col).orderBy(order)
+    w = Window.partitionBy(group_col).orderBy(F.col(value_col).asc())
     return df.withColumn(
         out_col, F.round(F.percent_rank().over(w), round_to))
 
@@ -871,8 +800,6 @@ def iqr_outliers(
     group_col: str,
     value_col: str,
     factor: float = 1.5,
-    exact: bool = True,
-    accuracy: int = 10000,
     round_to: int = 6,
 ) -> DataFrame:
     """Tukey-fence outlier flagging PER GROUP: a row is an outlier iff
@@ -890,14 +817,8 @@ def iqr_outliers(
     statistics, so the round-6 grid is the documented cross-engine
     contract (q97 oracle).
     """
-    qagg = (
-        F.percentile(F.col(value_col), F.array(F.lit(0.25), F.lit(0.75)))
-        if exact
-        else F.percentile_approx(
-            F.col(value_col), F.array(F.lit(0.25), F.lit(0.75)),
-            F.lit(accuracy))
-    )
-    thr = df.groupBy(group_col).agg(qagg.alias("_q"))
+    thr = df.groupBy(group_col).agg(F.percentile(
+        F.col(value_col), F.array(F.lit(0.25), F.lit(0.75))).alias("_q"))
     thr = thr.select(
         group_col,
         F.round(

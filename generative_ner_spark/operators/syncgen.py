@@ -193,10 +193,11 @@ def generate_sync(
             .drop("example_id")
         )
 
-    import os
+    from generative_ner_spark.plans.session import committed
 
     spark = prompts.sparkSession
-    if os.path.exists(cache_dir):
+    resume = committed(cache_dir)
+    if resume:
         cached_hashes = spark.read.parquet(cache_dir).select("prompt_hash").distinct()
         pending = hashed.join(cached_hashes, "prompt_hash", "left_anti")
     else:
@@ -214,7 +215,8 @@ def generate_sync(
         fresh.where(F.col("finish_reason") == "stop")
         .select("prompt_hash", "generated_text")
         .dropDuplicates(["prompt_hash"])
-        .write.mode("append").parquet(cache_dir)
+        # overwrite clears what a crashed first write left (_temporary/)
+        .write.mode("append" if resume else "overwrite").parquet(cache_dir)
     )
     cache = spark.read.parquet(cache_dir).dropDuplicates(["prompt_hash"])
     served = hashed.join(cache, "prompt_hash").select(

@@ -48,7 +48,6 @@ def asof_join(
     right_payload: list[str] | None = None,
     suffix: str = "_r",
     right_seq_col: str | None = None,
-    tolerance_seconds: float | None = None,
 ) -> DataFrame:
     """Backward as-of join: every left row gains the right row with the
     greatest ``right_ts`` <= its ``left_ts`` within the same ``key_cols``
@@ -56,8 +55,7 @@ def asof_join(
 
     Output: all left columns + ``{right_ts}{suffix}`` + each payload
     column as ``{col}{suffix}``. ``right_payload`` defaults to every
-    right column except keys and timestamp. ``tolerance_seconds`` nulls
-    a match that is older than the window (pandas merge_asof semantics).
+    right column except keys and timestamp.
     """
     keys = list(key_cols)
     payload = (list(right_payload) if right_payload is not None
@@ -99,18 +97,6 @@ def asof_join(
     matched = u.withColumn(
         "_m", F.last("_rpay", ignorenulls=True).over(w)
     ).where(F.col("_side") == 1)
-    if tolerance_seconds is not None:
-        # integer-microsecond age via _micros, NOT a double cast: casting
-        # TIMESTAMP_NTZ (the typical parquet event type this module
-        # exists to support) to double is an illegal cast under Spark 4
-        matched = matched.withColumn(
-            "_m",
-            F.when(
-                _micros(F.col("_ats")) - _micros(F.col("_m._rts"))
-                <= F.lit(int(tolerance_seconds * 1_000_000)),
-                F.col("_m"),
-            ),
-        )
     out_cols = [F.col(c) for c in left.columns]
     out_cols.append(F.col("_m._rts").alias(f"{right_ts}{suffix}"))
     out_cols += [F.col(f"_m.{c}").alias(f"{c}{suffix}") for c in payload]
@@ -119,7 +105,7 @@ def asof_join(
 
 def sessionize(
     events: DataFrame,
-    key_cols: list[str] | str = "user_id",
+    key_col: str = "user_id",
     ts_col: str = "ts",
     gap_seconds: int = 1800,
     seq_col: str | None = None,
@@ -130,7 +116,7 @@ def sessionize(
     apart, and aggregate each session — the batch twin of every
     clickstream/telemetry "30-minute session" definition.
 
-    Output, one row per session: key cols, ``session_idx`` (1-based per
+    Output, one row per session: ``key_col``, ``session_idx`` (1-based per
     key, in time order), ``session_start`` / ``session_end`` (first /
     last event timestamp), ``n_events``, ``duration_us`` (microseconds,
     exact integer — no float epoch rounding), plus one column per
@@ -153,7 +139,6 @@ def sessionize(
     inherent to any per-key ordered semantics (same argument as the
     as-of join).
     """
-    keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
     tie = (F.col(seq_col).cast("long") if seq_col
            else F.lit(0).cast("long"))
     base = (
@@ -161,7 +146,7 @@ def sessionize(
         .withColumn("_us", _micros(F.col(ts_col)))
         .withColumn("_tie", tie)
     )
-    w = Window.partitionBy(*keys).orderBy("_us", "_tie")
+    w = Window.partitionBy(key_col).orderBy("_us", "_tie")
     gap_us = int(gap_seconds) * 1_000_000
     flagged = base.withColumn(
         "_new",
@@ -185,7 +170,7 @@ def sessionize(
     for out_name, (col, how) in sorted((value_aggs or {}).items()):
         aggs.append(getattr(F, how)(col).alias(out_name))
     return (
-        sess.groupBy(*keys, F.col("_sess").alias("session_idx"))
+        sess.groupBy(key_col, F.col("_sess").alias("session_idx"))
         .agg(*aggs)
     )
 
@@ -198,7 +183,6 @@ def interval_join(
     lo_col: str = "lo",
     hi_col: str = "hi",
     bucket_seconds: int = 3600,
-    payload: list[str] | None = None,
     suffix: str = "_iv",
 ) -> DataFrame:
     """Range (interval) join: every point row pairs with every interval
@@ -225,13 +209,12 @@ def interval_join(
     epoch rounding, cross-engine exact (q57 oracle = DuckDB's plain
     range join).
 
-    Output: all point columns + each interval ``payload`` column (all
-    non-key, non-bound columns by default) as ``{col}{suffix}``.
+    Output: all point columns + each non-key, non-bound interval column
+    as ``{col}{suffix}``.
     """
     keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
-    pay = (list(payload) if payload is not None
-           else [c for c in intervals.columns
-                 if c not in keys and c not in (lo_col, hi_col)])
+    pay = [c for c in intervals.columns
+           if c not in keys and c not in (lo_col, hi_col)]
     b_us = int(bucket_seconds) * 1_000_000
     iv = intervals.where(
         F.col(lo_col).isNotNull() & F.col(hi_col).isNotNull()
@@ -269,7 +252,6 @@ def rolling_agg(
     ts_col: str = "ts",
     window_seconds: int = 86400,
     value_col: str | None = None,
-    round_to: int | None = 6,
 ) -> DataFrame:
     """Per-event trailing-window aggregates: every row gains the count
     (``n_window``) and, when ``value_col`` is given, the sum
@@ -288,8 +270,8 @@ def rolling_agg(
     definable for them).
 
     Float contract: the windowed sum adds the same value set on both
-    engines but in different orders — ``round_to`` (default 6) absorbs
-    the non-associativity drift, same as every other float oracle here.
+    engines but in different orders — rounding to 6 places absorbs the
+    non-associativity drift, same as every other float oracle here.
     """
     keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
     out = df.where(F.col(ts_col).isNotNull()).withColumn(
@@ -301,10 +283,8 @@ def rolling_agg(
     )
     out = out.withColumn("n_window", F.count("*").over(w))
     if value_col is not None:
-        s = F.sum(value_col).over(w)
         out = out.withColumn(
-            "sum_window",
-            F.round(s, round_to) if round_to is not None else s)
+            "sum_window", F.round(F.sum(value_col).over(w), 6))
     return out.drop("_us")
 
 
@@ -315,7 +295,6 @@ def merge_changelog(
     ts_col: str = "ts",
     op_col: str = "op",
     seq_col: str | None = None,
-    payload: list[str] | None = None,
 ) -> DataFrame:
     """CDC snapshot merge (Iceberg ``MERGE INTO`` semantics, engine-side):
     apply a changelog of upserts and deletes to a keyed snapshot and
@@ -323,10 +302,10 @@ def merge_changelog(
     wins, keys whose latest change is a delete disappear, keys untouched
     by the changelog keep their snapshot row.
 
-    ``changes`` carries ``key_cols`` + ``payload`` + ``ts_col`` +
+    ``changes`` carries ``key_cols`` + the payload + ``ts_col`` +
     ``op_col`` ('upsert' | 'delete'); ``snapshot`` carries ``key_cols``
-    + ``payload`` (its rows are by definition older than every change).
-    ``payload`` defaults to the snapshot's non-key columns. Determinism:
+    + the payload, which is its non-key columns (its rows are by
+    definition older than every change). Determinism:
     ties on the change timestamp break by ``seq_col`` (pass the change's
     log-sequence/event id when one key can log equal timestamps);
     NULL-timestamp changes are dropped (they cannot be ordered into the
@@ -342,8 +321,7 @@ def merge_changelog(
     union + window as the q74 oracle.
     """
     keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
-    pay = (list(payload) if payload is not None
-           else [c for c in snapshot.columns if c not in keys])
+    pay = [c for c in snapshot.columns if c not in keys]
     seq = (F.col(seq_col).cast("long") if seq_col
            else F.lit(0).cast("long"))
     ch = changes.where(F.col(ts_col).isNotNull()).select(
@@ -432,7 +410,6 @@ def decayed_counts(
     key_cols: list[str] | str,
     ts_col: str = "ts",
     half_life_days: float = 30.0,
-    ref_ts=None,
     round_to: int = 6,
 ) -> DataFrame:
     """Recency-weighted activity score per key -> ``(key..., n_events,
@@ -442,10 +419,9 @@ def decayed_counts(
     one half-life old counts half as much as one from the reference
     instant.
 
-    ``ref_ts`` (a timestamp-coercible literal) anchors the age; when
-    None it is the corpus max timestamp — computed as a one-row
-    aggregate so the operator stays deterministic for a fixed input
-    (never wall-clock). NULL timestamps are dropped.
+    The age is measured from the corpus max timestamp — computed as a
+    one-row aggregate so the operator stays deterministic for a fixed
+    input (never wall-clock). NULL timestamps are dropped.
 
     Scale shape: ONE map-side-combined groupBy on the keys — the decay
     weight is a per-row codegen expression (integer-µs age, all-DOUBLE
@@ -456,16 +432,12 @@ def decayed_counts(
     keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
     ev = df.where(F.col(ts_col).isNotNull()).withColumn(
         "_us", _micros(F.col(ts_col)))
-    if ref_ts is None:
-        ref_us = ev.agg(F.max("_us")).first()[0]
-        if ref_us is None:  # no non-NULL timestamps: empty result
-            return (ev.groupBy(*keys)
-                    .agg(F.count("*").cast("long").alias("n_events"),
-                         F.lit(0.0).alias("decayed_score"))
-                    .where(F.lit(False)))
-    else:
-        ref_us = df.sparkSession.range(1).select(
-            _micros(F.lit(ref_ts).cast("timestamp"))).first()[0]
+    ref_us = ev.agg(F.max("_us")).first()[0]
+    if ref_us is None:  # no non-NULL timestamps: empty result
+        return (ev.groupBy(*keys)
+                .agg(F.count("*").cast("long").alias("n_events"),
+                     F.lit(0.0).alias("decayed_score"))
+                .where(F.lit(False)))
     hl_us = float(half_life_days) * 86400.0 * 1e6
     w = F.pow(F.lit(0.5),
               (F.lit(int(ref_us)) - F.col("_us")).cast("double")

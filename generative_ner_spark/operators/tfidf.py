@@ -98,7 +98,6 @@ def unigram_logprob_score(
     id_col: str = "doc_id",
     text_col: str = "text",
     round_to: int = 6,
-    broadcast_vocab: bool = True,
 ) -> DataFrame:
     """Per-document mean negative log-likelihood under the corpus's own
     unigram LM — the CCNet/KenLM-style fluency proxy without a model
@@ -115,18 +114,14 @@ def unigram_logprob_score(
     groupBy (the tf frame is persisted — it feeds both the vocab agg
     and the scoring join, and recomputing it would tokenize the corpus
     twice); the vocab freq table is VOCABULARY-sized (sublinear in
-    corpus bytes — Heaps' law) and broadcast by default; pass
-    ``broadcast_vocab=False`` for a shuffle join when the vocabulary
-    outgrows executor memory. The grand total crosses the driver as a
-    single scalar row.
+    corpus bytes — Heaps' law) and broadcast. The grand total crosses
+    the driver as a single scalar row.
     """
     # persist stays alive for the caller's action (an unpersist here
     # would evict before the scoring job runs); executor storage reclaims
     # it under memory pressure
     tf = term_frequencies(df, id_col, text_col).persist()
-    freq = tf.groupBy("term").agg(F.sum("tf").alias("cnt"))
-    if broadcast_vocab:
-        freq = F.broadcast(freq)
+    freq = F.broadcast(tf.groupBy("term").agg(F.sum("tf").alias("cnt")))
     total = tf.agg(F.sum("tf")).first()[0]
     if total is None:  # empty/whitespace-only corpus: no scored rows
         return tf.select(

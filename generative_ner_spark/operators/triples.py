@@ -83,17 +83,14 @@ def resolve_conflicts(
     subj_col: str = "subj_id",
     pred_col: str = "pred",
     obj_col: str = "obj_id",
-    weight_col: str | None = None,
-    round_to: int = 6,
 ) -> DataFrame:
     """Majority-vote resolution for FUNCTIONAL predicates: a KG asserts
     at most one object per (subject, predicate) for predicates like
     birth_date or headquarters, but an extraction run emits every
     mention's claim — conflicting objects must be resolved before
     materialization. Per (subj, pred) keep the object with the most
-    supporting assertions (sum of ``weight_col`` when given, else row
-    count); ties break on the smaller object id so the winner is a pure
-    function of the input. Output: (subj, pred, obj, support,
+    supporting assertions (row count, as a double); ties break on the
+    smaller object id so the winner is a pure function of the input. Output: (subj, pred, obj, support,
     n_candidates) — ``n_candidates`` (distinct objects claimed) is the
     audit column a curation run thresholds on ("drop facts with > 3
     competing values").
@@ -105,10 +102,8 @@ def resolve_conflicts(
     distinct-object count, orders of magnitude below mention count).
     Fully SQL-expressible => full q75 oracle.
     """
-    support = (F.sum(F.col(weight_col)) if weight_col
-               else F.count(F.lit(1)).cast("double"))
     agg = triples.groupBy(subj_col, pred_col, obj_col).agg(
-        F.round(support, round_to).alias("support"))
+        F.count(F.lit(1)).cast("double").alias("support"))
     from pyspark.sql import Window
 
     w = Window.partitionBy(subj_col, pred_col)

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from generative_ner_spark.operators import canonicalize, detect, linking, triples
+from generative_ner_spark.plans.session import committed
 from generative_ner_spark.sources.synth import SynthConfig
 
 
@@ -120,12 +121,9 @@ def run_pipeline(
     # python stages oversubscribe workers 2x, the CLAUDE.md gotcha)
     hashed = detect.with_prompt_hash(examples, prompt_format, language).persist()
     hashed.count()
-    # resume only from a COMMITTED checkpoint (_SUCCESS): a crash during
-    # the first write leaves a directory with only _temporary/ — the bare
-    # exists() test then made every re-run fail on an unreadable parquet
-    # dir, permanently breaking the resume feature whose purpose is crash
-    # recovery
-    if os.path.exists(os.path.join(gen_ckpt, "_SUCCESS")):
+    # resume only from a COMMITTED checkpoint: resume exists for crash
+    # recovery, and a crashed first write leaves an unreadable directory
+    if committed(gen_ckpt):
         cached_hashes = spark.read.parquet(gen_ckpt).select("prompt_hash").distinct()
         pending = hashed.join(cached_hashes, "prompt_hash", "left_anti")
         fresh = detect.generate_stub(pending, cfg, prompt_format, language)

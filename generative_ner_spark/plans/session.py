@@ -34,6 +34,15 @@ def checkpoint_observed(df, *aggs):
     return pinned, obs.get
 
 
+def committed(path: str | None) -> bool:
+    """True when a Spark write to ``path`` committed: its ``_SUCCESS``
+    marker exists. A crash during a first write leaves a directory that
+    holds only ``_temporary/``, which ``spark.read.parquet`` cannot read
+    (UNABLE_TO_INFER_SCHEMA), so bare existence does not mean there is
+    something to read. Local-FS path semantics."""
+    return bool(path) and os.path.exists(os.path.join(path, "_SUCCESS"))
+
+
 def adaptive_min_partitions(df):
     """Scale-adaptive scan parallelization (optimization guide §2.5
     "input skew" / §6 small files): a single-file, single-row-group

@@ -98,6 +98,7 @@ def main(argv: list[str] | None = None) -> int:
         decontam, dedup, packing, pii, urls,
     )
     from generative_ner_spark.operators import quality as Q
+    from generative_ner_spark.plans.session import committed
 
     metrics: dict = {}
     prev_cached = None
@@ -142,7 +143,7 @@ def main(argv: list[str] | None = None) -> int:
         nonlocal prev_cached
         if args.stage_dir:
             path = os.path.join(args.stage_dir, stage)
-            if os.path.exists(os.path.join(path, "_SUCCESS")):
+            if committed(path):
                 df = spark.read.parquet(path)
                 metrics.setdefault("resumed_stages", []).append(stage)
             else:

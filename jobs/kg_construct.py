@@ -73,6 +73,7 @@ def main(argv: list[str] | None = None) -> int:
         import os
 
         from generative_ner_spark.operators import canonicalize
+        from generative_ner_spark.plans.session import committed
 
         # order-independent fingerprint of the CURRENT entity catalog: a
         # canonical map is only valid for the catalog it was computed
@@ -89,15 +90,14 @@ def main(argv: list[str] | None = None) -> int:
             except OSError:
                 return None
 
-        # gate on _SUCCESS, not bare existence: a directory left by a
-        # crashed prior write must be recomputed, not silently read as a
-        # (partial) canonical map. Local-FS path semantics — on an object
-        # store route this through the catalog/table API instead.
-        if os.path.exists(os.path.join(args.canonical, "_SUCCESS")) \
-                and _read_fp() == fp:
+        # a directory left by a crashed prior write must be recomputed,
+        # not silently read as a (partial) canonical map. Local-FS path
+        # semantics — on an object store route this through the
+        # catalog/table API instead.
+        if committed(args.canonical) and _read_fp() == fp:
             canonical_df = spark.read.parquet(args.canonical)
         else:
-            if os.path.exists(os.path.join(args.canonical, "_SUCCESS")):
+            if committed(args.canonical):
                 print(f"canonical map at {args.canonical} was computed "
                       f"from a DIFFERENT entity catalog — recomputing",
                       file=sys.stderr)

@@ -65,11 +65,10 @@ def generate_with_budget(spark, fused_prompts, responder, args, cache_dir,
     chunk forever; shared prompts are charged once, mirroring the
     dedup-by-hash dispatch.
     """
-    import os
-
     from pyspark.sql import functions as F
 
     from generative_ner_spark.operators import cost, syncgen
+    from generative_ner_spark.plans.session import committed
 
     bucketed = (
         syncgen.with_sync_prompt_hash(fused_prompts)
@@ -82,7 +81,7 @@ def generate_with_budget(spark, fused_prompts, responder, args, cache_dir,
     # serves every chunk, because chunks split on prompt_hash and no
     # chunk's appends can reach another chunk's prompts
     fresh = bucketed.dropDuplicates(["prompt_hash"])
-    if cache_dir and os.path.exists(cache_dir):
+    if committed(cache_dir):
         cached = spark.read.parquet(cache_dir).select(
             "prompt_hash").distinct()
         fresh = fresh.join(cached, "prompt_hash", "left_anti")
@@ -225,7 +224,9 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.mode in ("estimate", "batch"):
         # estimate parity: prompt tokens from the submitted messages, output
-        # tokens from the gold turn (openai_api.estimate(messages, gold))
+        # tokens from the gold turn (openai_api.estimate(messages, gold)),
+        # priced for --model; batch mode writes Batch-API tasks, so it is
+        # priced at the Batch-API discount
         flat = prompts.select(
             "example_id",
             F.concat_ws(
@@ -233,7 +234,8 @@ def main(argv: list[str] | None = None) -> int:
             ).alias("_p"),
             F.col("gold_output").alias("_g"),
         )
-        est = cost.with_cost_estimate(flat, "_p", "_g")
+        est = cost.with_cost_estimate(flat, "_p", "_g", model=args.model,
+                                      batch_api=args.mode == "batch")
         total = cost.total_cost(est)
         n = est.count()
         print(json.dumps({"mode": args.mode, "prompts": n,

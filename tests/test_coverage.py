@@ -1,6 +1,6 @@
 """COVERAGE.md names live code, and the package holds only code that runs.
 
-Two static checks over the source tree (no Spark):
+Static checks over the source tree (no Spark session):
 
 * every ``module.name`` COVERAGE.md cites (``a/b`` continuations
   included, as in ``triples.write_triples_snapshot/read_triples_snapshot``)
@@ -14,12 +14,22 @@ Two static checks over the source tree (no Spark):
   list of definitions kept for tests alone; anything else that only tests
   reach is deleted, and what the citations alone keep stays small
   (``CITED_ONLY_MAX_LINES``): a pure oracle belongs under ``tests/`` and
-  a second copy of running code is deleted.
+  a second copy of running code is deleted;
+* every defaulted package parameter that selects a code path (it appears
+  in the test of an ``if``, a conditional expression or a ``while``) is
+  given a non-default value by some call in running code or in the
+  package itself — an option that nothing running sets is a constant
+  (``PATH_OPTIONS_UNSET_MAX`` pinned exceptions);
+* every call the benchmarks (``perfbench/``, ``bench*.py``) make into
+  the package binds to the callee's signature, so a renamed or deleted
+  parameter fails here, not only in a traced benchmark run.
 """
 
 from __future__ import annotations
 
 import ast
+import importlib
+import inspect
 import pathlib
 import re
 
@@ -27,6 +37,15 @@ ROOT = pathlib.Path(__file__).resolve().parent.parent
 PKG = ROOT / "generative_ner_spark"
 SKIP_DIRS = {".perfbench", "__pycache__", ".git"}
 CITED_ONLY_MAX_LINES = 150
+# the path-selecting options that running code leaves at their default on
+# purpose: the two guard out-dicts (adamic_adar, dedup_against_index
+# metrics), two caps on outside input (adamic_adar max_apex_degree,
+# write_minhash_index max_bucket), connected_components' size switch
+# (tests force the other path), link_mentions' dict_broadcast (the
+# frozen benchmark passes its default by name), read_triples_snapshot's
+# version, and
+# triangle_count_approx's validated p
+PATH_OPTIONS_UNSET_MAX = 8
 
 
 def _py_files(*roots: pathlib.Path) -> list[pathlib.Path]:
@@ -131,12 +150,17 @@ def _definitions(mods) -> dict:
     return defs
 
 
+def _running_files() -> list[pathlib.Path]:
+    """The entry points, jobs, benches and scripts: what runs."""
+    return _py_files(ROOT / "__spark_entry__.py", ROOT / "jobs",
+                     ROOT / "perfbench", ROOT / "scripts",
+                     *ROOT.glob("bench*.py"))
+
+
 def _running_roots(mods) -> set[tuple[str, str]]:
     """What the entry points, jobs, benches and scripts refer to."""
     roots = set()
-    for path in _py_files(ROOT / "__spark_entry__.py", ROOT / "jobs",
-                          ROOT / "perfbench", ROOT / "scripts",
-                          *ROOT.glob("bench*.py")):
+    for path in _running_files():
         tree = ast.parse(path.read_text())
         roots |= _refs(tree, None, _aliases(tree, mods), mods)
     return roots
@@ -175,3 +199,134 @@ def test_citation_only_code_stays_small():
         "definitions only COVERAGE.md citations keep alive: move a pure "
         "oracle under tests/, delete a second copy of running code, or "
         f"wire the definition into what runs: {sorted(lines.items())}")
+
+
+def _functions(mods) -> dict[str, tuple[ast.FunctionDef, bool]]:
+    """``module.qualname`` -> (def node, is a method) for every package
+    function, methods and nested functions included."""
+    out = {}
+
+    def walk(node, mod, prefix, in_class):
+        for ch in ast.iter_child_nodes(node):
+            if isinstance(ch, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                out[f"{mod}.{prefix}{ch.name}"] = (ch, in_class)
+                walk(ch, mod, f"{prefix}{ch.name}.", False)
+            elif isinstance(ch, ast.ClassDef):
+                walk(ch, mod, f"{prefix}{ch.name}.", True)
+            else:
+                walk(ch, mod, prefix, in_class)
+
+    for mod, path in mods.items():
+        walk(ast.parse(path.read_text()), mod, "", False)
+    return out
+
+
+def _defaulted(fn: ast.FunctionDef, method: bool):
+    """(name, default node, positional index or None) per defaulted
+    parameter; the index counts from the first argument a caller passes
+    (a method's ``self``/``cls`` is not passed)."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    skip = 1 if method and pos and pos[0].arg in ("self", "cls") else 0
+    first = len(pos) - len(a.defaults)
+    out = [(arg.arg, d, first + i - skip)
+           for i, (arg, d) in enumerate(zip(pos[first:], a.defaults))]
+    out += [(arg.arg, d, None)
+            for arg, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+    return out
+
+
+def _selects_path(fn: ast.FunctionDef, name: str) -> bool:
+    return any(
+        isinstance(n, (ast.If, ast.IfExp, ast.While))
+        and any(isinstance(x, ast.Name) and x.id == name
+                for x in ast.walk(n.test))
+        for n in ast.walk(fn))
+
+
+def _sets(call: ast.Call, name: str, default: ast.AST, index) -> bool:
+    """Whether ``call`` may give parameter ``name`` a non-default value
+    (an unpacked ``*args``/``**kwargs`` may give it anything)."""
+    if any(isinstance(x, ast.Starred) for x in call.args) or any(
+            k.arg is None for k in call.keywords):
+        return True
+    given = [k.value for k in call.keywords if k.arg == name]
+    if index is not None and index < len(call.args):
+        given.append(call.args[index])
+    return any(ast.dump(v) != ast.dump(default) for v in given)
+
+
+def _unset_path_options() -> list[str]:
+    """Path-selecting defaulted parameters that no call in running code
+    or in the package gives a non-default value. A call is matched to a
+    function by its bare name alone, which can only over-count callers."""
+    mods = _modules()
+    calls: dict[str, list[ast.Call]] = {}
+    for path in _running_files() + _py_files(PKG):
+        for n in ast.walk(ast.parse(path.read_text())):
+            if isinstance(n, ast.Call):
+                f = n.func
+                name = getattr(f, "id", None) or getattr(f, "attr", None)
+                calls.setdefault(name, []).append(n)
+    unset = []
+    for qual, (fn, method) in _functions(mods).items():
+        for name, default, index in _defaulted(fn, method):
+            if _selects_path(fn, name) and not any(
+                    _sets(c, name, default, index)
+                    for c in calls.get(fn.name, [])):
+                unset.append(f"{qual}({name})")
+    return sorted(unset)
+
+
+def test_every_path_option_is_set_by_running_code():
+    unset = _unset_path_options()
+    assert len(unset) <= PATH_OPTIONS_UNSET_MAX, (
+        "path-selecting options that nothing running sets (delete the "
+        "option and the path it selects, keeping the default inline, or "
+        f"give it a running caller): {unset}")
+
+
+def _import_name(path: pathlib.Path) -> str:
+    return ".".join(path.relative_to(ROOT).with_suffix("").parts)
+
+
+def test_benchmark_calls_bind_to_package_signatures():
+    """Every call ``perfbench/`` and ``bench*.py`` make into the package
+    through an imported module or name binds to the callee's current
+    signature (``inspect.signature(...).bind``)."""
+    mods = _modules()
+    bad, n_bound = [], 0
+    for path in _py_files(ROOT / "perfbench", *ROOT.glob("bench*.py")):
+        tree = ast.parse(path.read_text())
+        aliases = _aliases(tree, mods)
+        for call in ast.walk(tree):
+            if not isinstance(call, ast.Call) or any(
+                    isinstance(x, ast.Starred) for x in call.args) or any(
+                    k.arg is None for k in call.keywords):
+                continue
+            f = call.func
+            if isinstance(f, ast.Name):
+                targets = {t for t in aliases.get(f.id, ()) if t[1]}
+            elif isinstance(f, ast.Attribute) and isinstance(f.value,
+                                                             ast.Name):
+                targets = {(m, f.attr) for m, name in
+                           aliases.get(f.value.id, ()) if name is None}
+            else:
+                continue
+            for mod, name in targets:
+                if mod not in mods:
+                    continue
+                obj = getattr(importlib.import_module(
+                    _import_name(mods[mod])), name, None)
+                where = f"{path.name}:{call.lineno} {mod}.{name}"
+                if obj is None:
+                    bad.append(f"{where}: not defined")
+                    continue
+                try:
+                    inspect.signature(obj).bind(
+                        *call.args, **{k.arg: k.value for k in call.keywords})
+                    n_bound += 1
+                except TypeError as e:
+                    bad.append(f"{where}: {e}")
+    assert n_bound, "no benchmark call into the package was found"
+    assert not bad, f"benchmark calls that no longer bind: {bad}"

@@ -164,24 +164,6 @@ class TestIndividualFormat:
                     assert (textops.regex_ground(lowered, mention)
                             == ref.regex(lowered, mention))
 
-    def test_shuffle_changes_order_not_mentions(self, spark):
-        """shuffle=True permutes the per-example label order (prompt/cache
-        surface) but NEVER the emitted mention set."""
-        cfg = SynthConfig(n_docs=12)
-        ex = corpus.synth_examples_with_golds(spark, cfg, num_partitions=2)
-        key = ["doc_id", "span_offset", "start", "end", "label"]
-        base = {tuple(r) for r in
-                detect.detect_mentions_individual(ex, cfg).select(*key).collect()}
-        shuf = {tuple(r) for r in
-                detect.detect_mentions_individual(
-                    ex, cfg, shuffle=True, seed=7).select(*key).collect()}
-        ja = {tuple(r) for r in
-              detect.detect_mentions_individual(
-                  ex, cfg, language="ja").select(*key).collect()}
-        assert base == shuf == ja
-        with pytest.raises(ValueError, match="Unsupported language"):
-            detect.detect_mentions_individual(ex, cfg, language="de")
-
 
 class TestBatchApi:
     @staticmethod
@@ -374,6 +356,31 @@ class TestSyncGenerate:
             else:  # failures retried with the new responder, still failing
                 assert row2.finish_reason == "length"
                 assert row2.error == "finish_reason=length"
+
+    @pytest.mark.parametrize("site", ["generate_sync", "generate_with_budget"])
+    def test_crashed_first_cache_write_is_redone(self, spark, tmp_path, site):
+        """A crash during the first cache write leaves only _temporary/.
+        The next run generates and commits the cache instead of failing
+        to read the directory (UNABLE_TO_INFER_SCHEMA) on every rerun."""
+        import types
+
+        import jobs.run_gpt_spark as cli
+
+        cache = tmp_path / "cache"
+        (cache / "_temporary" / "0").mkdir(parents=True)
+        prompts = self._prompts(spark, 16)
+        if site == "generate_sync":
+            out = syncgen.generate_sync(prompts, cache_dir=str(cache))
+        else:
+            args = types.SimpleNamespace(
+                budget_usd=100.0, model="gpt-4o-mini-2024-07-18",
+                temperature=0.2, max_tokens=4096, top_p=0.0, seed=0, n=1)
+            out = cli.generate_with_budget(
+                spark, prompts, syncgen.stub_sync_responder, args,
+                str(cache), n_chunks=2)[0]
+        assert out.count() == 16
+        assert (cache / "_SUCCESS").exists()
+        assert not (cache / "_temporary").exists()
 
     def test_params_plumbed_to_responder(self, spark):
         out = syncgen.generate_sync(
@@ -745,6 +752,29 @@ class TestRunGptCli:
              "--budget-usd", "0.0000001",
              "--output", str(tmp_path / "o2")], capsys)
         assert rc == 2  # S30: cost limit aborts
+
+    def test_estimate_prices_model_and_batch_discount(self, spark, tmp_path,
+                                                      capsys):
+        """Estimate and batch modes price the ``--model`` the run uses,
+        and batch mode (Batch-API tasks) at the Batch-API discount."""
+        from generative_ner_spark.operators import cost
+
+        def usd(name, *extra):
+            rc, out = self._run(
+                ["--input", "synth:10", *extra,
+                 "--output", str(tmp_path / name)], capsys)
+            assert rc == 0
+            return out[0]["estimated_usd"]
+
+        mini = usd("mini", "--mode", "estimate")
+        big = usd("big", "--mode", "estimate",
+                  "--model", "gpt-4o-2024-08-06")
+        batch = usd("batch", "--mode", "batch")
+        ratio = (cost.MODEL_COSTS["gpt-4o-2024-08-06"]["prompt"]
+                 / cost.MODEL_COSTS["gpt-4o-mini-2024-07-18"]["prompt"])
+        # the printed totals are rounded to 6 places
+        assert mini > 0 and abs(big - ratio * mini) <= ratio * 1e-6
+        assert abs(batch - mini / 2) <= 1e-6
 
     def test_batch_mode_writes_task_files(self, spark, tmp_path, capsys):
         rc, out = self._run(
@@ -2648,16 +2678,6 @@ class TestAsofJoin:
             left, right, ["k"], right_seq_col="rid").collect()
         assert out[0].rid_r == 9
 
-    def test_tolerance_nulls_stale_matches(self, spark):
-        from generative_ner_spark.operators import temporal
-
-        left, right = self._frames(spark)
-        out = {r.lid: r for r in temporal.asof_join(
-            left, right, ["user_id"], right_seq_col="rid",
-            tolerance_seconds=600).collect()}
-        assert out[1].rid_r == 11    # 0 s old: kept
-        assert out[2].rid_r is None  # 30 min old > 10 min tolerance
-
     def test_null_right_ts_never_matches(self, spark):
         """A right row with a NULL timestamp is not 'at or before'
         anything — it must NOT become the frame-start match for every
@@ -2973,7 +2993,7 @@ class TestSessionize:
         from generative_ner_spark.operators import temporal
 
         out = temporal.sessionize(
-            self._events(spark), key_cols="user_id", ts_col="ts",
+            self._events(spark), key_col="user_id", ts_col="ts",
             gap_seconds=3600, seq_col="event_id",
             value_aggs={"v_sum": ("value", "sum")},
         ).orderBy("user_id", "session_idx").collect()
@@ -3011,7 +3031,7 @@ class TestSessionize:
         from generative_ner_spark.operators import temporal
 
         out = temporal.sessionize(
-            self._events(spark), key_cols="user_id", ts_col="ts",
+            self._events(spark), key_col="user_id", ts_col="ts",
             gap_seconds=3600, seq_col="event_id")
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert plan.count("Exchange") == 1
@@ -3057,23 +3077,6 @@ class TestWeightedSample:
         got = {r.doc_id for r in quality.weighted_sample(
             df, 25, weight_col="weight").collect()}
         assert got == set(range(70, 80))  # only positive-weight rows
-
-    def test_grouped_mode_exact_and_capped(self, spark):
-        """Per-group winners match the per-group pure replay for EVERY
-        salt_buckets (the two-phase pre-rank never evicts a winner)."""
-        from generative_ner_spark.operators import quality
-
-        df, rows = self._df(spark)
-        exp = set()
-        for g in ("g0", "g1"):
-            exp |= {i for i, gg, w in sorted(
-                (r for r in rows if r[1] == g),
-                key=lambda r: (-self._es_key(r[0], r[2]), r[0]))[:7]}
-        for buckets in (1, 4, 32):
-            got = {r.doc_id for r in quality.weighted_sample(
-                df, 7, weight_col="weight", group_col="source",
-                salt_buckets=buckets).collect()}
-            assert got == exp
 
 
 class TestDuplicateWindowSpans:
@@ -3124,24 +3127,6 @@ class TestDuplicateWindowSpans:
         out = dd.duplicate_window_spans(df, w=3).collect()
         assert {(r.doc_id, r.span_start, r.span_end) for r in out} == {
             (1, 0, 2), (2, 0, 2)}
-
-    def test_broadcast_flag_plan(self, spark):
-        from generative_ner_spark.operators import dedup as dd
-
-        df = spark.createDataFrame(
-            [(1, "a b c d e"), (2, "a b c d e")],
-            "doc_id long, text string")
-        # eager=False keeps the LAZY plan inspectable (the default
-        # localCheckpoints the result, which collapses the plan to a
-        # checkpoint scan)
-        out = dd.duplicate_window_spans(
-            df, w=4, broadcast_dup_hashes=True, eager=False)
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" in plan
-        assert out.count() == 2
-        # and the eager default gives the same rows
-        assert dd.duplicate_window_spans(
-            df, w=4, broadcast_dup_hashes=True).count() == 2
 
 
 class TestUnigramNLL:
@@ -3293,7 +3278,7 @@ class TestIntervalJoin:
         assert sorted(got) == sorted(self._expected())
 
         sess = temporal.sessionize(
-            pts_ntz.where(F.col("user_id") == 1), key_cols="user_id",
+            pts_ntz.where(F.col("user_id") == 1), key_col="user_id",
             ts_col="ts", gap_seconds=3600, seq_col="event_id").collect()
         # gaps: 0,30,150,600 min -> breaks at >60min: {0,30},{150},{600}
         assert sorted((r.session_idx, r.n_events) for r in sess) == [
@@ -3679,18 +3664,6 @@ class TestDecayedCounts:
                ).collect()}
         assert got == {1: (3, 1.75), 2: (1, 0.5)}
 
-    def test_explicit_ref_ts(self, spark):
-        from datetime import datetime
-
-        from generative_ner_spark.operators import temporal
-
-        rows = [(1, datetime(2024, 1, 1))]
-        got = temporal.decayed_counts(
-            spark.createDataFrame(rows, "user_id long, ts timestamp"),
-            key_cols="user_id", half_life_days=1.0,
-            ref_ts="2024-01-02 00:00:00").first()
-        assert got.decayed_score == 0.5
-
 
 class TestRandomWalks:
     @staticmethod
@@ -3851,15 +3824,10 @@ class TestGroupQuantileGate:
                 ("de", 4, 5.0), ("de", 5, 50.0)]
         df = spark.createDataFrame(rows, "lang string, id long, v double")
         above = {r.id for r in quality.filter_by_group_quantile(
-            df, "lang", "v", prob=0.5, keep="above").collect()}
+            df, "lang", "v", prob=0.5).collect()}
         # en median 20 (exact order stat: 2 and 3 survive);
         # de median 27.5 (between stats: only 50 survives)
         assert above == {2, 3, 5}
-        below = {r.id for r in quality.filter_by_group_quantile(
-            df, "lang", "v", prob=0.5, keep="below").collect()}
-        assert below == {1, 2, 4}
-        with pytest.raises(ValueError):
-            quality.filter_by_group_quantile(df, "lang", "v", keep="mid")
 
     def test_broadcast_threshold_plan(self, spark):
         from generative_ner_spark.operators import quality
@@ -4039,17 +4007,6 @@ class TestResolveConflicts:
         assert out[("s1", "born_in")].support == 3.0
         assert out[("s1", "born_in")].n_candidates == 2
         assert out[("s2", "born_in")].obj_id == "a"  # tie -> smaller obj
-
-    def test_weighted_support_overrides_counts(self, spark):
-        from generative_ner_spark.operators import triples as T
-
-        df = spark.createDataFrame(
-            [("s", "p", "many_weak", 0.1), ("s", "p", "many_weak", 0.1),
-             ("s", "p", "one_strong", 0.9)],
-            "subj_id string, pred string, obj_id string, conf double")
-        out = T.resolve_conflicts(df, weight_col="conf").collect()
-        assert len(out) == 1 and out[0].obj_id == "one_strong"
-        assert out[0].support == 0.9 and out[0].n_candidates == 2
 
 
 class TestConstraintViolations:
@@ -4309,8 +4266,6 @@ class TestBucketByGroupQuantiles:
         assert len(out) == 9  # labeling keeps every row
 
     def test_groups_independent_and_validation(self, spark):
-        import pytest as _pytest
-
         rows = [("a", float(i)) for i in range(10)] + \
                [("b", float(i * 100) + 1) for i in range(10)]
         df = spark.createDataFrame(rows, "g string, v double")
@@ -4318,12 +4273,6 @@ class TestBucketByGroupQuantiles:
         heads = {(r.g, r.v) for r in out.collect() if r.bucket == "head"}
         # each group's OWN head: small values of a AND of b
         assert ("a", 0.0) in heads and ("b", 1.0) in heads
-        with _pytest.raises(ValueError):
-            quality.bucket_by_group_quantiles(
-                df, "g", "v", probs=(0.5,), labels=("x",))
-        with _pytest.raises(ValueError):
-            quality.bucket_by_group_quantiles(
-                df, "g", "v", probs=(0.9, 0.1), labels=("x", "y", "z"))
 
 
 # every public graph operator that takes an edge list; ``s`` = seeds
@@ -4456,13 +4405,6 @@ class TestGroupPercentRank:
             ("b", 100.0, 0.0),  # single-row group
         ]
 
-    def test_descending_flips(self, spark):
-        df = spark.createDataFrame(
-            [("g", 1.0), ("g", 2.0)], "g string, v double")
-        out = {r.v: r.pct for r in quality.group_percent_rank(
-            df, "g", "v", descending=True).collect()}
-        assert out == {2.0: 0.0, 1.0: 1.0}
-
 
 class TestMixedLanguageStats:
     def test_mixed_doc_flagged_pure_doc_clean(self, spark):
@@ -4526,9 +4468,6 @@ class TestAdamicAdar:
         w = round(1 / math.log(3), 6)
         assert out[("a", "c")].aa == w and out[("a", "c")].n_common == 1
         assert out[("b", "c")].aa == w
-        # (a,z) etc. never appear: adjacent or not two-hop
-        kept = graph.adamic_adar(edges, exclude_existing=False).collect()
-        assert {(r.a, r.b) for r in kept} >= {("a", "b")}
 
     def test_common_neighbor_count(self, spark):
         from generative_ner_spark.operators import graph
@@ -4852,30 +4791,6 @@ class TestRound5Guards:
 
 
 class TestReviewRegressionsR5b:
-    def test_asof_tolerance_on_ntz_timestamps(self, spark):
-        """tolerance_seconds must work on TIMESTAMP_NTZ inputs (the
-        typical parquet event type): the old double cast was an illegal
-        cast under Spark 4 — review finding, reproduced then fixed via
-        integer-microsecond _micros comparison."""
-        from datetime import datetime
-
-        from generative_ner_spark.operators import temporal
-
-        left = spark.createDataFrame(
-            [(1, 1, datetime(2024, 1, 1, 12))],
-            "event_id long, k long, ts timestamp_ntz")
-        right = spark.createDataFrame(
-            [(1, datetime(2024, 1, 1, 11), 5.0),    # 1h old: in window
-             (1, datetime(2024, 1, 1, 1), 9.0)],    # 11h old
-            "k long, ts timestamp_ntz, v double")
-        out = temporal.asof_join(
-            left, right, ["k"], tolerance_seconds=7200).collect()
-        assert out[0].v_r == 5.0
-        # shrink the window below 1h: the match is nulled, not dropped
-        out2 = temporal.asof_join(
-            left, right, ["k"], tolerance_seconds=60).collect()
-        assert len(out2) == 1 and out2[0].v_r is None
-
     def test_corpus_health_empty_corpus_no_crash(self, spark):
         """An empty corpus (everything gated out upstream) must produce
         the report row, not an ANSI DIVIDE_BY_ZERO — review finding."""
